@@ -13,7 +13,11 @@ sf, out = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
-    con.sql(f"CREATE VIEW {t} AS FROM '{sf}/{t}.parquet'")
+    # a split fixture holds each table as a directory of part files
+    path = f"{sf}/{t}.parquet"
+    if os.path.isdir(path):
+        path += "/*.parquet"
+    con.sql(f"CREATE VIEW {t} AS FROM '{path}'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails, passes, skips = [], [], []

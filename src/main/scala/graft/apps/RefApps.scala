@@ -4,6 +4,8 @@ import graft.core.{KeyValue, MRApp}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ArraySeq
+
 /** The reference's eight Map/Reduce application programs
   * (reference: the eight files under src/mrapps/) re-expressed as
   * [[MRApp]] closures.
@@ -14,9 +16,22 @@ object RefApps {
 
   /** Tokenize on non-letter runes, Unicode-aware and case-sensitive,
     * dropping empty tokens — Go strings.FieldsFunc(unicode.IsLetter)
-    * (reference: src/mrapps/wc.go:22-26). */
-  def tokenize(s: String): Seq[String] =
-    s.split("[^\\p{L}]+").toIndexedSeq.filter(_.nonEmpty)
+    * (reference: src/mrapps/wc.go:22-26). One scan over code points:
+    * `Character.isLetter(int)` is the same letter set as the regex
+    * class `\p{L}`, and an unpaired surrogate is a separator in both. */
+  def tokenize(s: String): Seq[String] = {
+    val out = ArraySeq.newBuilder[String]
+    var start = -1
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { out += s.substring(start, i); start = -1 }
+      i += Character.charCount(cp)
+    }
+    if (start >= 0) out += s.substring(start)
+    out.result()
+  }
 
   /** Word count (reference: src/mrapps/wc.go:21-44): one ("word","1") per
     * occurrence; reduce = number of values. */

@@ -3,10 +3,17 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+
 /** The single record type flowing through the reference engine
   * (reference: src/mr/worker.go:17-20 — `KeyValue{Key,Value string}`).
   */
 final case class KeyValue(key: String, value: String)
+
+/** A (key, value) pair as it crosses the shuffle: `n` identical
+  * emissions of one map call, collapsed into one row. */
+final case class CountedKeyValue(key: String, value: String, n: Int)
 
 /** A MapReduce application — the reference's "query" abstraction.
   *
@@ -34,10 +41,12 @@ trait MRApp extends Serializable {
   * DAGScheduler, shuffle, speculative execution and OutputCommitCoordinator
   * provide strict supersets of each.
   *
-  * Pipeline: wholetext scan → flatMap(mapf) → hash repartition on key →
-  * sort within partition → run-grouping → reducef, which mirrors scan →
-  * map → ihash(key)%R routing → per-partition sort → two-pointer group →
-  * reduce (reference: src/mr/worker.go:70-152).
+  * Pipeline: wholetext scan → flatMap(mapf, combined per call) → hash
+  * repartition on key → sort within partition → run-grouping → reducef,
+  * which mirrors scan → map → ihash(key)%R routing → per-partition sort →
+  * two-pointer group → reduce (reference: src/mr/worker.go:70-152). The
+  * per-call combining (see `runOnRows`) is the one departure: the
+  * reference has no combiner, and the reducers see the same values.
   *
   * Scale note: the reference pins 1 map task = 1 whole input file with a
   * full in-memory sort per reduce partition (reference:
@@ -70,6 +79,18 @@ object MapReduceJob {
 
   /** Distributed run over arbitrary (name, payload) rows — the splittable
     * scale path: callers may chunk huge files upstream, or feed table rows.
+    *
+    * Combining contract: the identical (key, value) emissions of each
+    * single `app.map` call ship through the shuffle as one row carrying
+    * their count, and the reduce side expands every row back to that many
+    * copies. So `app.reduce` receives, for each key, exactly the multiset
+    * of values the map calls emitted — as in the reference, where wc
+    * ships one ("w","1") per occurrence (reference: src/mr/worker.go:92-94).
+    * The order of values within a key is unspecified, as it already is in
+    * the reference, whose `sort.Sort` is unstable (reference:
+    * src/mr/worker.go:129); order-sensitive reducers sort their values.
+    * Combining never crosses map calls, so it holds no state beyond one
+    * call's output, and the plan keeps exactly one shuffle.
     */
   def runOnRows(
       spark: SparkSession,
@@ -78,7 +99,7 @@ object MapReduceJob {
       numReduce: Int): Dataset[KeyValue] = {
     import spark.implicits._
     input
-      .flatMap { case (f, c) => app.map(f, c) }
+      .flatMap { case (f, c) => combine(app.map(f, c)) }
       // ihash(key) % R routing (reference: src/mr/worker.go:26-30,92-94).
       // Spark's Murmur3-based HashPartitioner differs from the reference's
       // FNV-1a only in *which* bucket a key lands in — invisible to results
@@ -89,19 +110,34 @@ object MapReduceJob {
       // Spark's UTF8String comparison is bytewise like Go `<` on strings.
       .sortWithinPartitions($"key")
       // Two-pointer run grouping + whole-list reduce
-      // (reference: src/mr/worker.go:133-142).
+      // (reference: src/mr/worker.go:133-142), expanding each combined
+      // row back to its count.
       .mapPartitions { it =>
         new Iterator[KeyValue] {
           private val buf = it.buffered
           def hasNext: Boolean = buf.hasNext
           def next(): KeyValue = {
             val k = buf.head.key
-            val values = scala.collection.mutable.ArrayBuffer[String]()
-            while (buf.hasNext && buf.head.key == k) values += buf.next().value
-            KeyValue(k, app.reduce(k, values.toSeq))
+            val values = ArraySeq.newBuilder[String]
+            while (buf.hasNext && buf.head.key == k) {
+              val r = buf.next()
+              var i = 0
+              while (i < r.n) { values += r.value; i += 1 }
+            }
+            KeyValue(k, app.reduce(k, values.result()))
           }
         }
       }
+  }
+
+  /** One map call's emissions with identical pairs collapsed into one
+    * counted row each, in order of first emission: the rows, and so the
+    * shuffle's bytes, depend only on what the call emitted. */
+  private def combine(kvs: Seq[KeyValue]): Iterator[CountedKeyValue] = {
+    val counts = new java.util.LinkedHashMap[KeyValue, Integer]()
+    kvs.foreach(kv => counts.merge(kv, 1, (a: Integer, b: Integer) => a + b))
+    counts.entrySet.iterator.asScala.map(e =>
+      CountedKeyValue(e.getKey.key, e.getKey.value, e.getValue))
   }
 
   /** Text sink: one "key value" line per record, R output partitions —
