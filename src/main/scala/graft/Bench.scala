@@ -287,23 +287,7 @@ object Bench {
     // their own warm caches (unchanged min-of-3 semantics) but nothing
     // leaks ACROSS queries.
     def releaseAll(): Unit = {
-      functions.Dedup.releaseCaches(spark)
-      functions.Similarity.releaseCaches(spark)
-      // KnnDescent was MISSING from this list through round 16 — the
-      // blanket RDD sweep below then stripped the graph's blocks while
-      // the module cache kept the DataFrame, so later knnd consumers
-      // re-derived the whole descent chain per action (the r16 q240
-      // anomaly: runs doubling [16.2, 32.7, 66.5] s). The module-cache
-      // release here plus graph()'s own materialization check make the
-      // pair coherent.
-      functions.KnnDescent.releaseCaches(spark)
-      functions.TextQueries.releaseCaches(spark)
-      operators.Multimodal.releaseCaches(spark)
-      operators.SignatureStore.releaseCaches(spark)
-      operators.PipelineOps.releaseCaches(spark)
-      operators.CurationPipeline.releaseCaches(spark)
-      operators.CurationAudits.releaseCaches(spark)
-      functions.Embeddings.releaseCaches(spark)
+      SparkEntry.releaseCaches(spark)
       // Blanket sweep for what the module hooks can't see (round-11
       // judge finding #3: q175 ran 1.6× slower in the full session than
       // isolated with no code change): the iterative graph kernels cut
@@ -745,15 +729,7 @@ object Bench {
       }
     } catch { case _: Throwable => () }
     println(finalLine)
-    functions.Dedup.releaseCaches(spark)
-    functions.KnnDescent.releaseCaches(spark)
-    functions.Similarity.releaseCaches(spark)
-    functions.TextQueries.releaseCaches(spark)
-    operators.Multimodal.releaseCaches(spark)
-    operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-    functions.Embeddings.releaseCaches(spark)
+    SparkEntry.releaseCaches(spark)
     spark.stop()
   }
 }

@@ -78,41 +78,20 @@ object Verify {
     }
     val toRun = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }.toSeq
-    // Drive-time cut (round-15 verdict #1: 5m+ serial wall at 244
-    // queries risks tripping any driver-side time budget). Queries are
-    // mutually independent — each stages its own scratch dirs, the
-    // module memo caches are synchronized, and Spark job submission is
-    // thread-safe on one session — EXCEPT the stream-driving builders,
-    // which temporarily mutate session conf (shuffle.partitions around
-    // foreachBatch) and so must not overlap anything: a concurrent
-    // batch query planned during that window would silently pick up
-    // the streaming partition count. So: batch queries fan out over a
-    // small thread pool (each still one-at-a-time per name), then the
-    // stream-driving set runs strictly serially. The name convention is
-    // no longer the only guard (round-16 advisory): every shuffle-
-    // partition override routes through ConfGuard, and each parallel
-    // task runs inside an enterParallel/exitParallel bracket — a future
-    // conf-mutating query that bypasses this serial phase fails LOUDLY
-    // (its own sentinel row) instead of silently re-planning neighbors.
-    val serialNames = Set("q66_transform_with_state", "q237_advancing_ingest",
-      "q247_incremental_export_manifest")
-    val (serialQs, parQs) = toRun.partition { case (n, _) =>
-      n.contains("stream") || serialNames.contains(n) }
+    // Queries are mutually independent — each stages its own scratch
+    // dirs, the module memo caches are synchronized, Spark job submission
+    // is thread-safe on one session, and no query writes this session's
+    // conf (stream drives set theirs on a child session, see
+    // ChildSession) — so every query runs on a small thread pool.
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    def runOneParallel(n: String,
-        f: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      ConfGuard.enterParallel()
-      try runOne(n, f) finally ConfGuard.exitParallel()
-    }
-    if (nThreads <= 1) parQs.foreach { case (n, f) => runOneParallel(n, f) }
+    if (nThreads <= 1) toRun.foreach { case (n, f) => runOne(n, f) }
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-      val cs = parQs.map { case (n, f) =>
-        pool.submit(new Runnable { def run(): Unit = runOneParallel(n, f) }) }
+      val cs = toRun.map { case (n, f) =>
+        pool.submit(new Runnable { def run(): Unit = runOne(n, f) }) }
       cs.foreach(_.get())
       pool.shutdown()
     }
-    serialQs.foreach { case (n, f) => runOne(n, f) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -155,14 +134,7 @@ object Verify {
       s"written, ${failures.size} failed, ${missing.size} missing, " +
       f"wall $wallS%.1f s" +
       (if (missing.nonEmpty) s" — MISSING: ${missing.mkString(", ")}" else ""))
-    functions.Dedup.releaseCaches(spark)
-    functions.Similarity.releaseCaches(spark)
-    functions.TextQueries.releaseCaches(spark)
-    operators.Multimodal.releaseCaches(spark)
-    operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-    functions.Embeddings.releaseCaches(spark)
+    SparkEntry.releaseCaches(spark)
     spark.stop()
     // exit 0 even on failures: the sentinel parquet makes each failure a
     // visible per-query mismatch in the driver's compare, which is the

@@ -642,26 +642,25 @@ object Dedup {
       gramKeys(s, docs.filter(col("doc_id") % 5 === 0), "bdoc")
         .write.mode("overwrite").parquet(storeDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
         .filter(col("doc_id") % 5 =!= 0)
       // verdict rows are benchmark-overlap-sized; 8 matches the q130
       // streaming width convention (state-free here, but the per-batch
       // shuffle width still should not inherit the batch conf)
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            checkAgainstGramStore(gramKeys(s, batch, "doc_id"),
-              broadcast(s.read.parquet(storeDir)))
-              .withColumn("batch_id", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(sinkDir)
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          checkAgainstGramStore(gramKeys(s, batch, "doc_id"),
+            broadcast(s.read.parquet(storeDir)))
+            .withColumn("batch_id", lit(id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(sinkDir)
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       // explicit schema: a corpus with ZERO contaminated docs writes no
       // sink files at all (dynamic overwrite of empty batches), and a
       // schema-inferring read of the empty dir would throw instead of

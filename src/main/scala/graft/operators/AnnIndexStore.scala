@@ -483,33 +483,32 @@ object AnnIndexStore {
       seed.withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("batch_id").parquet(corpusDir)
-      val src = s.readStream.schema(embSchema).parquet(s"$d/embeddings.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(embSchema).parquet(s"$d/embeddings.parq*")
         .filter(!notHeldOut(col("vec_id")))
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // batch-local persist lifetimes (q130's discipline)
-            val b = batch
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          // batch-local persist lifetimes (q130's discipline)
+          val b = batch
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val pairs = admitVectors(s, b, storeDir, corpusDir,
+              beforeBatch = id)
+            val surv = vectorSurvivors(b, pairs)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              val pairs = admitVectors(s, b, storeDir, corpusDir,
-                beforeBatch = id)
-              val surv = vectorSurvivors(b, pairs)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                surv.withColumn("batch_id", lit(id))
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("batch_id").parquet(corpusDir)
-                append(s, surv, storeDir, id)
-              } finally { surv.unpersist(); () }
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+              surv.withColumn("batch_id", lit(id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id").parquet(corpusDir)
+              append(s, surv, storeDir, id)
+            } finally { surv.unpersist(); () }
+          } finally { b.unpersist(); () }
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       s.read.parquet(corpusDir)
         .select(col("vec_id"), size(col("embedding")).as("n_dims"))
         .orderBy(col("vec_id"))

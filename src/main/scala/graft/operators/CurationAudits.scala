@@ -395,16 +395,15 @@ object CurationAudits {
       val storeDir = graft.Tables.scratchDir(s, "q199_store_" + tag)
       resetTable(s, hhStoreSchema, storeDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            heavyHittersBatch(s, batch, id, storeDir, cap = 64)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          heavyHittersBatch(s, batch, id, storeDir, cap = 64)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       val store = s.read.schema(hhStoreSchema).parquet(storeDir)
       val latest = store.agg(max(col("batch_id")).as("m"))
       val fin = store.join(latest, col("batch_id") === col("m"))
@@ -443,16 +442,15 @@ object CurationAudits {
       resetTable(s, gramStoreSchema, storeDir)
       resetTable(s, noveltySinkSchema, sinkDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            noveltyBatch(s, batch, id, storeDir, sinkDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          noveltyBatch(s, batch, id, storeDir, sinkDir)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       s.read.schema(noveltySinkSchema).parquet(sinkDir)
         .select(col("batch_id"), col("n_docs"), col("grams_seen"),
           col("new_grams"),
@@ -481,45 +479,43 @@ object CurationAudits {
       resetTable(s, admitSinkSchema, sinkDir)
       resetTable(s, admitStatsSchema, statsDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema)
+      val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
         .parquet(s"$d/documents.parq*")
         .filter(col("source") === "src0")
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val verdicts = batch.select(col("doc_id"))
-              .join(CorpusCleaning.qualityLogitOf(batch)
-                .select(col("doc_id"), (col("score") >= 0).as("q_keep")),
-                Seq("doc_id"))
-              .join(CorpusCleaning.repetitionStatsOf(batch)
-                .select(col("doc_id"), (col("keep") === 1).as("r_keep")),
-                Seq("doc_id"), "left_outer")
-              .select(col("doc_id"), col("q_keep"),
-                coalesce(col("r_keep"), lit(true)).as("r_keep"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              verdicts.filter(col("q_keep") && col("r_keep"))
-                .select(col("doc_id")).withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(sinkDir)
-              verdicts.agg(count(lit(1)).as("n_seen"),
-                  sum((col("q_keep") && col("r_keep")).cast("long"))
-                    .as("n_admitted"),
-                  sum((!col("q_keep")).cast("long")).as("n_quality_rejects"),
-                  sum((!col("r_keep")).cast("long"))
-                    .as("n_repetition_rejects"))
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(statsDir)
-            } finally { verdicts.unpersist(); () }
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val verdicts = batch.select(col("doc_id"))
+            .join(CorpusCleaning.qualityLogitOf(batch)
+              .select(col("doc_id"), (col("score") >= 0).as("q_keep")),
+              Seq("doc_id"))
+            .join(CorpusCleaning.repetitionStatsOf(batch)
+              .select(col("doc_id"), (col("keep") === 1).as("r_keep")),
+              Seq("doc_id"), "left_outer")
+            .select(col("doc_id"), col("q_keep"),
+              coalesce(col("r_keep"), lit(true)).as("r_keep"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            verdicts.filter(col("q_keep") && col("r_keep"))
+              .select(col("doc_id")).withColumn("batch_id", lit(id))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id").parquet(sinkDir)
+            verdicts.agg(count(lit(1)).as("n_seen"),
+                sum((col("q_keep") && col("r_keep")).cast("long"))
+                  .as("n_admitted"),
+                sum((!col("q_keep")).cast("long")).as("n_quality_rejects"),
+                sum((!col("r_keep")).cast("long"))
+                  .as("n_repetition_rejects"))
+              .withColumn("batch_id", lit(id))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id").parquet(statsDir)
+          } finally { verdicts.unpersist(); () }
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       val sunk = s.read.schema(admitSinkSchema).parquet(sinkDir)
         .agg(count(lit(1)).as("n_sink_docs"))
       s.read.schema(admitStatsSchema).parquet(statsDir)

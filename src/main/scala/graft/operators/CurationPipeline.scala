@@ -666,18 +666,16 @@ object CurationPipeline {
         seedAdvancingState(s, d, storeDir, urlDir)
         val inDir = stageAdvancingBatches(s, d)
         val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(docsSchema)
+        val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
           .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*.parquet")
-        graft.ConfGuard.withShufflePartitions(s, 8) {
-          val q = src.writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              advancingIngestBatch(s, d, batch, id, sinkDir, storeDir,
-                urlDir, Some(manDir))
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        val q = src.writeStream
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            advancingIngestBatch(s, d, batch, id, sinkDir, storeDir,
+              urlDir, Some(manDir))
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
         (sinkDir, manDir)
       })
     }
@@ -1284,17 +1282,16 @@ object CurationPipeline {
       resetBatchTable(s, verdictSinkSchema, sinkDir)
       resetBatchTable(s, funnelSinkSchema, statsDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
         .filter(col("source") === "src1" && col("doc_id") % 5 =!= 0)
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            streamDeltaBatch(s, d, batch, id, sinkDir, statsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          streamDeltaBatch(s, d, batch, id, sinkDir, statsDir)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       s.read.schema(verdictSinkSchema).parquet(sinkDir)
         .select(col("doc_id"), col("lang"), col("verdict"))
         .orderBy(col("doc_id"))

@@ -255,8 +255,8 @@ object GraphOps {
   )
 
   /** q202's full scoring dataflow, PRE-truncation (the query's returned
-    * plan is the eager 20-row checkpoint — this seam is what OptProbe's
-    * inner-plan dump shows; split out in r19, dataflow unchanged). */
+    * plan is the eager 20-row checkpoint, so this is the only place the
+    * scoring plan can be inspected). */
   private[graft] def assocRulesPlan(s: SparkSession, d: String,
       op: DataFrame): DataFrame = {
     val nOrders = op.select(col("o")).distinct()
@@ -320,10 +320,8 @@ object GraphOps {
     labels
   }
 
-  /** ONE label-propagation round, PRE-truncation — the per-round
-    * dataflow split out (r19) so the inner-plan dump (OptProbe `inner`
-    * mode, the r18 verdict's evidence-gap fix) can show the round's
-    * exchange count directly: with a dst-partitioned edge relation and
+  /** ONE label-propagation round, PRE-truncation, so the round's plan
+    * can be inspected directly: with a dst-partitioned edge relation and
     * the label side broadcast, the round plans with ZERO exchanges. */
   private[graft] def lpRound(edges: DataFrame, labels: DataFrame,
       small: Boolean): DataFrame = {
@@ -504,13 +502,12 @@ object GraphOps {
     pr
   }
 
-  /** ONE pagerank round, PRE-truncation — split out (r19) so the
-    * inner-plan dump (OptProbe `inner` mode) shows the per-round seam
-    * the r18 verdict could not verify from the checkpoint-truncated
-    * headline plans: with the rank side broadcast and the adjacency
-    * cached partitioned by dst, the round plans with ZERO exchanges
-    * (the BHJ preserves the cache's HashPartitioning(dst), which
-    * satisfies the message aggregate's clustering). */
+  /** ONE pagerank round, PRE-truncation, so the per-round plan can be
+    * inspected past the checkpoint-truncated headline plan: with the
+    * rank side broadcast and the adjacency cached partitioned by dst,
+    * the round plans with ZERO exchanges (the BHJ preserves the cache's
+    * HashPartitioning(dst), which satisfies the message aggregate's
+    * clustering). */
   private[graft] def pagerankRound(adj: DataFrame, pr: DataFrame,
       small: Boolean, base: Long): DataFrame = {
     val prs = pr.select(col("node").as("src"), col("pr"))

@@ -498,33 +498,32 @@ object Multimodal {
       buildPhashStore(s,
         asMediaTable(s, docs.filter(col("doc_id") % 5 =!= 0)), storeDir)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
         .filter(col("doc_id") % 5 === 0)
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val dh = hashesOf(s, asMediaTable(s, batch))
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val dh = hashesOf(s, asMediaTable(s, batch))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val pairs = admitPhashHashes(s, dh, storeDir, beforeBatch = id)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              val pairs = admitPhashHashes(s, dh, storeDir, beforeBatch = id)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                pairs.withColumn("batch_id", lit(id))
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("batch_id").parquet(sinkDir)
-                writePhashHashes(s,
-                  dh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
-                    Seq("doc_id"), "left_anti"),
-                  storeDir, id, dynamic = true)
-              } finally { pairs.unpersist(); () }
-            } finally { dh.unpersist(); () }
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+              pairs.withColumn("batch_id", lit(id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id").parquet(sinkDir)
+              writePhashHashes(s,
+                dh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
+                  Seq("doc_id"), "left_anti"),
+                storeDir, id, dynamic = true)
+            } finally { pairs.unpersist(); () }
+          } finally { dh.unpersist(); () }
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       // explicit schema: a stream with no phash match ever writes no
       // sink files, and a schema-inferring read of the empty dir would
       // throw instead of returning q147's empty pair set (review

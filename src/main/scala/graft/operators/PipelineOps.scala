@@ -945,18 +945,17 @@ object PipelineOps {
         .withColumn("gen", lit(-1L))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("gen").parquet(mvDir)
-      val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(schema).parquet(s"$d/events.parq*")
         .filter(col("event_id") % 10 >= 8)
         .select(col("user_id"), col("event_type"), col("value"))
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            refreshGeneration(s, mvDir, rollup(batch), id)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          refreshGeneration(s, mvDir, rollup(batch), id)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       val mv = s.read.parquet(mvDir)
       // partition-column inference narrows gen to int — read type-agnostic
       val maxGen = mv.agg(max(col("gen"))).first().getAs[Number](0)

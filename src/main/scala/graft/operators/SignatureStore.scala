@@ -318,36 +318,35 @@ object SignatureStore {
       seed.withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("batch_id").parquet(corpusDir)
-      val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parq*")
+      val src = graft.ChildSession.forStream(s).readStream
+        .schema(docsSchema).parquet(s"$d/documents.parq*")
         .filter(col("source") === "src0")
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // batch-local persist lifetimes: shingles feed signatures +
-            // verification, survivors feed two writes — both released at
-            // batch end so an unbounded stream holds no per-batch state
-            val deltaSh = Dedup.shinglesOfDocs(s, batch)
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          // batch-local persist lifetimes: shingles feed signatures +
+          // verification, survivors feed two writes — both released at
+          // batch end so an unbounded stream holds no per-batch state
+          val deltaSh = Dedup.shinglesOfDocs(s, batch)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val pairs = admitShingles(s, deltaSh, storeDir, beforeBatch = id)
+            val surv = survivors(batch, pairs)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              val pairs = admitShingles(s, deltaSh, storeDir, beforeBatch = id)
-              val surv = survivors(batch, pairs)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                // per-write dynamic overwrite: a replayed batch replaces
-                // exactly its own partition, and no session conf mutates
-                surv.withColumn("batch_id", lit(id))
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("batch_id").parquet(corpusDir)
-                append(s, surv, storeDir, id)
-              } finally { surv.unpersist(); () }
-            } finally { deltaSh.unpersist(); () }
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+              // per-write dynamic overwrite: a replayed batch replaces
+              // exactly its own partition, and no session conf mutates
+              surv.withColumn("batch_id", lit(id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id").parquet(corpusDir)
+              append(s, surv, storeDir, id)
+            } finally { surv.unpersist(); () }
+          } finally { deltaSh.unpersist(); () }
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       s.read.parquet(corpusDir)
         .select(col("doc_id"), length(col("text")).as("n_chars"))
         .orderBy(col("doc_id"))

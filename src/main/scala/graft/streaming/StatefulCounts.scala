@@ -68,50 +68,41 @@ object StatefulCounts {
     })
   )
 
-  /** Run `body` with the RocksDB state-store provider active, restoring
-    * the session default afterwards. RocksDB is the state backend that
-    * scales past executor heap (state spills to local SST files with
-    * changelog checkpointing) — the provider any 100 TB streaming job
-    * uses instead of the default in-memory HDFS-backed store. */
-  private[graft] def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    // Changelog checkpointing writes the per-batch delta instead of a
-    // full native RocksDB snapshot per commit — the production setting
-    // for frequent micro-batches (a full Checkpoint.createCheckpoint per
-    // batch costs seconds of native IO and serialized a 13k-batch test
-    // run into a multi-minute stall).
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  /** The RocksDB state-store provider: the state backend that scales
+    * past executor heap (state spills to local SST files with changelog
+    * checkpointing) — the provider any 100 TB streaming job uses instead
+    * of the default in-memory HDFS-backed store. Changelog checkpointing
+    * writes the per-batch delta instead of a full native RocksDB snapshot
+    * per commit — the production setting for frequent micro-batches (a
+    * full Checkpoint.createCheckpoint per batch costs seconds of native
+    * IO and serialized a 13k-batch test run into a multi-minute stall). */
+  private[graft] val rocksDbConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** A child session (see [[graft.ChildSession]]) running [[rocksDbConfs]]. */
+  private[graft] def rocksDbSession(s: SparkSession): SparkSession =
+    graft.ChildSession(s, rocksDbConfs: _*)
 
   val rocksDbQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The q33-shaped tumbling aggregation running on the RocksDB state
     // store — identical results, production state backend.
     "q65_stream_rocksdb" -> ((s, d) => {
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      s.catalog.dropTempView("sink_rocksdb")
-      withRocksDb(s) {
-        val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
-          .transform(graft.Tables.tsToMicros)
-        val q = src.groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"))
-          .writeStream.format("memory").queryName("sink_rocksdb")
-          .outputMode(OutputMode.Complete())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table("sink_rocksdb")
+      val rs = rocksDbSession(s)
+      graft.Tables.nanosTs(rs)
+      val schema = rs.read.parquet(s"$d/events.parquet").schema
+      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
+        .transform(graft.Tables.tsToMicros)
+      val q = src.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .writeStream.format("memory").queryName("sink_rocksdb")
+        .outputMode(OutputMode.Complete())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      rs.table("sink_rocksdb")
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
           col("event_type"), col("n_events"))
         .orderBy(col("win_start"), col("event_type"))
@@ -123,27 +114,25 @@ object StatefulCounts {
     // per-user aggregate as q36, expressed through the new API.
     "q66_transform_with_state" -> ((s, d) => {
       import s.implicits._
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      s.catalog.dropTempView("sink_tws")
-      withRocksDb(s) {
-        val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
-          .select(col("user_id").cast("long"), col("event_id").cast("long"),
-            col("value").cast("double"))
-          .as[(Long, Long, Double)]
-        val updated = src
-          .groupByKey(_._1)
-          .transformWithState(new CountProcessor(),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-        val q = updated.toDF()
-          .writeStream.format("memory").queryName("sink_tws")
-          .outputMode(OutputMode.Update())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table("sink_tws")
+      val rs = rocksDbSession(s)
+      graft.Tables.nanosTs(rs)
+      val schema = rs.read.parquet(s"$d/events.parquet").schema
+      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
+        .select(col("user_id").cast("long"), col("event_id").cast("long"),
+          col("value").cast("double"))
+        .as[(Long, Long, Double)]
+      val updated = src
+        .groupByKey(_._1)
+        .transformWithState(new CountProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+      val q = updated.toDF()
+        .writeStream.format("memory").queryName("sink_tws")
+        .outputMode(OutputMode.Update())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      rs.table("sink_tws")
         .groupBy(col("user_id"))
         .agg(max(col("n_events")).as("n_events"),
           round(max(col("sum_value")), 6).as("sum_value"))
@@ -163,29 +152,27 @@ object StatefulCounts {
     // what the DuckDB oracle computes.
     "q70_stream_session_timers" -> ((s, d) => {
       import s.implicits._
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      s.catalog.dropTempView("sink_timers")
-      withRocksDb(s) {
-        val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
-          .transform(graft.Tables.tsToMicros)
-          .withWatermark("ts", "30 minutes")
-          .select(col("user_id").cast("long").as("user_id"),
-            unix_micros(col("ts")).as("ts_us"), col("ts"))
-          .as[(Long, Long, java.sql.Timestamp)]
-        val sessions = src
-          .groupByKey(_._1)
-          .transformWithState(new SessionTimerProcessor(),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append())
-        val q = sessions.toDF()
-          .writeStream.format("memory").queryName("sink_timers")
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table("sink_timers")
+      val rs = rocksDbSession(s)
+      graft.Tables.nanosTs(rs)
+      val schema = rs.read.parquet(s"$d/events.parquet").schema
+      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
+        .transform(graft.Tables.tsToMicros)
+        .withWatermark("ts", "30 minutes")
+        .select(col("user_id").cast("long").as("user_id"),
+          unix_micros(col("ts")).as("ts_us"), col("ts"))
+        .as[(Long, Long, java.sql.Timestamp)]
+      val sessions = src
+        .groupByKey(_._1)
+        .transformWithState(new SessionTimerProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+      val q = sessions.toDF()
+        .writeStream.format("memory").queryName("sink_timers")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      rs.table("sink_timers")
         .select(col("user_id"), col("sess_start"), col("n_events"))
         .orderBy(col("user_id"), col("sess_start"))
     })

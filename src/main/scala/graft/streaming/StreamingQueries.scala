@@ -34,38 +34,28 @@ object StreamingQueries {
       outputMode: String = "complete")(
       build: DataFrame => DataFrame): DataFrame = {
     val path = s"$d/$table.parquet"
+    val child = graft.ChildSession.forStream(s)
     // events.ts is parquet TIMESTAMP(NANOS) — read as raw long nanos and
     // convert (see Tables.nanosTs); same truncation DuckDB applies.
-    graft.Tables.nanosTs(s)
-    val schema = s.read.parquet(path).schema
+    graft.Tables.nanosTs(child)
+    val schema = child.read.parquet(path).schema
     // The fixture is a single parquet FILE. FileStreamSource derives its
     // basePath from the path itself (ignoring the basePath option) and
     // requires a directory — so stream via a glob that matches only this
     // file; with a glob, the parent directory becomes the base.
-    val raw = s.readStream.schema(schema).parquet(s"$d/$table.parq*")
+    val raw = child.readStream.schema(schema).parquet(s"$d/$table.parq*")
     val src =
       if (schema.fieldNames.contains("ts")) graft.Tables.tsToMicros(raw)
       else raw
-    // Re-entrant: drop a stale sink table from a previous run in the
-    // same session (Bench runs queries repeatedly).
-    s.catalog.dropTempView(sinkName)
-    // State-store parallelism: each shuffle partition materializes a
-    // state-store instance per micro-batch (checkpoint dir + provider);
-    // at fixture scale that fixed cost dominates the runtime, so size the
-    // streaming shuffle down — a production deployment sizes this to
-    // state volume, not to the session's batch shuffle width. The query
-    // pins its partition count at start, so restoring the conf after
-    // start() doesn't affect the running stream.
-    graft.ConfGuard.withShufflePartitions(s, 8) {
-      val q = build(src).writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(sinkName)
+    // the sink registers its table on the child, fresh per call
+    build(src).writeStream
+      .format("memory")
+      .queryName(sinkName)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    child.table(sinkName)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -305,39 +295,34 @@ object StreamingQueries {
     // (partitioned files), not the state store, so the streaming side
     // scales with batch size, not key cardinality.
     "q82_stream_foreach_upsert" -> ((s, d) => {
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val child = graft.ChildSession.forStream(s)
+      graft.Tables.nanosTs(child)
+      val schema = child.read.parquet(s"$d/events.parquet").schema
       // fixed per-(session, source-dir) staging path: a re-run replaces
       // its batches via dynamic partition overwrite instead of leaking a
       // new tree; keyed by source dir because dynamic overwrite leaves
       // partitions a smaller re-run doesn't produce
       val stage = graft.Tables.scratchDir(s,
         "q82_upsert_stage_" + graft.Tables.datasetTag(d))
-      val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
+      child.readStream.schema(schema).parquet(s"$d/events.parq*")
         .transform(graft.Tables.tsToMicros)
-      graft.ConfGuard.withShufflePartitions(s, 8) {
-        // the overwrite-mode flip rides inside the same guarded window
-        val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          val q = src.writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id"))
-                .orderBy(col("ts").desc, col("event_id").desc)
-              batch.withColumn("rk", row_number().over(w))
-                .filter(col("rk") === 1)
-                .drop("rk")
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite").partitionBy("batch_id").parquet(stage)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally s.conf.set(
-          "spark.sql.sources.partitionOverwriteMode", prevMode)
-      }
+        .writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("user_id"))
+            .orderBy(col("ts").desc, col("event_id").desc)
+          batch.withColumn("rk", row_number().over(w))
+            .filter(col("rk") === 1)
+            .drop("rk")
+            .withColumn("batch_id", lit(id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(stage)
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").desc)

@@ -34,6 +34,14 @@ object GraftBridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** A child session that starts from a copy of `spark`'s session state
+    * (runtime conf, temp views, registered functions) and shares its
+    * SparkContext and cache manager; conf set on the child never reaches
+    * `spark` (`cloneSession` is private[sql]). */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Unique id of a session (`sessionUUID` is private[sql]); falls back
     * to identity hash for non-classic sessions. Used to key per-session
     * resource caches — identityHashCode alone can collide across

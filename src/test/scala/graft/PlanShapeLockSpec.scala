@@ -60,15 +60,7 @@ class PlanShapeLockSpec extends TestSpark {
     // q227 gained one exchange in the full suite vs testOnly), so the
     // lock always builds from cleared session caches — the same state
     // in both run modes
-    functions.Dedup.releaseCaches(spark)
-    functions.Similarity.releaseCaches(spark)
-    functions.TextQueries.releaseCaches(spark)
-    operators.Multimodal.releaseCaches(spark)
-    operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationPipeline.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-    functions.Embeddings.releaseCaches(spark)
+    SparkEntry.releaseCaches(spark)
     spark.catalog.clearCache()
     val names = Bench.headline.filterNot(excluded)
     val observed = names.map(n => n -> shapeOf(n))

@@ -216,8 +216,9 @@ class StreamingSpec extends TestSpark {
       ()
     }
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    def runBatch(): Unit = graft.streaming.StatefulCounts.withRocksDb(spark) {
-      val q = spark.readStream.schema("user_id long, ts timestamp").parquet(inDir)
+    def runBatch(): Unit = {
+      val rs = graft.streaming.StatefulCounts.rocksDbSession(spark)
+      val q = rs.readStream.schema("user_id long, ts timestamp").parquet(inDir)
         .withWatermark("ts", "30 minutes")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ts"))
         .as[(Long, Long, java.sql.Timestamp)]
@@ -276,23 +277,21 @@ class StreamingSpec extends TestSpark {
       val rows = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
         (2L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00")))
       rows.toDF("user_id", "ts").write.parquet(s"$base/in")
-      spark.catalog.dropTempView("sink_sess_edge")
-      graft.streaming.StatefulCounts.withRocksDb(spark) {
-        val q = spark.readStream.schema("user_id long, ts timestamp")
-          .parquet(s"$base/in")
-          .withWatermark("ts", "30 minutes")
-          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ts"))
-          .as[(Long, Long, java.sql.Timestamp)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.SessionTimerProcessor(),
-            TimeMode.EventTime(), OutputMode.Append())
-          .toDF()
-          .writeStream.format("memory").queryName("sink_sess_edge")
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val got = spark.table("sink_sess_edge").collect()
+      val rs = graft.streaming.StatefulCounts.rocksDbSession(spark)
+      val q = rs.readStream.schema("user_id long, ts timestamp")
+        .parquet(s"$base/in")
+        .withWatermark("ts", "30 minutes")
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ts"))
+        .as[(Long, Long, java.sql.Timestamp)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.SessionTimerProcessor(),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+        .writeStream.format("memory").queryName("sink_sess_edge")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val got = rs.table("sink_sess_edge").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
       assert(got == Set((1L, "2024-01-01 10:00:00", 1L)),
         s"expiry==watermark timer did not fire (oracle uses <=): $got")
@@ -322,26 +321,20 @@ class StreamingSpec extends TestSpark {
     // 13k-batch stall). TTL expiry is checked on state READ, not by the
     // cleanup batches, so disabling them keeps the semantics and makes
     // AvailableNow terminate deterministically.
-    def runBatch(): Unit = graft.streaming.StatefulCounts.withRocksDb(spark) {
-      val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val ndPrev = spark.conf.getOption(ndKey)
-      spark.conf.set(ndKey, "false")
-      try {
-        val q = spark.readStream.schema("k string").parquet(inDir)
-          .as[String]
-          .groupByKey(identity)
-          .transformWithState(new graft.streaming.TtlCountProcessor(500L),
-            TimeMode.ProcessingTime(), OutputMode.Update())
-          .toDF("k", "n")
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally ndPrev match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None => spark.conf.unset(ndKey)
-      }
+    def runBatch(): Unit = {
+      val rs = ChildSession(spark, graft.streaming.StatefulCounts.rocksDbConfs :+
+        ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*)
+      val q = rs.readStream.schema("k string").parquet(inDir)
+        .as[String]
+        .groupByKey(identity)
+        .transformWithState(new graft.streaming.TtlCountProcessor(500L),
+          TimeMode.ProcessingTime(), OutputMode.Update())
+        .toDF("k", "n")
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", chk)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
     try {
       write("f1", Seq("a", "a"))

@@ -31,15 +31,6 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
     // this suite's per-session caches (persisted cluster labels, centroid
     // broadcasts) so nothing pins executor memory across suites; the next
     // consumer rebuilds them.
-    graft.functions.Dedup.releaseCaches(spark)
-    graft.functions.KnnDescent.releaseCaches(spark)
-    graft.functions.Similarity.releaseCaches(spark)
-    graft.functions.TextQueries.releaseCaches(spark)
-    graft.operators.Multimodal.releaseCaches(spark)
-    graft.operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationPipeline.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-    graft.functions.Embeddings.releaseCaches(spark)
+    SparkEntry.releaseCaches(spark)
   }
 }
