@@ -11,8 +11,19 @@ import java.util.concurrent.atomic.AtomicInteger
   *    nothing fails — every task runs exactly once;
   *  - mtiming/rtiming (mrapps/mtiming.go, rtiming.go): ≥2 tasks actually
   *    run concurrently on a multi-core master.
+  * The two listener probes need a multi-file `MapReduceJob.run` input and
+  * nothing of its contents, so they read `LocalCorpusParitySpec.corpus`,
+  * written to a temp directory that `afterAll` deletes.
   */
 class BehavioralSpec extends TestSpark {
+
+  private lazy val corpusDir = LocalCorpusParitySpec.writeCorpus()
+  private def corpusGlob = s"$corpusDir/*.txt"
+
+  override def afterAll(): Unit = {
+    org.apache.commons.io.FileUtils.deleteDirectory(corpusDir.toFile)
+    super.afterAll()
+  }
 
   private class ProbeListener extends SparkListener {
     val attempts = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
@@ -44,8 +55,7 @@ class BehavioralSpec extends TestSpark {
     val probe = new ProbeListener
     spark.sparkContext.addSparkListener(probe)
     try {
-      MapReduceJob.run(spark, "/root/reference/src/main/pg-*.txt",
-        RefApps.WordCount, numReduce = 10).collect()
+      MapReduceJob.run(spark, corpusGlob, RefApps.WordCount, numReduce = 10).collect()
       waitForListener(probe)
       val dupes = probe.attempts.entrySet().toArray.collect {
         case e: java.util.Map.Entry[_, _]
@@ -59,8 +69,7 @@ class BehavioralSpec extends TestSpark {
     val probe = new ProbeListener
     spark.sparkContext.addSparkListener(probe)
     try {
-      MapReduceJob.run(spark, "/root/reference/src/main/pg-*.txt",
-        RefApps.WordCount, numReduce = 10).collect()
+      MapReduceJob.run(spark, corpusGlob, RefApps.WordCount, numReduce = 10).collect()
       waitForListener(probe)
       assert(probe.maxLive >= 2,
         s"expected >=2 concurrent tasks, saw max ${probe.maxLive}")

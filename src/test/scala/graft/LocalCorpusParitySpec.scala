@@ -22,11 +22,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 class LocalCorpusParitySpec extends TestSpark {
   import LocalCorpusParitySpec._
 
-  private lazy val corpusDir: Path = {
-    val dir = Files.createTempDirectory("graft_mr_corpus")
-    corpus.foreach { case (name, text, _) => Files.writeString(dir.resolve(name), text, UTF_8) }
-    dir
-  }
+  private lazy val corpusDir: Path = writeCorpus()
   private lazy val files = corpus.map { case (name, _, _) => corpusDir.resolve(name).toString }
   private def glob = s"$corpusDir/*.txt"
 
@@ -155,6 +151,14 @@ object LocalCorpusParitySpec {
       tokens.foreach(w => text.append(w).append(separators(rnd.nextInt(separators.size))))
       (f"doc-$f%02d.txt", text.toString, tokens)
     }
+  }
+
+  /** Writes `corpus` to a new temp directory, one `.txt` file per entry,
+    * and returns the directory; the caller deletes it. */
+  def writeCorpus(): Path = {
+    val dir = Files.createTempDirectory("graft_mr_corpus")
+    corpus.foreach { case (name, text, _) => Files.writeString(dir.resolve(name), text, UTF_8) }
+    dir
   }
 
   /** Sums the shuffle records written by the tasks of one job group's
