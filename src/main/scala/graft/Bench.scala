@@ -287,8 +287,8 @@ object Bench {
     // their own warm caches (unchanged min-of-3 semantics) but nothing
     // leaks ACROSS queries.
     def releaseAll(): Unit = {
-      SparkEntry.releaseCaches(spark)
-      // Blanket sweep for what the module hooks can't see (round-11
+      SessionCache.releaseAll(spark)
+      // Blanket sweep for what the session cache can't see (round-11
       // judge finding #3: q175 ran 1.6× slower in the full session than
       // isolated with no code change): the iterative graph kernels cut
       // lineage with localCheckpoint, whose blocks stay pinned in the
@@ -296,7 +296,7 @@ object Bench {
       // late families, dozens of checkpointed relations from finished
       // queries tax storage memory and GC. Between queries nothing
       // persisted is still needed (each query builds its own state; the
-      // module caches above re-materialize on demand), so drop every
+      // session cache above re-materializes on demand), so drop every
       // registered RDD and nudge the cleaner. Within a query's min-of-3
       // caches stay warm — this runs only between queries.
       spark.sparkContext.getPersistentRDDs.values
@@ -423,7 +423,7 @@ object Bench {
         if (knndQs(n)) (1 to 3).map { _ =>
           val t = once(n)
           knndForensics(n) = knndForensics.getOrElse(n, Seq.empty) :+
-            PersistTracker.forensic("knnd", spark)
+            SessionCache.forensic(spark, "knnd")
           t
         }
         else runs3(n)
@@ -729,7 +729,7 @@ object Bench {
       }
     } catch { case _: Throwable => () }
     println(finalLine)
-    SparkEntry.releaseCaches(spark)
+    SessionCache.releaseAll(spark)
     spark.stop()
   }
 }

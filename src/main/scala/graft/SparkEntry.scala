@@ -293,21 +293,6 @@ object SparkEntry {
       streaming.StatefulCounts.queries ++
       streaming.StatefulCounts.rocksDbQueries
 
-  /** Drop this session's module caches (memoized relations, broadcasts,
-    * persisted stages): every module's hook, each called once. The
-    * NN-descent graph is released through Similarity's hook. */
-  def releaseCaches(spark: SparkSession): Unit = {
-    functions.Dedup.releaseCaches(spark)
-    functions.Similarity.releaseCaches(spark)
-    functions.TextQueries.releaseCaches(spark)
-    functions.Embeddings.releaseCaches(spark)
-    operators.Multimodal.releaseCaches(spark)
-    operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationPipeline.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-  }
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (MinHash/SimHash/LSH-ANN) → driver records a weaker rows-only check.

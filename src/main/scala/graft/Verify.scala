@@ -134,7 +134,7 @@ object Verify {
       s"written, ${failures.size} failed, ${missing.size} missing, " +
       f"wall $wallS%.1f s" +
       (if (missing.nonEmpty) s" — MISSING: ${missing.mkString(", ")}" else ""))
-    SparkEntry.releaseCaches(spark)
+    SessionCache.releaseAll(spark)
     spark.stop()
     // exit 0 even on failures: the sentinel parquet makes each failure a
     // visible per-query mismatch in the driver's compare, which is the

@@ -101,19 +101,18 @@ object Dedup {
       .toDF("doc_id", "shingles")
   }
 
-  /** A persisted [[shinglesOfDocs]] relation tracked for
-    * [[releaseCaches]] — the delta-batch twin of [[sharedShingles]]
+  /** A persisted [[shinglesOfDocs]] relation tracked for the session
+    * release — the delta-batch twin of [[sharedShingles]]
     * (admission consumes the delta's shingles three times: signatures,
     * verification, survivor computation). */
   private[graft] def trackedShingles(s: SparkSession, docs: DataFrame): DataFrame =
     tracked(shinglesOfDocs(s, docs))
 
   /** Persisted relations (shared shingles, q99's filtered shingles,
-    * q120's positional grams) tracked through the shared
-    * [[graft.PersistTracker]] so [[releaseCaches]] can unpersist them —
-    * the same teardown contract TextQueries/Multimodal expose. */
+    * q120's positional grams) tracked in the session cache, which
+    * unpersists them on release. */
   private def tracked(df: DataFrame): DataFrame =
-    graft.PersistTracker.tracked("dedup", df)
+    graft.SessionCache.tracked("dedup", df)
 
   /** The shingle relation persisted for the lifetime of a query that
     * consumes it several times (signatures + both verification joins).
@@ -887,7 +886,7 @@ object Dedup {
     *
     * Returns (doc_id, cluster_id = component minimum) for every node that
     * appears in an edge, persisted and materialized (callers release via
-    * [[releaseCaches]]). */
+    * [[graft.SessionCache]]). */
   private[graft] def connectedComponents(s: SparkSession, pairs: DataFrame): DataFrame = {
     // Lineage MUST be truncated every round: each round's plan references
     // the previous round's ~6× (two unionByName sides, join + agg
@@ -955,41 +954,15 @@ object Dedup {
     labels
   }
 
-  /** Cluster labels are cached per (sessionUUID, dataset): q72/q76 and
-    * repeated invocations reuse one persisted result instead of leaking a
-    * new cache entry per call (round-3 advisor finding). Keyed on the
-    * session UUID (identityHashCode can collide across sessions) and
-    * built under a lock so concurrent first calls can't both run
-    * connectedComponents and orphan the loser's persisted result. */
-  private val labelsCache =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
-  /** Unpersist this session's cached cluster labels AND tracked persisted
-    * relations (shared shingles, q99's filtered shingles, q120's grams)
-    * — test/app teardown, or between corpus versions in a long-lived
-    * session. */
-  def releaseCaches(s: SparkSession): Unit = {
-    labelsCache.synchronized {
-      val id = sessionKey(s)
-      labelsCache.filterInPlace { case ((sid, _), df) =>
-        if (sid == id) { df.unpersist(); false } else true
-      }
-    }
-    graft.PersistTracker.release("dedup", s)
-  }
-
   /** Cached [[connectedComponents]] over an arbitrary edge builder,
-    * keyed by (session, key). The lock spans the build: clustering is a
-    * multi-job driver loop, so serializing duplicate first calls is
-    * strictly cheaper than letting both run and orphaning the loser's
-    * persisted result. Also used by Similarity's embedding-space dedup
-    * (key-prefixed so shingle and embedding graphs never collide). */
+    * keyed by (session, key): q72/q76 and repeated invocations reuse one
+    * persisted result, and concurrent first calls of one key run the
+    * multi-job clustering loop once. Also used by Similarity's
+    * embedding-space dedup (key-prefixed so shingle and embedding graphs
+    * never collide). */
   private[graft] def cachedComponents(s: SparkSession, key: String)
       (pairs: => DataFrame): DataFrame =
-    labelsCache.synchronized {
-      labelsCache.getOrElseUpdate((sessionKey(s), key),
-        connectedComponents(s, pairs))
-    }
+    graft.SessionCache.memo(s, "dedup", key)(connectedComponents(s, pairs))
 
   /** Connected-component labels over the verified near-dup pair graph
     * (jaccard ≥ 0.8): [[connectedComponents]] over q27's verified pairs,

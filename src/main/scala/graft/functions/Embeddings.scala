@@ -10,11 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Embeddings {
 
-  /** Unpersist this module's tracked relations (q244's shared scored
-    * relation) for `s` — the Dedup/TextQueries teardown contract. */
-  def releaseCaches(s: SparkSession): Unit =
-    graft.PersistTracker.release("embed", s)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Per-label centroid, dimension-wise: posexplode → (label, dim) avg.
     // Shuffles (label, dim, partial sums) — 64×n_labels keys, never the
@@ -131,7 +126,7 @@ object Embeddings {
     // identical (cos DESC, vec_id) total order. The keep rule is pure
     // integer arithmetic: kept ⇔ rk·4 > n_label.
     "q244_diversity_prune" -> ((s, d) => {
-      val scored = graft.PersistTracker.tracked("embed", centroidCos(s, d))
+      val scored = graft.SessionCache.tracked("embed", centroidCos(s, d))
       val nLab = scored.groupBy(col("label"))
         .agg(count(lit(1)).as("n_label"))
       graft.plans.RankLadder.rank(scored, Seq("label"), "cos", "vec_id")

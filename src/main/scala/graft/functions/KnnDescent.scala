@@ -111,28 +111,10 @@ object KnnDescent {
     graft.plans.TopKPerGroup.topK(scored, Seq("src"),
       Seq("cos" -> false, "nbr" -> true), K)
 
-  private val graphCache = scala.collection.mutable.Map
-    .empty[(String, String), DataFrame]
-  private val radiusCache = scala.collection.mutable.Map
-    .empty[(String, String), Int]
-  private val recallCache = scala.collection.mutable.Map
-    .empty[(String, String), Seq[(String, Long)]]
-
-  def releaseCaches(s: SparkSession): Unit = {
-    graphCache.synchronized {
-      val id = sessionKey(s)
-      graphCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    radiusCache.synchronized {
-      val id = sessionKey(s)
-      radiusCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    recallCache.synchronized {
-      val id = sessionKey(s)
-      recallCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    graft.PersistTracker.release("knnd", s)
-  }
+  /** A built graph with the probe radius its build chose and the recall
+    * it measured on each leg: one memo entry per (session, dataset). */
+  private final case class Built(graph: DataFrame, radius: Int,
+      legs: Seq[(String, Long)])
 
   /** The recall the build MEASURED for each graph it considered, in
     * exact micro-units of recall@3 (1e6·hits/exact_edges — the same
@@ -145,12 +127,7 @@ object KnnDescent {
     * is the recall of the graph [[graph]] returned. Forces the build
     * like [[autoRadius]]. */
   private[graft] def measuredRecallMicro(s: SparkSession, emb: DataFrame,
-      cacheKey: String): Seq[(String, Long)] = {
-    graph(s, emb, cacheKey)
-    recallCache.synchronized {
-      recallCache.getOrElse((sessionKey(s), cacheKey), Seq.empty)
-    }
-  }
+      cacheKey: String): Seq[(String, Long)] = built(s, emb, cacheKey).legs
 
   /** THE RECALL POLICY (round-14 judge task #2; recall-targeted since
     * round 16 — round-15 verdict #3): the probe radius the build CHOSE
@@ -166,15 +143,13 @@ object KnnDescent {
     * the radius IS a property of the measured build, no longer a
     * pre-build proxy. */
   private[graft] def autoRadius(s: SparkSession, emb: DataFrame,
-      cacheKey: String): Int = {
-    graph(s, emb, cacheKey)
-    radiusCache.synchronized { radiusCache((sessionKey(s), cacheKey)) }
-  }
+      cacheKey: String): Int = built(s, emb, cacheKey).radius
 
   /** Radius-1 build + measured-recall escalation — see [[autoRadius]].
-    * Records its decision in [[radiusCache]]. The radius-1 graph it
-    * measures is built through the SAME [[stages]] path the session
-    * would use, so on the no-escalation branch nothing is thrown away;
+    * Returns the graph with its decision and measured legs. The
+    * radius-1 graph it measures is built through the SAME [[stages]]
+    * path the session would use, so on the no-escalation branch nothing
+    * is thrown away;
     * on escalation (round-16 verdict task #2) the radius-1 graph is not
     * waste either — its final edges WARM-START the radius-2 descent
     * (unioned into round 1's candidate set; NN-descent improves
@@ -190,7 +165,7 @@ object KnnDescent {
     * is materialized — buildAuto leaves exactly ONE persisted relation
     * behind. */
   private def buildAuto(s: SparkSession, emb: DataFrame,
-      cacheKey: String): DataFrame = {
+      cacheKey: String): Built = {
     val r1Stages = stages(s, emb, cacheKey, probeRadius = 1)
     val g1 = r1Stages.last
     val n = Similarity.corpusCount(emb, cacheKey)
@@ -200,7 +175,7 @@ object KnnDescent {
     // identical plan around its own consumers — the drop at the end of
     // this build releases only THIS reference, so a concurrent outer
     // registration keeps the relation cached
-    val exact = graft.PersistTracker.tracked("knnd",
+    val exact = graft.SessionCache.tracked("knnd",
       Similarity.cosineTopK(probes, emb, K)
         .select(col("probe_id").as("src"), col("vec_id").as("nbr")))
     // the sampled-exact recall@3 of `g`, in the dial's exact
@@ -229,14 +204,11 @@ object KnnDescent {
     val rec1 = recallMicro(g1)
     val legs = scala.collection.mutable.ArrayBuffer("r1" -> rec1)
     val r = if (misses(rec1)) 2 else 1
-    radiusCache.synchronized {
-      radiusCache((sessionKey(s), cacheKey)) = r; ()
-    }
     // the fused audit above materialized every radius-1 stage, so the
     // intermediates are dead weight on both branches; the audit
     // relation stays alive until the LAST measurement below (when the
     // dial escalates it also scores g2 — round-17 verdict #1)
-    r1Stages.init.foreach(graft.PersistTracker.drop("knnd", _))
+    r1Stages.init.foreach(graft.SessionCache.drop("knnd", _))
     val out =
       if (r == 1) g1
       else {
@@ -261,23 +233,20 @@ object KnnDescent {
         // (the r18 standalone g2.count() folded into it — r19); the
         // warm seed g1 is released only AFTER that materialization.
         val rec2 = recallMicro(g2)
-        graft.PersistTracker.drop("knnd", g1)
-        r2Stages.init.foreach(graft.PersistTracker.drop("knnd", _))
+        graft.SessionCache.drop("knnd", g1)
+        r2Stages.init.foreach(graft.SessionCache.drop("knnd", _))
         legs += ("r2" -> rec2)
         if (!misses(rec2)) g2
         else {
           val g3 = descendOnce(s, emb, g2)
           val rec3 = recallMicro(g3)
-          graft.PersistTracker.drop("knnd", g2)
+          graft.SessionCache.drop("knnd", g2)
           legs += ("r2x1" -> rec3)
           g3
         }
       }
-    graft.PersistTracker.drop("knnd", exact)
-    recallCache.synchronized {
-      recallCache((sessionKey(s), cacheKey)) = legs.toSeq; ()
-    }
-    out
+    graft.SessionCache.drop("knnd", exact)
+    Built(out, r, legs.toSeq)
   }
 
   /** The NN-descent graph for a corpus, cached per (session, dataset)
@@ -287,7 +256,7 @@ object KnnDescent {
     * The cached handle is VERIFIED still materialized before reuse
     * (round-16 verdict task #1): a harness-level blanket RDD unpersist
     * (Bench's between-query residue sweep) can strip the graph's blocks
-    * while this module cache keeps the DataFrame — returning the stale
+    * while the session cache keeps the DataFrame — returning the stale
     * handle re-derives the whole descent chain PER CONSUMER (the r16
     * q240 anomaly: full-session runs doubling [16.2, 32.7, 66.5] s
     * where isolated runs warm normally). On a stale hit, every
@@ -295,23 +264,12 @@ object KnnDescent {
     * equally stale — a bare re-persist of the same plan would no-op
     * against the dead entry) and the graph rebuilds from scratch. */
   private[graft] def graph(s: SparkSession, emb: DataFrame,
-      cacheKey: String): DataFrame =
-    graphCache.synchronized {
-      val key = (sessionKey(s), cacheKey)
-      graphCache.get(key) match {
-        case Some(g) if org.apache.spark.sql.graftbridge.GraftBridge
-            .cachedAndMaterialized(g) => g
-        case hit =>
-          if (hit.isDefined) {
-            System.err.println(s"[knnd] cached graph for $cacheKey is no " +
-              "longer materialized — releasing knnd caches and rebuilding")
-            releaseCaches(s)
-          }
-          val g = buildAuto(s, emb, cacheKey)
-          graphCache(key) = g
-          g
-      }
-    }
+      cacheKey: String): DataFrame = built(s, emb, cacheKey).graph
+
+  private def built(s: SparkSession, emb: DataFrame, cacheKey: String): Built =
+    graft.SessionCache.memo(s, "knnd", cacheKey, (b: Built) =>
+      org.apache.spark.sql.graftbridge.GraftBridge.cachedAndMaterialized(b.graph)
+    )(buildAuto(s, emb, cacheKey))
 
   /** q248's delta rule: a FIXED ~50-vector delta at any corpus size
     * (vec_id % stride = 7 % stride, stride = n/50) — fixed-absolute
@@ -359,8 +317,7 @@ object KnnDescent {
     * re-descending the whole corpus. */
   private[graft] def admitDelta(s: SparkSession, baseEmb: DataFrame,
       deltaEmb: DataFrame, cacheKey: String): DataFrame = {
-    val gB = graph(s, baseEmb, cacheKey)
-    val r = radiusCache.synchronized { radiusCache((sessionKey(s), cacheKey)) }
+    val Built(gB, r, _) = built(s, baseEmb, cacheKey)
     val nBase = Similarity.corpusCount(baseEmb, cacheKey)
     val planes = Similarity.lshPool.take(Similarity.lshNPlanes(nBase))
     val all = baseEmb.union(deltaEmb)
@@ -370,7 +327,7 @@ object KnnDescent {
     // production scale this is the stored index relation a delta
     // admission reads, the q135 materialized-index pattern) instead of
     // re-running VecDot × planes over the corpus per consumer
-    val bucketed = graft.PersistTracker.tracked("knnd",
+    val bucketed = graft.SessionCache.tracked("knnd",
       all.select(col("vec_id"), col("embedding"),
         Similarity.lshBucket(col("embedding"), planes).as("bucket")))
     val flips1 = planes.indices.map(i =>
@@ -395,8 +352,8 @@ object KnnDescent {
     // times (its own cut, the reverse-repair pool, the frontier) and
     // is delta-sized — O(|delta|·occupancy·probes) for the seed,
     // O(|delta|·K²) per round
-    val seedP = graft.PersistTracker.tracked("knnd", seed)
-    var dg = graft.PersistTracker.tracked("knnd", cut(seedP))
+    val seedP = graft.SessionCache.tracked("knnd", seed)
+    var dg = graft.SessionCache.tracked("knnd", cut(seedP))
     // every (delta, ·) pair the admission SCORES feeds the reverse
     // repair below — not just the pairs that survive a top-K cut
     val scoredAll = scala.collection.mutable.ArrayBuffer[DataFrame](seedP)
@@ -437,11 +394,11 @@ object KnnDescent {
         .select(col("a.src").as("src"), col("b.nbr").as("nbr"))
         .union(dEdges)
         .distinct()
-      val scored = graft.PersistTracker.tracked("knnd",
+      val scored = graft.SessionCache.tracked("knnd",
         non.join(e1, "src").join(e2, "nbr")
           .select(col("src"), col("nbr"), cosC(col("e1"), col("e2")).as("cos")))
       scoredAll += scored
-      dg = graft.PersistTracker.tracked("knnd", truncate(s, cut(scored)))
+      dg = graft.SessionCache.tracked("knnd", truncate(s, cut(scored)))
     }
     // REVERSE REPAIR as ONE descent round for the delta-affected
     // neighborhood: each affected base node re-cuts its top-K over
@@ -468,7 +425,7 @@ object KnnDescent {
     // membership probe — set-semantic by definition — so the distinct
     // bought nothing but an exchange; the one result-bearing dedup is
     // the affCand distinct feeding the re-cut
-    val affected = graft.PersistTracker.tracked("knnd", frontier
+    val affected = graft.SessionCache.tracked("knnd", frontier
       .select(col("nbr").as("src"))
       .join(broadcast(deltaIds.withColumnRenamed("vec_id", "src")),
         Seq("src"), "left_anti"))
@@ -606,7 +563,7 @@ object KnnDescent {
     * so the extra round is bit-identical to an ordinary one. */
   private[graft] def descendOnce(s: SparkSession, emb: DataFrame,
       g: DataFrame, warm: Option[DataFrame] = None): DataFrame =
-    graft.PersistTracker.tracked("knnd", truncate(s, roundPlan(emb, g, warm)))
+    graft.SessionCache.tracked("knnd", truncate(s, roundPlan(emb, g, warm)))
 
   /** The PRE-TRUNCATION plan of one descent round — split from
     * [[descendOnce]] so the plan-shape suite can pin the round's
@@ -634,7 +591,7 @@ object KnnDescent {
   private[graft] def stages(s: SparkSession, emb: DataFrame,
       cacheKey: String, probeRadius: Int = 1,
       warm: Option[DataFrame] = None): IndexedSeq[DataFrame] = {
-    var g = graft.PersistTracker.tracked("knnd",
+    var g = graft.SessionCache.tracked("knnd",
       truncate(s, cut(seedScored(s, emb, cacheKey, probeRadius))))
     val out = scala.collection.mutable.ArrayBuffer(g)
     for (i <- 1 to Iters) {
@@ -669,7 +626,7 @@ object KnnDescent {
       val n = Similarity.corpusCount(e, d)
       val stride = math.max(1L, n / 200L)
       val probes = e.filter(col("vec_id") % stride === 0)
-      val exact = graft.PersistTracker.tracked("knnd",
+      val exact = graft.SessionCache.tracked("knnd",
         Similarity.cosineTopK(probes, e, K)
           .select(col("probe_id").as("src"), col("vec_id").as("nbr")))
       val sampled = graph(s, e, d).filter(col("src") % stride === 0)

@@ -672,62 +672,30 @@ object Similarity {
     * the driver collect, broadcast payload, and O(√n) per-row assignment
     * cost grow with the square root of the corpus, never linearly.
     */
-  /** Centroid broadcasts are cached per (sessionUUID, dataset): q31/q73
-    * and repeated invocations reuse one broadcast instead of leaking a
-    * new one per call (round-3 advisor finding). Keyed on the session
-    * UUID (identityHashCode can collide across sessions — a collision
-    * would hand one session a broadcast bound to another's SparkContext)
-    * and built under a lock so concurrent first calls can't both collect
-    * + broadcast and orphan the loser. */
-  private val centCache = scala.collection.mutable.Map
-    .empty[(String, String), org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]]
-
-  /** Destroy this session's cached centroid broadcasts (test/app
-    * teardown, or between corpus versions in a long-lived session). Only
-    * call once no outstanding DataFrame still references them. */
-  def releaseCaches(s: SparkSession): Unit = {
-    centCache.synchronized {
-      val id = sessionKey(s)
-      centCache.filterInPlace { case ((sid, _), bc) =>
-        if (sid == id) { bc.destroy(); false } else true
-      }
-      // Row counts are a property of the data, not the session, but a
-      // fixture REWRITTEN in-process (tests regenerating a dir) would
-      // otherwise serve a stale count to the next build (round-7 advisor
-      // finding) — teardown is the natural invalidation point, and the
-      // next build repays one count() job.
-      corpusCountCache.clear()
-    }
-    // the NN-descent graph rides Similarity's release surface so every
-    // existing teardown call site (Bench, Verify, TestSpark, the plan
-    // lock) covers it without new wiring
-    KnnDescent.releaseCaches(s)
-  }
-
   /** The cached-per-(session, dataset) coarse-quantizer broadcast shared
     * by the IVF paths (q31/q73/q77/q122) and the IVF+PQ composition
     * (q131): the deterministic multiplicative-hash sample of
-    * [[ivfK]](n) corpus vectors, sorted by id. */
+    * [[ivfK]](n) corpus vectors, sorted by id. One broadcast per
+    * (session, dataset) instead of a leaked one per call; concurrent
+    * first calls build it once. */
   private def centroidBroadcast(s: SparkSession, emb: DataFrame, cacheKey: String,
       kCells: Option[Int] = None)
       : org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]] =
-    centCache.synchronized {
-      centCache.getOrElseUpdate((sessionKey(s), cacheKey), {
-        // corpus-size-derived k (metadata-cheap count, computed once per
-        // (session, dataset) thanks to the cache); kCells overrides the
-        // √n rule for the RecallProbe's quantizer-dial measurement ONLY —
-        // every query path leaves it None so engine and oracle agree
-        val k = kCells.getOrElse(ivfK(emb.count()))
-        val cents: Array[(Long, Array[Float])] =
-          emb.select(col("vec_id"), col("embedding"))
-            .orderBy(pmod(col("vec_id") * lit(2654435761L), lit(999999937L)),
-              col("vec_id"))
-            .limit(k)
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-            .sortBy(_._1)
-        s.sparkContext.broadcast(cents)
-      })
+    graft.SessionCache.memo(s, "similarity", ("centroids", cacheKey)) {
+      // corpus-size-derived k (metadata-cheap count, computed once per
+      // (session, dataset) thanks to the cache); kCells overrides the
+      // √n rule for the RecallProbe's quantizer-dial measurement ONLY —
+      // every query path leaves it None so engine and oracle agree
+      val k = kCells.getOrElse(ivfK(emb.count()))
+      val cents: Array[(Long, Array[Float])] =
+        emb.select(col("vec_id"), col("embedding"))
+          .orderBy(pmod(col("vec_id") * lit(2654435761L), lit(999999937L)),
+            col("vec_id"))
+          .limit(k)
+          .collect()
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+          .sortBy(_._1)
+      s.sparkContext.broadcast(cents)
     }
 
   /** Nearest coarse cell of `v` — THE assignment rule (max rounded
@@ -800,16 +768,12 @@ object Similarity {
     heapTopK(cands, k)
   }
 
-  /** Corpus row counts cached per dataset directory (a property of the
-    * data, not the session — so child sessions and repeated Bench
-    * invocations all hit one entry, and there is nothing session-bound to
-    * release): q102 derives its plane count from this instead of running
-    * a fresh count() job per build (round-6 advisor finding). */
-  private val corpusCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
+  /** Corpus row counts memoized per (session, dataset): q102 and the
+    * NN-descent builds derive their plane count and audit stride from
+    * this instead of running a fresh count() job per build. */
   private[graft] def corpusCount(df: DataFrame, key: String): Long =
-    corpusCountCache.getOrElseUpdate(key, df.count())
+    graft.SessionCache.memo(df.sparkSession, "similarity", ("count", key))(
+      df.count())
 
   /** q102's hyperplane pool as DuckDB VALUES rows: the oracle carries the
     * exact double literals the Spark plan uses (Double.toString is the

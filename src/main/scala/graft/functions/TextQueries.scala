@@ -22,12 +22,12 @@ object TextQueries {
   private def tokens = filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "")
 
   /** Persisted relations per session UUID (q101's token relation, q106's
-    * MG summary), tracked so [[releaseCaches]] can unpersist them — the
-    * same teardown contract Dedup and Similarity expose. CacheManager
+    * MG summary), tracked in the session cache, which unpersists them on
+    * release. CacheManager
     * dedupes by canonicalized plan, so re-registering an equivalent plan
     * costs nothing. */
   private def tracked(df: DataFrame): DataFrame =
-    graft.PersistTracker.tracked("text", df)
+    graft.SessionCache.tracked("text", df)
 
   /** The DISTRIBUTED total-order vocabulary rank shared by q178 and
     * q189 — (tok, n, rk) with rk = row_number of the (n DESC, tok ASC)
@@ -74,11 +74,6 @@ object TextQueries {
         row_number().over(
           W.partitionBy(col("n"), col("pfx")).orderBy(col("tok"))))
   }
-
-  /** Unpersist this session's cached relations (test/app teardown). Only
-    * call once no outstanding DataFrame still references them. */
-  def releaseCaches(s: SparkSession): Unit =
-    graft.PersistTracker.release("text", s)
 
   /** q206's guardrailed target-mix weight relation, shared with q214's
     * epoch sampler: per language the raw→clipped→renormalized chain —

@@ -34,16 +34,10 @@ import org.apache.spark.sql.types.StructType
 object CurationAudits {
 
   /** Persisted relations (q243's hashed-bigram stream, consumed by both
-    * the model rollup and the doc scoring) tracked through the shared
-    * [[graft.PersistTracker]] — the Dedup/TextQueries teardown
-    * contract. */
+    * the model rollup and the doc scoring) tracked in the session
+    * cache. */
   private def tracked(df: DataFrame): DataFrame =
-    graft.PersistTracker.tracked("audits", df)
-
-  /** Unpersist this module's tracked relations for `s` (test/app
-    * teardown, between corpus versions). */
-  def releaseCaches(s: SparkSession): Unit =
-    graft.PersistTracker.release("audits", s)
+    graft.SessionCache.tracked("audits", df)
 
   /** q243's hashed-bigram feature space (DSIR's n-gram hashing, Xie et
     * al. 2023 §3): buckets for the two multinomials. Interpolated into

@@ -79,49 +79,14 @@ import org.apache.spark.sql.functions._
   */
 object CurationPipeline {
 
-  /** Per-session memoized provenance relation (q221/q222 share one
-    * build — the [[graft.functions.Dedup.cachedComponents]] pattern;
-    * the bench-gram collect and broadcast run once per (session,
-    * dataset)). */
-  private val provCache =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
-  /** Unpersist this session's cached relations (test/app teardown). */
-  def releaseCaches(s: SparkSession): Unit = {
-    provCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      provCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    epochBaseCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      epochBaseCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    gramCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      gramCache.filterInPlace { case ((sid, _), bc) =>
-        if (sid == id) { bc.destroy(); false } else true
-      }
-    }
-    advancingCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      advancingCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    incrReleaseCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      incrReleaseCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    graft.PersistTracker.release("curation", s)
-  }
-
   /** The per-doc provenance relation: (doc_id, source, lang, verdict)
     * over the corpus slice, verdict ∈ {url_dup, repetition, quality,
     * cluster_dup, contaminated, keep} — the first gate that killed the
-    * doc, in production order. */
+    * doc, in production order. Memoized per (session, dataset):
+    * q221/q222 share one build, and the bench-gram collect and broadcast
+    * run once. */
   private[graft] def provenance(s: SparkSession, d: String): DataFrame =
-    provCache.synchronized {
-      provCache.getOrElseUpdate((graft.Tables.sessionKey(s), d),
-        buildProvenance(s, d))
-    }
+    graft.SessionCache.memo(s, "curation", ("prov", d))(buildProvenance(s, d))
 
   /** Distinct word 8-grams of the held-out benchmark slice, collected
     * and wrapped in a JVM set for broadcast. BOUNDED by construction —
@@ -129,22 +94,17 @@ object CurationPipeline {
     * adjudication) — so collect + broadcast is the production plan: the
     * corpus probes it map-side and the gram-keyed shuffle of the exact
     * join (q74) never happens at any corpus scale. */
-  /** Memo for [[benchGramSet]], keyed like [[provCache]]: the streaming
+  /** Memoized per (session, dataset) like [[provenance]]: the streaming
     * form (q232) probes the same frozen gram set on EVERY micro-batch,
     * and re-collecting an unchanged eval suite per batch is pure driver
     * churn. Only default-cap builds are cached (the fail-fast spec
     * drives non-default caps). */
-  private val gramCache = scala.collection.mutable.Map.empty[(String, String),
-    org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]]]
-
   private[graft] def benchGramSet(s: SparkSession, d: String,
       cap: Int = BenchGramCap)
       : org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]] =
     if (cap == BenchGramCap)
-      gramCache.synchronized {
-        gramCache.getOrElseUpdate((graft.Tables.sessionKey(s), d),
-          buildBenchGramSet(s, d, cap))
-      }
+      graft.SessionCache.memo(s, "curation", ("grams", d))(
+        buildBenchGramSet(s, d, cap))
     else buildBenchGramSet(s, d, cap)
 
   private def buildBenchGramSet(s: SparkSession, d: String, cap: Int)
@@ -260,7 +220,7 @@ object CurationPipeline {
     val quality = CorpusCleaning.qualityLogitOf(corpus)
       .select(col("doc_id"), col("score"))
 
-    val pre = graft.PersistTracker.tracked("curation",
+    val pre = graft.SessionCache.tracked("curation",
       corpus.select(col("doc_id"), col("source"), col("lang"))
         .join(urlKeep, "doc_id")
         .join(repContam, "doc_id")
@@ -284,7 +244,7 @@ object CurationPipeline {
       .when(col("crk") =!= 1, "cluster_dup")
       .when(col("contaminated"), "contaminated")
       .otherwise("keep")
-    graft.PersistTracker.tracked("curation",
+    graft.SessionCache.tracked("curation",
       pre.join(ranked, Seq("doc_id"), "left_outer")
         .select(col("doc_id"), col("source"), col("lang"),
           verdict.as("verdict")))
@@ -315,16 +275,11 @@ object CurationPipeline {
     * advisor: each built and persisted its own identical copy, paying
     * the corpus-sized copies/hash/rendezvous computation and cache
     * footprint twice in a session running both audits). */
-  private val epochBaseCache =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
   private def sharedEpochBase(s: SparkSession, d: String): DataFrame =
-    epochBaseCache.synchronized {
-      epochBaseCache.getOrElseUpdate((graft.Tables.sessionKey(s), d),
-        graft.PersistTracker.tracked("curation",
-          epochBaseOf(documents(s, d),
-            graft.functions.TextQueries.epochMultipliers(s, d), 8)))
-    }
+    graft.SessionCache.memo(s, "curation", ("epochBase", d))(
+      graft.SessionCache.tracked("curation",
+        epochBaseOf(documents(s, d),
+          graft.functions.TextQueries.epochMultipliers(s, d), 8)))
 
   /** The policy-independent prefix of the exporter: copies, content
     * hash, rendezvous shard — everything BEFORE the packing window.
@@ -647,37 +602,32 @@ object CurationPipeline {
     * dataset) — the round-15 verdict's store-lifecycle sharing ask;
     * before this, each consumer re-staged and re-ran the full
     * simulation (~14 s of the sf0.01 drive). Only a COMPLETED run is
-    * cached (the body runs inside getOrElseUpdate — a thrown staging
-    * error caches nothing). Cleared by [[releaseCaches]], so Bench's
-    * per-query isolation still prices each headline entry honestly. */
-  private val advancingCache =
-    scala.collection.mutable.Map.empty[(String, String), (String, String)]
-
+    * cached (a thrown staging error caches nothing). Released with the
+    * session's caches, so Bench's per-query isolation still prices each
+    * headline entry honestly. */
   private[graft] def advancingRun(s: SparkSession, d: String): (String, String) =
-    advancingCache.synchronized {
-      advancingCache.getOrElseUpdate((graft.Tables.sessionKey(s), d), {
-        val tag = graft.Tables.datasetTag(d)
-        val sinkDir = graft.Tables.scratchDir(s, "q237_sink_" + tag)
-        val storeDir = graft.Tables.scratchDir(s, "q237_store_" + tag)
-        val urlDir = graft.Tables.scratchDir(s, "q237_urls_" + tag)
-        val manDir = graft.Tables.scratchDir(s, "q237_manifest_" + tag)
-        resetBatchTable(s, verdictSinkSchema, sinkDir)
-        resetBatchTable(s, exportManifestSchema, manDir)
-        seedAdvancingState(s, d, storeDir, urlDir)
-        val inDir = stageAdvancingBatches(s, d)
-        val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*.parquet")
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            advancingIngestBatch(s, d, batch, id, sinkDir, storeDir,
-              urlDir, Some(manDir))
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        (sinkDir, manDir)
-      })
+    graft.SessionCache.memo(s, "curation", ("advancing", d)) {
+      val tag = graft.Tables.datasetTag(d)
+      val sinkDir = graft.Tables.scratchDir(s, "q237_sink_" + tag)
+      val storeDir = graft.Tables.scratchDir(s, "q237_store_" + tag)
+      val urlDir = graft.Tables.scratchDir(s, "q237_urls_" + tag)
+      val manDir = graft.Tables.scratchDir(s, "q237_manifest_" + tag)
+      resetBatchTable(s, verdictSinkSchema, sinkDir)
+      resetBatchTable(s, exportManifestSchema, manDir)
+      seedAdvancingState(s, d, storeDir, urlDir)
+      val inDir = stageAdvancingBatches(s, d)
+      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
+      val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*.parquet")
+      val q = src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          advancingIngestBatch(s, d, batch, id, sinkDir, storeDir,
+            urlDir, Some(manDir))
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      (sinkDir, manDir)
     }
 
   /** One micro-batch of q237: verdicts land under the batch's own
@@ -756,14 +706,8 @@ object CurationPipeline {
       grams: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]],
       labels: DataFrame, releases: Seq[(Long, String)],
       scratchTag: String): DataFrame =
-    incrReleaseCache.synchronized {
-      incrReleaseCache.getOrElseUpdate(
-        (graft.Tables.sessionKey(s), scratchTag),
-        incrReleaseLineageBuild(s, all, grams, labels, releases, scratchTag))
-    }
-
-  private val incrReleaseCache =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
+    graft.SessionCache.memo(s, "curation", ("incrRelease", scratchTag))(
+      incrReleaseLineageBuild(s, all, grams, labels, releases, scratchTag))
 
   private def incrReleaseLineageBuild(s: SparkSession, all: DataFrame,
       grams: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]],

@@ -181,16 +181,10 @@ object Multimodal {
     hash
   }
 
-  /** Persisted relations (q121's hash relation) tracked through the
-    * shared [[graft.PersistTracker]] so [[releaseCaches]] can unpersist
-    * them — the same teardown contract Dedup/TextQueries expose. */
+  /** Persisted relations (q121's hash relation) tracked in the session
+    * cache, which unpersists them on release. */
   private def tracked(df: DataFrame): DataFrame =
-    graft.PersistTracker.tracked("multimodal", df)
-
-  /** Unpersist this session's cached relations (test/app teardown). Only
-    * call once no outstanding DataFrame still references them. */
-  def releaseCaches(s: SparkSession): Unit =
-    graft.PersistTracker.release("multimodal", s)
+    graft.SessionCache.tracked("multimodal", df)
 
   /** q121's engine over an arbitrary (doc_id, img) relation: aHash every
     * image map-side (blobs never leave the map side), then the

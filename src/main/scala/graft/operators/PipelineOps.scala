@@ -238,7 +238,7 @@ object PipelineOps {
     // pass as broadcasts; the only corpus-sized exchange is the md5
     // window inside the verdict (exactly q79's cost).
     "q136_curation_run" -> ((s, d) => {
-      val v = graft.PersistTracker.tracked("pipeline",
+      val v = graft.SessionCache.tracked("pipeline",
         CorpusCleaning.cleanVerdict(s, d))
       val kept = v.filter(col("reason") === "keep")
       val totals = kept.groupBy(col("source")).agg(count(lit(1)).as("n_clean"))
@@ -577,7 +577,8 @@ object PipelineOps {
         // min then prices the SKETCH path (the production-relevant
         // number, q207's cost) with the exact leg's honest cold cost
         // visible as run 1 of the runs array.
-        val basic = memoExactProfile(s, s"$d#$tbl", {
+        val basic = graft.SessionCache.memo(s, "pipeline", s"$d#$tbl")(
+            graft.SessionCache.tracked("pipeline", {
           // split exactly like q166 (r18): the string min/max buffers
           // demoted the combined aggregate to SortAggregate, sorting the
           // Expand output per table — the NDV leg alone hash-aggregates
@@ -602,7 +603,7 @@ object PipelineOps {
                 col(s"${c}__max").as("max_val"),
                 col(s"${c}__ndv").as("exact_ndv"))): _*)).as("kv"))
             .select(col("kv.*"))
-        })
+        }))
         // second scan: the bounded-state KMV path — melt stays map-side,
         // the pre-cut bounds what shuffles
         val hashes = df.select(explode(array(cols.map(c =>
@@ -759,7 +760,7 @@ object PipelineOps {
       // the MATERIALIZED sketch table: persisted so its three consumers
       // (window union, window-width count, and the merge cut) share one
       // events pass — the "reduce once, merge forever" contract
-      val sk = graft.PersistTracker.tracked("pipeline",
+      val sk = graft.SessionCache.tracked("pipeline",
         graft.plans.TopKPerGroup.topK(
           graft.functions.TextQueries.kmvPartitionMins(keys, K).distinct()
             .withColumnRenamed("lang", "day"),
@@ -1110,33 +1111,6 @@ object PipelineOps {
         // Double.MinValue (round-10 advisor finding, latent on this
         // fixture but a real divergence from the batch-recompute oracle)
         greatest(col("max_value"), col("d_max")).as("max_value"))
-
-  /** q183's memoized exact-NDV audit leg, per (session, dataset#table)
-    * — see the q183 query comment (round-17 verdict #5). Tracked under
-    * the module's PersistTracker namespace so [[releaseCaches]] (and
-    * Bench's between-query sweep) releases the blocks; the handle map
-    * is cleared alongside so a later call rebuilds instead of serving
-    * a stripped-blocks handle (the r16 q240 lesson). */
-  private val exactProfileCache = scala.collection.mutable.Map
-    .empty[(String, String), DataFrame]
-
-  private def memoExactProfile(s: SparkSession, key: String,
-      build: => DataFrame): DataFrame =
-    exactProfileCache.synchronized {
-      exactProfileCache.getOrElseUpdate((graft.Tables.sessionKey(s), key),
-        graft.PersistTracker.tracked("pipeline", build))
-    }
-
-  /** Unpersist this session's tracked relations (q136's verdict cache;
-    * q183's exact-leg memo; test/app teardown) — the shared module
-    * contract. */
-  def releaseCaches(s: SparkSession): Unit = {
-    exactProfileCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      exactProfileCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    graft.PersistTracker.release("pipeline", s)
-  }
 
   /** q162's replay text, shared verbatim with the q163 gate's PSI leg
     * (the q132 compose-the-sibling's-oracle discipline). */

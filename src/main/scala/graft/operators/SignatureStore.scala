@@ -156,11 +156,6 @@ object SignatureStore {
     delta.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
 
-  /** Unpersist this session's tracked relations (q129's admission pairs;
-    * test/app teardown) — the same contract the other modules expose. */
-  def releaseCaches(s: SparkSession): Unit =
-    graft.PersistTracker.release("sigstore", s)
-
   /** COMPACT the store: roll the seed plus every appended batch with
     * `batch_id <= throughBatch` into a fresh store generation at
     * `newDir` (everything lands as partition -1). The small-files
@@ -230,7 +225,7 @@ object SignatureStore {
       // pairs persist (session-tracked): the survivor append below and
       // the returned relation would otherwise each execute the full
       // admission subplan (round-10 review finding)
-      val pairs = graft.PersistTracker.tracked("sigstore",
+      val pairs = graft.SessionCache.tracked("sigstore",
         admitShingles(s, deltaSh, dir, beforeBatch = 0L))
       appendSurvivorShingles(s, deltaSh, pairs, dir, 0L)
       pairs.orderBy(col("doc_a"), col("doc_b"))
@@ -258,7 +253,7 @@ object SignatureStore {
       // shared shingle derivation for wave A (r19 — see q129): admit
       // and append read one tracked shingle relation
       val deltaASh = Dedup.trackedShingles(s, deltaA)
-      val pairsA = graft.PersistTracker.tracked("sigstore",
+      val pairsA = graft.SessionCache.tracked("sigstore",
         admitShingles(s, deltaASh, dir, beforeBatch = 0L))
       appendSurvivorShingles(s, deltaASh, pairsA, dir, 0L)
       compact(s, dir, gen2, throughBatch = 0L)
@@ -286,7 +281,7 @@ object SignatureStore {
       val docs = documents(s, d)
       build(s, docs.filter(!(col("source") <=> "src0")), dir)
       val delta = docs.filter(col("source") === "src0")
-      val pairs0 = graft.PersistTracker.tracked("sigstore",
+      val pairs0 = graft.SessionCache.tracked("sigstore",
         admit(s, delta, dir, beforeBatch = 0L))
       val forgetIds = pairs0.filter(col("doc_b") % 2 === 0)
         .select(col("doc_b").as("doc_id")).distinct()

@@ -76,7 +76,7 @@ object RecallProbe {
     // legs' persisted stages (r16's nnd_graph_secs was a warm read of
     // the auto leg's radius-1 stages — 2.1 s at x30 where the true
     // cold build is ~10x that).
-    def coldKnnd(): Unit = graft.functions.KnnDescent.releaseCaches(spark)
+    def coldKnnd(): Unit = graft.SessionCache.release(spark, "knnd")
     coldKnnd()
     val t2 = System.nanoTime()
     val nndAll = graft.functions.KnnDescent
@@ -141,8 +141,7 @@ object RecallProbe {
       s""""recall_nnd_auto_at3":${r4(hitAuto.toDouble / nExact3)},""" +
       s""""nnd_auto_secs":${r4(autoSecs)},"n_edges_nnd_auto":$nEdgesAuto,""" +
       s""""nnd_auto_recall_micro":$autoLegsJson}""")
-    graft.functions.KnnDescent.releaseCaches(spark)
-    graft.functions.Similarity.releaseCaches(spark)
+    graft.SessionCache.releaseAll(spark)
     spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import graft.apps.RefApps
 import graft.core.MapReduceJob
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Behavioral analogs of the reference's probe apps (SURVEY.md §2.2
   * A4-A6), asserted via SparkListener instead of marker files:
@@ -27,16 +28,28 @@ class BehavioralSpec extends TestSpark {
 
   private class ProbeListener extends SparkListener {
     val attempts = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
-    val live = new AtomicInteger(0)
-    @volatile var maxLive = 0
+    /** (launchTime, finishTime) of every finished task, in ms. */
+    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     override def onTaskStart(t: SparkListenerTaskStart): Unit = {
-      val n = live.incrementAndGet()
-      maxLive = math.max(maxLive, n)
       attempts
         .computeIfAbsent(s"${t.stageId}-${t.taskInfo.index}", _ => new AtomicInteger)
         .incrementAndGet()
+      ()
     }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = { live.decrementAndGet(); () }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      spans.add((t.taskInfo.launchTime, t.taskInfo.finishTime)); ()
+    }
+
+    /** The most tasks whose [launch, finish) intervals overlap at one
+      * instant: measured from the tasks' own times, not from the order
+      * the listener bus delivers their events in. */
+    def maxOverlap: Int = {
+      // at equal times a finish sorts before a launch, so intervals that
+      // only touch do not count as overlapping
+      val edges = spans.asScala.toSeq.flatMap { case (l, f) => Seq((l, 1), (f, -1)) }
+        .sortBy { case (time, d) => (time, d) }
+      edges.scanLeft(0)(_ + _._2).max
+    }
   }
 
   /** The listener bus delivers asynchronously (and its waitUntilEmpty is
@@ -45,7 +58,7 @@ class BehavioralSpec extends TestSpark {
     var last = -1
     var stable = 0
     while (stable < 3) {
-      val now = probe.attempts.size() * 1000 + probe.live.get()
+      val now = probe.attempts.size() * 1000 + probe.spans.size()
       if (now == last) stable += 1 else { stable = 0; last = now }
       Thread.sleep(200)
     }
@@ -71,8 +84,8 @@ class BehavioralSpec extends TestSpark {
     try {
       MapReduceJob.run(spark, corpusGlob, RefApps.WordCount, numReduce = 10).collect()
       waitForListener(probe)
-      assert(probe.maxLive >= 2,
-        s"expected >=2 concurrent tasks, saw max ${probe.maxLive}")
+      assert(probe.maxOverlap >= 2,
+        s"expected >=2 concurrent tasks, saw max ${probe.maxOverlap}")
     } finally spark.sparkContext.removeSparkListener(probe)
   }
 
@@ -155,7 +168,7 @@ class BehavioralSpec extends TestSpark {
           .map { i => Thread.sleep(50); i }.count()
         assert(n == 64)
         waitForListener(probe)
-        assert(probe.maxLive >= 2, s"trial $trial: no concurrency observed")
+        assert(probe.maxOverlap >= 2, s"trial $trial: no concurrency observed")
       } finally spark.sparkContext.removeSparkListener(probe)
     }
   }

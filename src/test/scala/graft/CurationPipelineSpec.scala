@@ -991,7 +991,7 @@ class CurationPipelineSpec extends TestSpark {
     assert(ex.getMessage.contains("cap 10"))
     // and the default cap admits the fixture slice (the happy path);
     // default-cap builds are session-cached, so do NOT destroy — later
-    // tests share this broadcast (releaseCaches owns its teardown)
+    // tests share this broadcast (the session cache owns its teardown)
     val bc = CurationPipeline.benchGramSet(spark, sf0001)
     assert(bc.value.size() > 0 && bc.value.size() <= CurationPipeline.BenchGramCap)
   }
@@ -1165,7 +1165,7 @@ class CurationPipelineSpec extends TestSpark {
   }
 
   override def afterAll(): Unit = {
-    CurationPipeline.releaseCaches(spark)
+    SessionCache.release(spark, "curation")
     super.afterAll()
   }
 }

@@ -1133,7 +1133,7 @@ class DedupSimilaritySpec extends TestSpark {
     val after = g2.orderBy(col("src"), col("cos").desc, col("nbr")).collect()
     assert(before.sameElements(after),
       "the rebuild must reproduce the graph bit-for-bit")
-    graft.functions.KnnDescent.releaseCaches(spark)
+    SessionCache.release(spark, "knnd")
   }
 
   test("q240 sampled audit: recounts from q231's edges vs in-JVM brute-force exact on the sample") {

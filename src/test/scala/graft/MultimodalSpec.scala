@@ -154,7 +154,7 @@ class MultimodalSpec extends TestSpark {
         s"admission must scan only the stored index:\n${scans.mkString("\n").take(1500)}")
     } finally {
       spark.conf.set("spark.sql.maxMetadataStringLength", prevLen)
-      Multimodal.releaseCaches(spark)
+      SessionCache.release(spark, "multimodal")
     }
   }
 

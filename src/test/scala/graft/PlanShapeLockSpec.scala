@@ -60,7 +60,7 @@ class PlanShapeLockSpec extends TestSpark {
     // q227 gained one exchange in the full suite vs testOnly), so the
     // lock always builds from cleared session caches — the same state
     // in both run modes
-    SparkEntry.releaseCaches(spark)
+    SessionCache.releaseAll(spark)
     spark.catalog.clearCache()
     val names = Bench.headline.filterNot(excluded)
     val observed = names.map(n => n -> shapeOf(n))

@@ -31,6 +31,6 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
     // this suite's per-session caches (persisted cluster labels, centroid
     // broadcasts) so nothing pins executor memory across suites; the next
     // consumer rebuilds them.
-    SparkEntry.releaseCaches(spark)
+    SessionCache.releaseAll(spark)
   }
 }
