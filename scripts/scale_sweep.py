@@ -77,12 +77,7 @@ for tag, scale, d in DIRS:
     results[tag] = {"scale": scale, "dir": d,
                     "fixture_mode": fixture_mode(d),
                     "constants": full["derived_constants"],
-                    "queries": full["queries"], "runs": full.get("runs", {}),
-                    # per-query 1-min loadavg (round-12 verdict ask #5):
-                    # attributes any inflated entry to machine state
-                    "query_loadavg": full.get("query_loadavg", {}),
-                    "loadavg_before": full.get("loadavg_before"),
-                    "loadavg_after": full.get("loadavg_after")}
+                    "queries": full["queries"], "runs": full.get("runs", {})}
     shutil.copyfile(f"{ROOT}/bench_logs/bench_full_last.json",
                     f"/tmp/sweep_full_{tag}.json")
 
@@ -104,7 +99,6 @@ for q in results["x1"]["queries"]:
         if light_unscaled:
             row[f"fixture_note_{s}"] = \
                 "light fixture does not scale this query's tables"
-    row["load"] = {s: results[s]["query_loadavg"].get(q) for s in results}
     if t1 > 0:
         expo[q] = row
 

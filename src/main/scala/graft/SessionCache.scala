@@ -116,20 +116,6 @@ private[graft] object SessionCache {
     ()
   }
 
-  /** Persist-state dump of `ns`'s tracked relations: one entry per
-    * tracked DataFrame with its cached RDD id, current storage level and
-    * live block count — the signature of the stripped-blocks-but-live-
-    * handle state is `level=None cached_parts=0/N` on a relation a
-    * consumer is about to reuse. JSON-array string. */
-  def forensic(s: SparkSession, ns: String): String = {
-    val dfs = relations.synchronized {
-      relations.get((Tables.sessionKey(s), ns))
-        .map(_.values.map(_.df).toList).getOrElse(Nil)
-    }
-    dfs.map(df => "\"" + GraftBridge.cacheForensic(df) + "\"")
-      .mkString("[", ",", "]")
-  }
-
   /** Drop `ns`'s memos and tracked relations for `s`. A build still in
     * flight is left alone: its value lands after the release. */
   def release(s: SparkSession, ns: String): Unit =

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Queries the drive runs at once. */
+  private val PoolThreads = 4
+
   /** Top-level columns the driver's canonicalizer cannot sort: its pandas
     * `sort_values` factorizes raw cell values, and ndarray/dict cells are
     * unhashable (round-6 q104 shipped unverified exactly this way — the
@@ -79,19 +82,15 @@ object Verify {
     val toRun = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }.toSeq
     // Queries are mutually independent — each stages its own scratch
-    // dirs, the module memo caches are synchronized, Spark job submission
-    // is thread-safe on one session, and no query writes this session's
+    // dirs, SessionCache locks per entry, Spark job submission is
+    // thread-safe on one session, and no query writes this session's
     // conf (stream drives set theirs on a child session, see
     // ChildSession) — so every query runs on a small thread pool.
-    val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    if (nThreads <= 1) toRun.foreach { case (n, f) => runOne(n, f) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-      val cs = toRun.map { case (n, f) =>
-        pool.submit(new Runnable { def run(): Unit = runOne(n, f) }) }
-      cs.foreach(_.get())
-      pool.shutdown()
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(PoolThreads)
+    val cs = toRun.map { case (n, f) =>
+      pool.submit(new Runnable { def run(): Unit = runOne(n, f) }) }
+    cs.foreach(_.get())
+    pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -79,25 +79,6 @@ object GraftBridge {
         .getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  /** One-line persist-state forensic for a tracked DataFrame: the
-    * CacheManager registration, the cached RDD's id + current storage
-    * level, and how many of its partitions the block manager actually
-    * holds right now. Bench dumps this between a query's min-of-N runs
-    * so a stripped-blocks-but-live-handle state (see
-    * [[cachedAndMaterialized]]) is visible in the artifact. */
-  def cacheForensic(df: org.apache.spark.sql.DataFrame): String = {
-    val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    s.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .map { cd =>
-        val rdd = cd.cachedRepresentation.cacheBuilder.cachedColumnBuffers
-        val cached = s.sparkContext.getRDDStorageInfo
-          .find(_.id == rdd.id).map(_.numCachedPartitions).getOrElse(0)
-        s"rdd=${rdd.id} level=${rdd.getStorageLevel.description} " +
-          s"cached_parts=$cached/${rdd.partitions.length}"
-      }.getOrElse("uncached")
-  }
-
   /** Unload every loaded streaming state-store provider on this JVM —
     * closes RocksDB instances (and their native scratch) left behind by
     * finished streaming queries. `StateStore.unloadAll` is private[sql];
