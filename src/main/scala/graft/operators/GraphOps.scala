@@ -1,9 +1,12 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph dataflow — the Pregel-shaped workload class the engine
   * had not yet demonstrated beyond connected components (q72). PageRank
@@ -24,14 +27,15 @@ import org.apache.spark.sql.functions._
   * replays every rank BIT-EXACTLY at any scale — the same trick as the
   * q125 hash-rate arithmetic.
   *
-  * Scale shape: edges and degrees are computed once and persisted; each
-  * iteration is ONE shuffle (groupBy dst of the contribution messages —
-  * map-side partial sums first), which is the minimum any message-passing
-  * round costs. Lineage is truncated with checkpoints every few rounds
-  * exactly as [[graft.functions.Dedup.connectedComponents]] does, so the
-  * plan stays constant-size no matter the iteration count. No per-node
-  * driver state: the only driver-side values are the two scalars n (node
-  * count) and the fixed iteration count.
+  * Scale shape: PageRank is the canonical RDD loop. The adjacency is
+  * hash-partitioned by src and persisted once; the ranks share its
+  * partitioner, so a round is one narrow join plus one shuffle of
+  * map-side partial sums (the minimum any message-passing round costs),
+  * and all ten rounds run in a single job. No per-node driver state: the
+  * only driver-side values are the node count n and the fixed iteration
+  * count. Label propagation is a DataFrame loop that cuts lineage with
+  * [[truncate]] every round, so its plan stays constant-size whatever the
+  * round count.
   */
 object GraphOps {
 
@@ -127,8 +131,8 @@ object GraphOps {
       // cache layout examined in r18 and left alone: each hop's join
       // broadcasts the runtime-small frontier (AQE, from real sizes),
       // so the cached edge relation is scanned but never shuffled; a
-      // dst-keyed repartition before the cache (the pagerank layout)
-      // was measured a net loss here — it adds a corpus-sized exchange
+      // dst-keyed repartition before the cache was measured a net
+      // loss here — it adds a corpus-sized exchange
       // to save per-hop distincts that are only frontier-sized
       val edges = tradeEdges(s, d).persist()
       val perHop = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -305,12 +309,13 @@ object GraphOps {
     // HashAggregate end-to-end, map-side partial aggregation, no sort.
     // (A max(struct(cnt, -lbl)) would pick the same row but a struct
     // buffer demotes the aggregate to SortAggregate — the q166 trap.)
-    // Join strategy, size-gated like [[pagerank]] (guide §3.1): the
-    // label relation is node-sized — broadcast it while it fits and,
-    // with a dst-partitioned edge relation (HashPartitioning(dst)
-    // satisfies the ClusteredDistributions of BOTH aggregates: keys
-    // (dst, lbl) and (node = dst)), a round plans with ZERO exchanges.
-    // Past the gate the planner keeps its own choice.
+    // Join strategy, size-gated (guide §3.1): the label relation is
+    // node-sized — broadcast it while it fits and, with a dst-partitioned
+    // edge relation (HashPartitioning(dst) satisfies the
+    // ClusteredDistributions of BOTH aggregates: keys (dst, lbl) and
+    // (node = dst)), a round plans with ZERO exchanges. Past the gate the
+    // planner keeps its own choice. The gate's conf key keeps the name it
+    // had when pagerank shared it.
     val bcastNodes = s.conf.getOption("spark.graft.pagerank.bcastMaxNodes")
       .map(_.toLong).getOrElse(4000000L)
     val small = labels.count() <= bcastNodes
@@ -446,80 +451,50 @@ object GraphOps {
     * so there are no dangling nodes and the per-round message aggregate
     * covers the full node set without a spine join. Returns
     * (node, pr) with Σpr ≤ [[Mass]] (each truncating division loses
-    * < 1 unit). */
+    * < 1 unit). Node ids may be of any type: the kernel only hashes and
+    * compares them.
+    *
+    * The rounds run as ONE RDD job: the adjacency (src → its dsts) is
+    * hash-partitioned on the session's shuffle width and persisted once,
+    * and the ranks carry the same partitioner, so each round's
+    * adjacency ⋈ ranks is narrow and the round's only shuffle is the
+    * map-side-combined message sum back onto that partitioner (the
+    * reduceByKey). */
   private[graft] def pagerank(s: SparkSession, edges: DataFrame): DataFrame = {
-    // Persisted: deg is node-sized, but its lineage is the full edge
-    // derivation (for q152 that's an orders⋈lineitem join + distinct);
-    // the cache serves its three consumers below — the adj build, the
-    // n count, and the initial rank — off one computation.
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
+    val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj = edges.select(col("src"), col("dst")).rdd
+      .map(r => (r.get(0), r.get(1)))
+      .groupByKey(part)
+      .mapValues(_.toArray)
       .persist()
-    // n is a 1-row aggregate pulled to the driver because the DRIVER
-    // loops: base rank and the initial mass split are loop constants,
-    // not data (q29-count precedent; cheap metadata-scale action).
-    val n = deg.count()
-    // Join strategy + cache layout for the per-round join, picked
-    // DELIBERATELY (r18 optimization, guide §2.4/§3.1). The rank
-    // relation is node-sized (16 bytes/row); when it fits a broadcast
-    // comfortably the whole round collapses to ZERO exchanges: the rank
-    // side broadcasts (no rank shuffle, and no per-round AQE replanning
-    // — the planner starts each round at SortMergeJoin and only
-    // converts at runtime; the explicit broadcast alone measured
-    // 8.3 s → 6.9 s for the ten-round kernel at sf0.1), and the cached
-    // adjacency is partitioned by DST, so the message aggregate's
-    // required clustering (node = dst) is already satisfied by the
-    // BHJ-preserved cache partitioning — the per-round shuffle of the
-    // partially-aggregated messages disappears outright. Size-gated,
-    // not unconditional: past the gate (default 4M nodes ≈ 64 MB
-    // framed, well under the 8 GB/512M-row broadcast cap but
-    // respectful of driver+executor copies) the rank relation must
-    // shuffle, so the adjacency caches partitioned by SRC instead —
-    // each round then re-shuffles only the node-sized rank side and
-    // the edge-sized side never moves (the pre-r18 layout). At 100 TB
-    // the rank relation is cluster-sized and takes the src branch.
-    // Parameterized for production via spark.graft.pagerank.bcastMaxNodes.
-    val bcastNodes = s.conf.getOption("spark.graft.pagerank.bcastMaxNodes")
-      .map(_.toLong).getOrElse(4000000L)
-    val small = n <= bcastNodes
-    // (src, dst, deg(src)) — the per-iteration join input, built once.
-    val adj = edges.join(deg.select(col("node").as("src"), col("deg")), "src")
-      .repartition(if (small) col("dst") else col("src"))
-      .persist()
+    // n and the loop constants live on the driver, because the driver
+    // loops; every node is a src, so the adjacency count is the node count
+    val n = adj.count()
     val base = (100L - Damp) * Mass / (100L * n)
-    var pr = deg.select(col("node"), lit(Mass / n).as("pr"))
-    for (i <- 1 to Iters) {
-      val nxt = pagerankRound(adj, pr, small, base)
-      // truncate lineage every 8 rounds (and on the last: an eager
-      // checkpoint, so the result is materialized and the adj cache can
-      // be dropped with no recompute): keeps the analyzed tree
-      // constant-size over any iteration count while paying as few
-      // mid-loop materializations as possible
-      pr = if (i % 8 == 0 || i == Iters) truncate(s, nxt) else nxt
+    val p0 = Mass / n
+    var ranks: RDD[(Any, Long)] = adj.mapValues(_ => p0)
+    for (_ <- 1 to Iters) {
+      // partition i of adj and of ranks holds the same srcs (one
+      // partitioner), so the join is a per-partition hash lookup. RDD.join
+      // would be narrow too, but its cogroup re-estimates the size of every
+      // buffered adjacency array: ten rounds over an 83k-edge graph took
+      // ~2.5 s that way against ~0.9 s this way (local[4]).
+      ranks = adj.zipPartitions(ranks) { (srcs, prs) =>
+        val pr = prs.toMap
+        srcs.flatMap { case (src, dsts) =>
+          pr.get(src).iterator.flatMap { p =>
+            val m = Damp * p / (100L * dsts.length)
+            dsts.iterator.map(d => (d, m))
+          }
+        }
+      }.reduceByKey(part, _ + _).mapValues(base + _)
     }
+    val schema = StructType(Seq(edges.schema("src").copy(name = "node"),
+      StructField("pr", LongType, nullable = false)))
+    // eager: the ranks are materialized before the adjacency is dropped
+    val pr = truncate(s, s.createDataFrame(ranks.map { case (k, v) => Row(k, v) }, schema))
     adj.unpersist()
-    deg.unpersist()
     pr
-  }
-
-  /** ONE pagerank round, PRE-truncation, so the per-round plan can be
-    * inspected past the checkpoint-truncated headline plan: with the
-    * rank side broadcast and the adjacency cached partitioned by dst,
-    * the round plans with ZERO exchanges (the BHJ preserves the cache's
-    * HashPartitioning(dst), which satisfies the message aggregate's
-    * clustering). */
-  private[graft] def pagerankRound(adj: DataFrame, pr: DataFrame,
-      small: Boolean, base: Long): DataFrame = {
-    val prs = pr.select(col("node").as("src"), col("pr"))
-    val msgs = adj.join(if (small) broadcast(prs) else prs, "src")
-      .select(col("dst").as("node"),
-        expr(s"($Damp * pr) div (100 * deg)").as("m"))
-    // No node spine join: symmetrization means every node appears as
-    // a dst (it appears as a src, and each edge exists both ways), so
-    // the message aggregate alone already covers the full node set —
-    // a per-round left-outer join against deg would be a no-op.
-    msgs.groupBy(col("node")).agg(sum(col("m")).as("acc"))
-      .select(col("node"), (lit(base) + col("acc")).as("pr"))
   }
 
   /** The kernel's ten iterations unrolled as chained CTEs (recursive

@@ -850,9 +850,7 @@ object PipelineOps {
     // value range on this fixture. All windows here order ≤64-row
     // bounded relations (the q165 precedent).
     "q205_hist_merge" -> ((s, d) => {
-      val li = lineitem(s, d)
-      histMergeAudit(s,
-        k => li.filter(col("l_orderkey") % 2 === k), li,
+      histMergeAudit(s, lineitem(s, d), col("l_orderkey") % 2,
         col("l_extendedprice"), 4096.0)
     }),
 
@@ -990,10 +988,6 @@ object PipelineOps {
       .partitionBy("gen").parquet(mvDir)
   }
 
-  /** The ONE per-(user, event_type) partial rollup both q171 (batch IVM)
-    * and q173 (streaming MV) maintain — a single definition because
-    * q173's contract is exact equality with q171's batch twin; drift
-    * between two copies would break it with no compile-time signal. */
   /** One equi-depth histogram leg (16 equal-row buckets over a lineitem
     * column) — the q194 construction, factored so q198's selectivity
     * audit consumes the IDENTICAL histogram it reports on. The cumsum
@@ -1003,31 +997,35 @@ object PipelineOps {
     * bucket = (rows_before * 16) div n in pure BIGINT. */
   private[graft] def equidepthLeg(s: SparkSession, d: String,
       colName: String, v: Column, width: Double): DataFrame =
-    equidepthHistOf(lineitem(s, d), colName, v, width)
+    equidepthHistOf(lineitem(s, d), lit(colName), v, width)
 
-  /** The same construction over an arbitrary source relation — q205
-    * builds per-SLICE histograms with it and merges them without
-    * touching raw rows again. */
+  /** The same construction over an arbitrary source relation, keyed by a
+    * LEG column that leads every grouping, join and window partition: one
+    * pass over `src` builds one histogram per distinct leg value, and
+    * `col_name` carries the leg. q194/q198 pass a literal leg (one
+    * histogram); q205 builds its two slice histograms and its exact audit
+    * leg in one keyed pass. */
   private[graft] def equidepthHistOf(src: DataFrame,
-      colName: String, v: Column, width: Double): DataFrame = {
+      leg: Column, v: Column, width: Double): DataFrame = {
     val B = 16
-    val rollup = src.groupBy(v.as("v"))
+    val rollup = src.groupBy(leg.as("col_name"), v.as("v"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("coarse", floor(col("v") / width).cast("long"))
-    val coarseTot = rollup.groupBy(col("coarse"))
+    val coarseTot = rollup.groupBy(col("col_name"), col("coarse"))
       .agg(sum(col("cnt")).as("ct"))
     val offsets = coarseTot.as("a")
-      .join(coarseTot.as("b"), col("b.coarse") < col("a.coarse"), "left")
-      .groupBy(col("a.coarse").as("coarse"))
+      .join(coarseTot.as("b"), col("b.col_name") === col("a.col_name") &&
+        col("b.coarse") < col("a.coarse"), "left")
+      .groupBy(col("a.col_name").as("col_name"), col("a.coarse").as("coarse"))
       .agg(coalesce(sum(col("b.ct")), lit(0L)).as("off"))
-    val tot = rollup.agg(sum(col("cnt")).as("n"))
+    val tot = rollup.groupBy(col("col_name")).agg(sum(col("cnt")).as("n"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("coarse")).orderBy(col("v"))
+      .partitionBy(col("col_name"), col("coarse")).orderBy(col("v"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     rollup
       .withColumn("wb", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .join(offsets, "coarse").crossJoin(tot)
-      .select(lit(colName).as("col_name"),
+      .join(offsets, Seq("col_name", "coarse")).join(tot, "col_name")
+      .select(col("col_name"),
         expr(s"((off + wb) * $B) div n").as("bucket"),
         col("v"), col("cnt"))
       .groupBy(col("col_name"), col("bucket"))
@@ -1036,18 +1034,27 @@ object PipelineOps {
         sum(col("cnt")).as("n_rows"), count(lit(1)).as("n_distinct"))
   }
 
-  /** q205's merge kernel, factored over an arbitrary two-slice source so
-    * the spec can drive it with a SKEWED column (one value holding more
-    * than a 1/16 share makes the exact construction skip bucket ids —
-    * the case the audit join must survive). `slice(0)`/`slice(1)` are
-    * the two partition-local views; `full` (≡ their union, but usually
-    * the unfiltered base scan) feeds the exact audit leg. */
-  private[graft] def histMergeAudit(s: SparkSession,
-      slice: Int => DataFrame, full: DataFrame, v: Column,
-      width: Double): DataFrame = {
-    def sliceHist(k: Int): DataFrame =
-      equidepthHistOf(slice(k), s"slice$k", v, width)
-    val hist = sliceHist(0).unionByName(sliceHist(1))
+  /** q205's merge kernel, factored over an arbitrary source so the spec
+    * can drive it with a SKEWED column (one value holding more than a
+    * 1/16 share makes the exact construction skip bucket ids — the case
+    * the audit join must survive). Each row of `src` feeds two legs of
+    * one keyed [[equidepthHistOf]] pass: its partition-local slice
+    * (`slice` names it, e.g. an id parity) and the exact full-table leg
+    * the audit columns come from. Every distinct slice value is one
+    * histogram in the merge. */
+  private[graft] def histMergeAudit(s: SparkSession, src: DataFrame,
+      slice: Column, v: Column, width: Double): DataFrame = {
+    val legs = src.select(v.as("v"),
+      explode(array(concat(lit("slice"), slice.cast("string")), lit("exact")))
+        .as("leg"))
+    // every consumer below reads the keyed histograms, and each would
+    // push its own leg filter into a re-run of the pass; they are bounded
+    // (16 buckets a leg), so the pass runs once and the merge reads rows
+    val all = {
+      val h = equidepthHistOf(legs, col("leg"), col("v"), width)
+      s.createDataFrame(java.util.Arrays.asList(h.collect(): _*), h.schema)
+    }
+    val hist = all.filter(col("col_name") =!= "exact")
     val bp = hist.select(col("lo").as("x"))
       .unionByName(hist.select(col("hi").as("x"))).distinct()
     val fx = bp.crossJoin(hist)
@@ -1075,7 +1082,7 @@ object PipelineOps {
             (col("k") * col("nn") / lit(16.0) - col("f0")) *
               (col("x1") - col("x0")) / (col("f1") - col("f0"))), 2)
           .as("boundary"))
-    val exact = equidepthHistOf(full, "exact", v, width)
+    val exact = all.filter(col("col_name") === "exact")
       .select(col("bucket"), col("hi").as("exact_hi"))
     // LEFT join: equi-depth bucket ids SKIP when one heavy value spans
     // more than a 1/16 share (the documented values-never-split spill),
@@ -1089,6 +1096,10 @@ object PipelineOps {
       .orderBy(col("k"))
   }
 
+  /** The ONE per-(user, event_type) partial rollup both q171 (batch IVM)
+    * and q173 (streaming MV) maintain — a single definition because
+    * q173's contract is exact equality with q171's batch twin; drift
+    * between two copies would break it with no compile-time signal. */
   private def rollup(df: DataFrame): DataFrame =
     df.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),

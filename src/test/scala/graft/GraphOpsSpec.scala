@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.GraphOps
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Pins for the iterative integer-PageRank dataflow (q152): the algebra
@@ -8,6 +11,36 @@ import org.apache.spark.sql.functions._
   * PageRank can only assert approximate conservation) and the structural
   * ordering PageRank exists to compute. */
 class GraphOpsSpec extends TestSpark {
+
+  /** Jobs started under a job group while `body` runs. A one-task
+    * barrier job in a second group runs after it: the listener bus
+    * delivers events in order, so once the barrier's start arrives every
+    * earlier job start has too. */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val barrier = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-barrier" => barrier.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(s"$group-barrier", "listener barrier")
+      sc.parallelize(Seq(0), 1).count()
+      assert(barrier.await(60, TimeUnit.SECONDS), "barrier job never started")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("q152 conserves the integer mass budget and covers every trading party") {
     val rows = GraphOps.queries("q152_pagerank")(spark, sf0001).collect()
@@ -39,6 +72,32 @@ class GraphOpsSpec extends TestSpark {
     val cyc = GraphOps.pagerank(spark, sym(Seq((0L, 1L), (1L, 2L), (2L, 0L))))
       .collect().map(_.getAs[Long]("pr"))
     assert(cyc.distinct.length == 1, s"cycle ranks must tie: ${cyc.toSeq}")
+  }
+
+  test("q152 runs its ten pagerank rounds in one job: builder + collect <= 12 jobs") {
+    // one RDD job carries all ten co-partitioned rounds; the rest are the
+    // edge derivation's stages, the adjacency count, the eager truncate
+    // and the returned plan's sort (a per-round job loop ran ~37)
+    val jobs = jobsIn("q152-jobs") {
+      GraphOps.queries("q152_pagerank")(spark, sf0001).collect()
+    }
+    assert(jobs <= 12, s"q152 ran $jobs jobs")
+  }
+
+  test("pagerank ranks do not depend on the shuffle width") {
+    import spark.implicits._
+    // a small irregular symmetrized graph: a hub, a chain and a triangle
+    val es = (1L to 6L).map(i => (0L, i)) ++ Seq((6L, 7L), (7L, 8L),
+      (8L, 9L), (9L, 7L), (3L, 8L))
+    val sym = (es ++ es.map(e => (e._2, e._1))).toDF("src", "dst")
+    def ranks(width: Int): Map[Long, Long] = {
+      val child = ChildSession(spark, "spark.sql.shuffle.partitions" -> width.toString)
+      GraphOps.pagerank(child, sym).collect()
+        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("pr")).toMap
+    }
+    val one = ranks(1)
+    assert(one.size == 10)
+    assert(ranks(7) == one, "ranks differ between 1 and 7 shuffle partitions")
   }
 
   test("oriented triangle enumeration counts hand graphs exactly once each") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.PipelineOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sanity/property checks for the third-wave pipeline operators (the
@@ -594,7 +595,7 @@ class PipelineOpsSpec extends TestSpark {
     val hists = (0 to 1).flatMap { sl =>
       PipelineOps.equidepthHistOf(
         li.filter(col("l_orderkey") % 2 === sl),
-        s"slice$sl", col("l_extendedprice"), 4096.0)
+        lit(s"slice$sl"), col("l_extendedprice"), 4096.0)
         .collect().map(r => (r.getAs[Double]("lo"), r.getAs[Double]("hi"),
           r.getAs[Long]("n_rows")))
     }
@@ -630,18 +631,40 @@ class PipelineOpsSpec extends TestSpark {
       (1 to 250).map(i => 100.0 + i)).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
     val exact = PipelineOps.equidepthHistOf(
-      skewed, "v", col("v"), 64.0).collect()
+      skewed, lit("v"), col("v"), 64.0).collect()
     val ids = exact.map(_.getAs[Long]("bucket")).sorted
     assert((0L until 16L).exists(b => !ids.contains(b)),
       s"fixture must skip bucket ids to exercise the left join: ${ids.toSeq}")
-    val audit = PipelineOps.histMergeAudit(spark,
-      k => skewed.filter(col("id") % 2 === k), skewed, col("v"), 64.0)
+    val audit = PipelineOps.histMergeAudit(spark, skewed, col("id") % 2,
+      col("v"), 64.0)
       .collect().sortBy(_.getAs[Long]("k"))
     assert(audit.map(_.getAs[Long]("k")).toSeq == (1L to 15L),
       "all 15 merged boundaries must survive the audit join on skew")
     // the skipped ids surface as null audit columns, not missing rows
     assert(audit.exists(_.isNullAt(audit.head.fieldIndex("exact_hi"))),
       "skipped exact buckets should yield null exact_hi audit cells")
+  }
+
+  test("keyed equi-depth histogram: each leg equals its single-leg build") {
+    // three legs of uneven size over a high-NDV and a low-NDV column (the
+    // latter skips bucket ids): the leg key must keep every grouping, join
+    // and window partition apart, so each leg's buckets are exactly the
+    // literal-leg construction over that leg's rows alone
+    val li = Tables.lineitem(spark, sf0001)
+      .withColumn("leg", concat(lit("m"), (col("l_orderkey") % 3).cast("string")))
+    for ((v, width) <- Seq(col("l_extendedprice") -> 4096.0, col("l_quantity") -> 8.0)) {
+      def rows(df: DataFrame) = df.collect().map(r =>
+        (r.getAs[String]("col_name"), r.getAs[Long]("bucket"), r.getAs[Double]("lo"),
+          r.getAs[Double]("hi"), r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"))).toSet
+      val keyed = rows(PipelineOps.equidepthHistOf(li, col("leg"), v, width))
+      val legs = Seq("m0", "m1", "m2")
+      assert(keyed.map(_._1) == legs.toSet, s"legs: ${keyed.map(_._1)}")
+      for (leg <- legs) {
+        val single = rows(PipelineOps.equidepthHistOf(
+          li.filter(col("leg") === leg), lit(leg), v, width))
+        assert(keyed.filter(_._1 == leg) == single, s"leg $leg of $v")
+      }
+    }
   }
 
   test("q198 range selectivity: actuals recount, histogram estimate tight") {
