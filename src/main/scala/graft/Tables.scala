@@ -81,6 +81,21 @@ object Tables {
     dir.toString
   }
 
+  /** Cut an iterative kernel's lineage: a reliable checkpoint when the
+    * session has a checkpoint dir (survives executor loss — the
+    * production setting), else a localCheckpoint; both EAGER. A round
+    * that references the previous one k times grows a ~k^rounds logical
+    * plan even when every stage is persisted, and Catalyst pays for it
+    * per consumer on the driver (q231's analyzed plan reached 106k
+    * lines before its stages were cut). Rebasing each stage on its
+    * materialized RDD keeps the plan one round deep. Eager on purpose:
+    * with a lazy cut the downstream references race to compute the
+    * stage concurrently inside one job and re-run its upstream per
+    * branch (q248 cold 18 s → 30 s when tried). */
+  private[graft] def truncate(s: SparkSession, df: DataFrame): DataFrame =
+    if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   /** Filesystem-safe tag of a dataset dir, for dataset-qualified scratch
     * names (running both SFs in one session must not share a sink path).
     * ONE rule shared by every sink — five inlined copies of this regex

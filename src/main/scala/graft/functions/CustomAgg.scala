@@ -34,17 +34,16 @@ object CustomAgg {
 
   /** Bounded k-minimum-values distinct sketch as a mergeable Aggregator
     * — the streaming-capable form of the batch KMV (q110/q112): the
-    * buffer is the ≤ 64 smallest distinct hash keys, reduce/merge keep
+    * buffer is the ≤ K smallest distinct hash keys, reduce/merge keep
     * that invariant with O(K) work, and finish applies the IDENTICAL
     * estimator arithmetic as the batch path (hex→long over the first 15
     * digits, division order preserved, half-up 4-dp round). KMV of a
     * SET is order-independent, so partial aggregation, shuffle order,
     * and state-store checkpointing between micro-batches all produce
     * the same answer — which is why a streaming run can share an exact
-    * batch oracle. State per group is K×32 chars ≈ 2 KB, bounded at any
-    * stream length. */
-  object KmvDistinct extends Aggregator[String, KmvB, Double] {
-    val K = 64
+    * batch oracle. State per group is K×32 chars ≈ 2 KB at K = 64,
+    * bounded at any stream length. */
+  class KmvDistinctOf(val K: Int) extends Aggregator[String, KmvB, Double] {
     def zero: KmvB = KmvB(Array.empty)
     // null-safe: a null input hash (md5 of a null key) contributes
     // nothing, matching what count(DISTINCT ...) semantics would do —
@@ -77,6 +76,9 @@ object CustomAgg {
     def bufferEncoder: Encoder[KmvB] = Encoders.product[KmvB]
     def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
+
+  /** The K = 64 sketch q126 streams with. */
+  object KmvDistinct extends KmvDistinctOf(64)
 
   /** Buffer of [[QuantileSketch]]: ≤ K (hash key, value) pairs — the
     * rows whose md5 row keys are the K smallest seen, kept sorted by

@@ -892,15 +892,9 @@ object Dedup {
     // the previous round's ~6× (two unionByName sides, join + agg
     // re-reads), so plan size grows ~6^rounds — persist() alone does not
     // cut the analyzed tree, and by round ~12 plan rendering alone OOMs
-    // the driver. Eager checkpoint rebases the round on its materialized
-    // RDD, keeping the plan constant-size. Reliable checkpoint when a
-    // checkpoint dir is configured (survives executor loss — the
-    // production setting at scale); localCheckpoint otherwise.
-    def truncate(df: DataFrame): DataFrame =
-      if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
+    // the driver ([[graft.Tables.truncate]]).
     // canonical directed form: u > v (self-loops dropped)
-    var e = truncate(pairs
+    var e = truncate(s, pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -937,7 +931,7 @@ object Dedup {
       // to their minimum (edges are already u > v directed)
       val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
       val withM = ls.join(mins2, "u")
-      val ss = truncate(withM.select(col("u"), col("m").as("v"))
+      val ss = truncate(s, withM.select(col("u"), col("m").as("v"))
         .unionByName(withM.filter(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v")))
         .distinct())

@@ -330,18 +330,9 @@ object KnnDescent {
     val bucketed = graft.SessionCache.tracked("knnd",
       all.select(col("vec_id"), col("embedding"),
         Similarity.lshBucket(col("embedding"), planes).as("bucket")))
-    val flips1 = planes.indices.map(i =>
-      col("bucket").bitwiseXOR(lit(1 << i)))
-    val flips2: Seq[org.apache.spark.sql.Column] =
-      if (r >= 2)
-        planes.indices.combinations(2).map { ij =>
-          col("bucket").bitwiseXOR(lit((1 << ij(0)) | (1 << ij(1))))
-        }.toSeq
-      else Seq.empty
-    val probeBuckets = array(col("bucket") +: (flips1 ++ flips2): _*)
     val probes = bucketed.join(broadcast(deltaIds), "vec_id")
       .select(col("vec_id").as("src"), col("embedding").as("p_emb"),
-        explode(probeBuckets).as("bucket"))
+        explode(Similarity.probeBuckets(planes, r)).as("bucket"))
     val seed = bucketed.join(probes, Seq("bucket"))
       .filter(col("src") =!= col("vec_id"))
       .select(col("src"), col("vec_id").as("nbr"),
@@ -488,17 +479,9 @@ object KnnDescent {
     // broadcast: the join keys both sides on the bucket). The probed
     // set is distinct, so each candidate pair still matches through
     // exactly one bucket.
-    val flips1 = planes.indices.map(i =>
-      col("bucket").bitwiseXOR(lit(1 << i)))
-    val flips2: Seq[org.apache.spark.sql.Column] =
-      if (probeRadius >= 2)
-        planes.indices.combinations(2).map { ij =>
-          col("bucket").bitwiseXOR(lit((1 << ij(0)) | (1 << ij(1))))
-        }.toSeq
-      else Seq.empty
-    val probeBuckets = array(col("bucket") +: (flips1 ++ flips2): _*)
     val probes = bucketed.select(col("vec_id").as("src"),
-      col("embedding").as("p_emb"), explode(probeBuckets).as("bucket"))
+      col("embedding").as("p_emb"),
+      explode(Similarity.probeBuckets(planes, probeRadius)).as("bucket"))
     bucketed.join(probes, Seq("bucket"))
       .filter(col("src") =!= col("vec_id"))
       .select(col("src"), col("vec_id").as("nbr"),
@@ -511,56 +494,16 @@ object KnnDescent {
         count(lit(1)).as("n_candidates"))
   }
 
-  /** Every stage of the build — g0 (seed cut) through g[[Iters]] — each
-    * persisted; exposed so the spec can pin the per-round monotonic-
-    * improvement invariant. [[build]] is stages(...).last.
-    *
-    * `warm` (round-16 verdict task #2): optional (src, nbr) edge set
-    * unioned into ROUND 1's candidate pool — the escalation path seeds
-    * the radius-2 descent with the radius-1 graph's final edges, so the
-    * measured-then-rejected build contributes its best edges instead of
-    * being pure waste. Round 1 (not the seed cut) is the cheap join
-    * point: the round candidate set already pays a distinct() for set
-    * semantics (the warm ∪ seed overlap dedupes there for free), while
-    * the seed relation is dedup-free by the one-probed-bucket argument
-    * and would need a new full-width exchange over the largest relation
-    * in the build to absorb duplicates. */
-  /** LINEAGE TRUNCATION per stage (the q152/connected-components
-    * `truncate` discipline, round 17): each descent round references
-    * the previous graph ~5 times (the undirected relation twice, the
-    * NoN join twice, the current-edge arm), so the LOGICAL plan grows
-    * ~5^Iters copies of the seed tree — and the warm-started
-    * escalation embeds the whole radius-1 tree inside the radius-2
-    * chain, squaring it (measured: q231's analyzed plan hit 106k
-    * lines / q240's 212k, and every warm consumer paid 5-13 s of
-    * DRIVER-side Catalyst work per run before the cache substitution
-    * collapsed it). An eager checkpoint rebases each stage on its
-    * materialized RDD: the plan every consumer analyzes is one round
-    * deep regardless of radius, warm-start, or Iters — a
-    * corpus-size-independent driver cost that matters identically at
-    * 100 TB. EAGER deliberately, everywhere it is used: a lazy
-    * (`eager = false`) variant was tried in r19 and reverted — the ~5
-    * downstream references race to compute the unmaterialized stage
-    * concurrently inside one job, re-running its corpus-sized upstream
-    * per branch (measured: q248 cold 18 s → 30 s, q231 cold
-    * 9.7 → 13.4 s); dropping the per-round truncation outright instead
-    * blew up DRIVER-side Catalyst on the unanchored ~5^rounds plan
-    * (q248 warm 60-80 s). The one stage that could safely lose its
-    * checkpoint ACTION was the delta admission's seed cut (delta-sized,
-    * its seed relation separately persisted) — it is now a plain
-    * tracked persist. Reliable checkpoint when the session has a
-    * checkpoint dir (survives executor loss — the production setting),
-    * eager localCheckpoint otherwise. */
-  private def truncate(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** ONE descent round from graph `g` over corpus `emb`: candidates =
     * neighbors-of-neighbors through the undirected graph ∪ current
     * edges (∪ `warm` edges when given — the escalation warm-start),
     * re-scored, re-cut to top-K, truncated + tracked. Shared by the
     * [[stages]] loop and the r2-miss response (round-17 verdict #1),
-    * so the extra round is bit-identical to an ordinary one. */
+    * so the extra round is bit-identical to an ordinary one. Every
+    * stage is truncated ([[graft.Tables.truncate]]): a round references
+    * the previous graph ~5 times (the undirected relation twice, the
+    * NoN join twice, the current-edge arm), and without the cut q248's
+    * warm plan analysis alone took 60-80 s. */
   private[graft] def descendOnce(s: SparkSession, emb: DataFrame,
       g: DataFrame, warm: Option[DataFrame] = None): DataFrame =
     graft.SessionCache.tracked("knnd", truncate(s, roundPlan(emb, g, warm)))
@@ -588,6 +531,20 @@ object KnnDescent {
     cut(scored)
   }
 
+  /** Every stage of the build — g0 (seed cut) through g[[Iters]] — each
+    * persisted; exposed so the spec can pin the per-round monotonic-
+    * improvement invariant. [[build]] is stages(...).last.
+    *
+    * `warm`: optional (src, nbr) edge set
+    * unioned into ROUND 1's candidate pool — the escalation path seeds
+    * the radius-2 descent with the radius-1 graph's final edges, so the
+    * measured-then-rejected build contributes its best edges instead of
+    * being pure waste. Round 1 (not the seed cut) is the cheap join
+    * point: the round candidate set already pays a distinct() for set
+    * semantics (the warm ∪ seed overlap dedupes there for free), while
+    * the seed relation is dedup-free by the one-probed-bucket argument
+    * and would need a new full-width exchange over the largest relation
+    * in the build to absorb duplicates. */
   private[graft] def stages(s: SparkSession, emb: DataFrame,
       cacheKey: String, probeRadius: Int = 1,
       warm: Option[DataFrame] = None): IndexedSeq[DataFrame] = {

@@ -56,6 +56,23 @@ object Similarity {
   val LshMaxPlanes = 24
   lazy val lshPool: Seq[Array[Double]] = hyperplanes(LshMaxPlanes, 64)
 
+  /** The multi-probe bucket array of a `bucket` column under `planes`:
+    * the own bucket, every Hamming-1 flip and, at radius ≥ 2, every
+    * Hamming-2 flip. The buckets are all distinct, so a candidate
+    * matches a probe through at most ONE probed bucket and the join
+    * output needs no dedup. */
+  def probeBuckets(planes: Seq[Array[Double]], radius: Int): Column = {
+    val flips1 = planes.indices.map(i =>
+      col("bucket").bitwiseXOR(lit(1 << i)))
+    val flips2 =
+      if (radius >= 2)
+        planes.indices.combinations(2).map { ij =>
+          col("bucket").bitwiseXOR(lit((1 << ij(0)) | (1 << ij(1))))
+        }.toSeq
+      else Seq.empty
+    array(col("bucket") +: (flips1 ++ flips2): _*)
+  }
+
   /** Planes used at corpus size n: the smallest p with 8·2^p ≥ n, clamped
     * to [4, 24] — bucket count 2^p tracks n/8, so expected bucket
     * occupancy (≈8) stays constant as the corpus grows; with the
@@ -235,14 +252,9 @@ object Similarity {
       val planes = lshPool.take(lshNPlanes(corpusCount(emb, d)))
       val bucketed = emb.select(col("vec_id"), col("embedding"),
         lshBucket(col("embedding"), planes).as("bucket"))
-      // probe buckets: own + p Hamming-1 flips (all distinct, so a
-      // candidate can match a probe through at most ONE probed bucket —
-      // no dedup needed on the join output)
-      val probeBuckets = array(col("bucket") +:
-        planes.indices.map(i => col("bucket").bitwiseXOR(lit(1 << i))): _*)
       val probes = broadcast(bucketed.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-          explode(probeBuckets).as("bucket")))
+          explode(probeBuckets(planes, 1)).as("bucket")))
       heapTopK(
         bucketed.join(probes, Seq("bucket"))
           .filter(col("probe_id") =!= col("vec_id"))

@@ -509,7 +509,7 @@ object TextQueries {
     // of q110, and a third production consumer of the TopKPerGroup heap
     // (after q95's quota sample and the ANN re-ranks). NOTHING
     // vocabulary-sized ever shuffles: a bounded keyed pass
-    // ([[kmvPartitionMins]]) first cuts each partition to its k smallest
+    // ([[Kmv.sketch]]) first cuts each partition to its k smallest
     // distinct hashes PER LANGUAGE (per-partition k-min-distinct unions
     // are a superset of the global k-min-distinct, so the final answer is
     // unchanged), the distinct then dedupes ≤ k × langs × partitions
@@ -524,16 +524,11 @@ object TextQueries {
         .select(col("lang"),
           md5(concat(col("doc_id").cast("string"), lit(":"), col("tok")))
             .as("h"))
-      val candidates = kmvPartitionMins(hashed, K).distinct()
-      graft.plans.TopKPerGroup.topK(candidates, Seq("lang"), Seq("h" -> true), K)
+      Kmv.sketch(hashed, "lang", K)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
         .select(col("lang"), col("k_used"),
-          when(col("k_used") < K, col("k_used").cast("double"))
-            .otherwise(round(lit((K - 1).toDouble) /
-              (conv(substring(col("kth_hash"), 1, 15), 16, 10).cast("long")
-                .cast("double") / lit(1.152921504606846976e18)), 4))
-            .as("est_pairs"))
+          Kmv.estimate(col("k_used"), col("kth_hash"), K).as("est_pairs"))
         .orderBy(col("lang"))
     }),
 
@@ -567,10 +562,7 @@ object TextQueries {
         .select(col("source"), md5(col("sgl")).as("h"))
         .distinct()
       val keysP = tracked(keys)
-      val sk = graft.plans.TopKPerGroup.topK(
-        kmvPartitionMins(keysP, K).distinct()
-          .withColumnRenamed("lang", "source"),
-        Seq("source"), Seq("h" -> true), K)
+      val sk = Kmv.sketch(keysP, "source", K)
       val ss = sk.select(col("source")).distinct()
       val prs = ss.select(col("source").as("src_a"))
         .crossJoin(ss.select(col("source").as("src_b")))
@@ -591,16 +583,11 @@ object TextQueries {
       val exact = flags(keysP).groupBy(col("src_a"), col("src_b"))
         .agg(count(lit(1)).as("exact_union"),
           sum(col("in_a") * col("in_b")).cast("long").as("exact_inter"))
-      val u = conv(substring(col("kth"), 1, 15), 16, 10).cast("long")
-        .cast("double") / lit(1.152921504606846976e18)
-      val estURaw = lit((K - 1).toDouble) / u
-      val estUCase = when(col("k_used") < K, col("k_used").cast("double"))
-        .otherwise(estURaw)
       est.join(exact, Seq("src_a", "src_b"))
         .select(col("src_a"), col("src_b"), col("k_used"),
-          when(col("k_used") < K, col("k_used").cast("double"))
-            .otherwise(round(estURaw, 4)).as("est_union"),
-          round(col("rho") / col("k_used").cast("double") * estUCase, 4)
+          Kmv.estimate(col("k_used"), col("kth"), K).as("est_union"),
+          round(col("rho") / col("k_used").cast("double") *
+            Kmv.estimate(col("k_used"), col("kth"), K, rounded = false), 4)
             .as("est_inter"),
           col("exact_union"), col("exact_inter"),
           round(col("rho") / col("k_used").cast("double"), 4)
@@ -1179,58 +1166,17 @@ object TextQueries {
       .orderBy(col("n").desc, col("tok"))
   }
 
-  /** KMV estimator over a pre-hashed key column (lowercase hex md5
-    * strings): bounded per-partition pass keeping the k smallest DISTINCT
-    * hashes (O(k) TreeSet memory per task, like [[mgSummary]]'s cap), a
-    * tiny global merge (≤ k × partitions rows), then the standard
-    * (k-1)/u_k estimate where u_k = the k-th minimum hash's leading 15
-    * hex digits as a fraction of 16^15. Hex ordering IS numeric ordering
-    * here (fixed-width lowercase hex), so string TreeSets suffice and the
-    * DuckDB oracle's ORDER BY h replays the selection exactly; 16^15 is a
-    * power of two, so the one int→double conversion rounds identically
-    * in both engines. Degenerate case: fewer than k distinct hashes means
-    * the sketch HOLDS the whole distinct set — the estimate is the exact
-    * count. */
+  /** Ungrouped KMV estimate over pre-hashed keys (see [[Kmv]]): the
+    * per-partition bottom-k, a ≤ k × partitions row distinct, one
+    * ordered limit, then the estimator. */
   def kmvEstimate(hashes: org.apache.spark.sql.Dataset[String], k: Int)
-      : DataFrame = {
-    import hashes.sparkSession.implicits._
-    val kmin = hashes.mapPartitions { it =>
-      val set = new java.util.TreeSet[String]()
-      it.foreach { h =>
-        if (!set.contains(h)) {
-          if (set.size < k) set.add(h)
-          else if (h.compareTo(set.last()) < 0) { set.add(h); set.pollLast() }
-        }
-      }
-      scala.jdk.CollectionConverters.IteratorHasAsScala(set.iterator()).asScala
-    }.toDF("h").distinct()
+      : DataFrame =
+    Kmv.partitionMins(hashes, k).toDF("h").distinct()
       .orderBy(col("h")).limit(k)
-    kmin.agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
+      .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
       .select(col("k_used"), col("kth_hash"),
-        when(col("k_used") < k, col("k_used").cast("double"))
-          .otherwise(round(lit((k - 1).toDouble) /
-            (conv(substring(col("kth_hash"), 1, 15), 16, 10).cast("long")
-              .cast("double") / lit(1.152921504606846976e18)), 4))
-          .as("est_distinct"))
-  }
+        Kmv.estimate(col("k_used"), col("kth_hash"), k).as("est_distinct"))
 
-  /** Keyed KMV pre-cut (q112 pass 1): each partition keeps the k smallest
-    * DISTINCT hashes per group value — O(k × groups-in-partition) TreeSet
-    * memory, the same bounded-state contract as the heap operator it
-    * feeds. Per-partition k-min-distinct unions are a superset of the
-    * global per-group k-min-distinct, so downstream selection over the
-    * ≤ k × groups × partitions surviving rows is exact; the vocabulary-
-    * sized (group, hash) relation itself never reaches an exchange.
-    *
-    * CONTRACT: the group key must be LOW-CARDINALITY (a corpus slice —
-    * language, source, split), because the per-partition state is one
-    * TreeSet per group seen and there is no spill. `maxGroups` bounds
-    * that state at runtime (k × maxGroups strings per task, ~25 MB at
-    * the defaults): a partition seeing more distinct groups fails fast,
-    * naming the per-group row_number window (q112's oracle shape) as
-    * the high-cardinality alternative — the same fail-fast style as
-    * [[graft.plans.TopKPerGroup.topK]]'s k ≤ 10000 guard (round-7
-    * judge ask #4). */
   /** Trigram-shingle OCCURRENCES (multiset — q196/q203's frequency
     * domain, unlike [[graft.functions.Dedup.shingleSet]]'s per-doc
     * distinct sets): one typed map pass, (doc_id, sgl) rows, duplicates
@@ -1246,34 +1192,6 @@ object TextQueries {
         else (0 until t.length - 2).iterator
           .map(i => (id, t(i) + " " + t(i + 1) + " " + t(i + 2)))
       }.toDF("doc_id", "sgl")
-  }
-
-  private[graft] def kmvPartitionMins(df: DataFrame, k: Int,
-      maxGroups: Int = 1024): DataFrame = {
-    import df.sparkSession.implicits._
-    df.as[(String, String)].mapPartitions { it =>
-      val sets = scala.collection.mutable.HashMap
-        .empty[String, java.util.TreeSet[String]]
-      it.foreach { case (g, h) =>
-        val set = sets.getOrElseUpdate(g, {
-          if (sets.size >= maxGroups) throw new IllegalStateException(
-            s"kmvPartitionMins: over $maxGroups distinct groups in one " +
-              "partition — this spill-free pre-cut is for low-cardinality " +
-              "slice keys (lang/source/split); for high-cardinality groups " +
-              "use a per-group row_number window over the distinct hashes " +
-              "instead (q112's oracle shape)")
-          new java.util.TreeSet[String]()
-        })
-        if (!set.contains(h)) {
-          if (set.size < k) set.add(h)
-          else if (h.compareTo(set.last()) < 0) { set.add(h); set.pollLast() }
-        }
-      }
-      sets.iterator.flatMap { case (g, s) =>
-        scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-          .map(h => (g, h))
-      }
-    }.toDF("lang", "h")
   }
 
   /** THE CDC boundary rule, shared by q114's stats and [[cdcChunks]]'
@@ -1633,11 +1551,10 @@ object TextQueries {
          FROM tk JOIN vocab USING (tok) CROSS JOIN tot
          GROUP BY tk.doc_id ORDER BY tk.doc_id""",
     // KMV replay: same md5 keys, same distinct + ORDER BY h LIMIT k
-    // selection (fixed-width lowercase hex sorts numerically), same
-    // estimator arithmetic — hex→int via an explicit base-16 fold, then
-    // the two double divisions in the identical order.
+    // selection (fixed-width lowercase hex sorts numerically), and the
+    // shared estimator text ([[Kmv.estimateSql]]).
     "q110_kmv_distinct" ->
-      """WITH keys AS (
+      raw"""WITH keys AS (
            SELECT DISTINCT md5(doc_id::VARCHAR || ':' || tok) AS h FROM (
              SELECT doc_id,
                unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
@@ -1645,12 +1562,7 @@ object TextQueries {
          kmin AS (SELECT h FROM keys ORDER BY h LIMIT 256),
          agg AS (SELECT count(*) AS k_used, max(h) AS kth_hash FROM kmin)
          SELECT k_used, kth_hash,
-           CASE WHEN k_used < 256 THEN CAST(k_used AS DOUBLE)
-           ELSE round(255.0 / (list_reduce(list_prepend(0::BIGINT,
-             [strpos('0123456789abcdef', c)::BIGINT - 1
-              for c in string_split(substr(kth_hash, 1, 15), '')]),
-             (h, x) -> h * 16 + x) / 1152921504606846976.0), 4)
-           END AS est_distinct
+           ${Kmv.estimateSql("k_used", "kth_hash", 256)} AS est_distinct
          FROM agg""",
     // whitespace spelled out ([ \t\n\x0B\f\r], == Java \s) — RE2's \s
     // drops U+000B, so \s here would diverge on a vertical-tab doc
@@ -1739,7 +1651,7 @@ object TextQueries {
     // grouped KMV replay: per-lang row_number selection over the same
     // distinct pair hashes, same estimator fold
     "q112_kmv_per_lang" ->
-      """WITH pairs AS (
+      raw"""WITH pairs AS (
            SELECT DISTINCT lang, md5(doc_id::VARCHAR || ':' || tok) AS h FROM (
              SELECT lang, doc_id,
                unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
@@ -1752,17 +1664,12 @@ object TextQueries {
            SELECT lang, count(*) AS k_used, max(h) AS kth_hash
            FROM sel WHERE rk <= 256 GROUP BY lang)
          SELECT lang, k_used,
-           CASE WHEN k_used < 256 THEN CAST(k_used AS DOUBLE)
-           ELSE round(255.0 / (list_reduce(list_prepend(0::BIGINT,
-             [strpos('0123456789abcdef', c)::BIGINT - 1
-              for c in string_split(substr(kth_hash, 1, 15), '')]),
-             (h, x) -> h * 16 + x) / 1152921504606846976.0), 4)
-           END AS est_pairs
+           ${Kmv.estimateSql("k_used", "kth_hash", 256)} AS est_pairs
          FROM agg ORDER BY lang""",
 
     // q195 replay: per-source bottom-256 sketches via row_number, the
     // pair union's bottom-256 with both-membership flags, the identical
-    // hex-fold estimator and (ρ/k)·est∪ arithmetic order, and the exact
+    // estimator and (ρ/k)·est∪ arithmetic order, and the exact
     // pair profile from the full distinct-key relation
     "q195_kmv_set_ops" ->
       raw"""WITH t AS (
@@ -1810,19 +1717,10 @@ object TextQueries {
              GROUP BY p.src_a, p.src_b, k.h) a
            GROUP BY a.src_a, a.src_b)
          SELECT e.src_a, e.src_b, e.k_used,
-           CASE WHEN e.k_used < 256 THEN CAST(e.k_used AS DOUBLE)
-             ELSE round(255.0 / (list_reduce(list_prepend(0::BIGINT,
-               [strpos('0123456789abcdef', c)::BIGINT - 1
-                for c in string_split(substr(e.kth, 1, 15), '')]),
-               (h, x) -> h * 16 + x) / 1152921504606846976.0), 4)
-             END AS est_union,
+           ${Kmv.estimateSql("e.k_used", "e.kth", 256)} AS est_union,
            round(e.rho / CAST(e.k_used AS DOUBLE) *
-             CASE WHEN e.k_used < 256 THEN e.k_used
-               ELSE 255.0 / (list_reduce(list_prepend(0::BIGINT,
-                 [strpos('0123456789abcdef', c)::BIGINT - 1
-                  for c in string_split(substr(e.kth, 1, 15), '')]),
-                 (h, x) -> h * 16 + x) / 1152921504606846976.0)
-               END, 4) AS est_inter,
+             ${Kmv.estimateSql("e.k_used", "e.kth", 256, rounded = false)},
+             4) AS est_inter,
            x.exact_union, x.exact_inter,
            round(e.rho / CAST(e.k_used AS DOUBLE), 4) AS est_jaccard,
            round(x.exact_inter / CAST(x.exact_union AS DOUBLE), 4)

@@ -132,7 +132,7 @@ object CurationPipeline {
   }
 
   /** Fail-fast bound on the [[benchGramSet]] driver collect (the q106 /
-    * kmvPartitionMins discipline applied to the one previously-unguarded
+    * Kmv.partitionMins discipline applied to the one previously-unguarded
     * collect — round-13 judge wrong-item #2): the benchmark slice's
     * distinct 8-grams measure 4.7k at sf0.01, 47k at sf0.1, ~470k on the
     * 10× growth fixture — 2M is 4× above the largest supported sweep and

@@ -292,6 +292,10 @@ object GraphOps {
       .orderBy(col("rk"))
   }
 
+  /** Label-propagation node count up to which the label side is
+    * broadcast: 4M (node, label) pairs of longs, ~64 MB raw. */
+  private val LpBroadcastMaxNodes = 4000000L
+
   /** Deterministic synchronous label propagation over a SYMMETRIZED edge
     * relation: per round each node takes its neighbors' mode label, ties
     * broken (count desc, label asc). Lineage is cut per round. */
@@ -314,11 +318,8 @@ object GraphOps {
     // edge relation (HashPartitioning(dst) satisfies the
     // ClusteredDistributions of BOTH aggregates: keys (dst, lbl) and
     // (node = dst)), a round plans with ZERO exchanges. Past the gate the
-    // planner keeps its own choice. The gate's conf key keeps the name it
-    // had when pagerank shared it.
-    val bcastNodes = s.conf.getOption("spark.graft.pagerank.bcastMaxNodes")
-      .map(_.toLong).getOrElse(4000000L)
-    val small = labels.count() <= bcastNodes
+    // planner keeps its own choice.
+    val small = labels.count() <= LpBroadcastMaxNodes
     for (_ <- 1 to rounds) {
       labels = truncate(s, lpRound(edges, labels, small))
     }
@@ -368,13 +369,6 @@ object GraphOps {
       .select(col("o1.dst").as("v"), col("o2.dst").as("w"))
       .join(o.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
   }
-
-  /** Cut lineage: a reliable checkpoint when the session has a
-    * checkpoint dir (the CI/driver path), else an eager localCheckpoint.
-    * One policy for every iterative kernel in this module. */
-  private def truncate(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** The canonical part co-purchase edge relation (parts sharing an
     * order, a < b), shared by q157 (triangles) and q175 (label

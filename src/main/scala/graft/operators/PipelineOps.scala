@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.Kmv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -503,48 +504,26 @@ object PipelineOps {
     // VARCHAR), where NDV and bounds actually drive plans; at 100 TB
     // the exact-NDV expand is the one heavy stat — q110's KMV sketch is
     // the bounded-state alternative when estimates suffice.
-    "q166_table_stats" -> ((s, d) => {
-      def profile(tbl: String, df: DataFrame, cols: Seq[String]): DataFrame = {
-        // TWO aggregates, not one (r18 optimization): min/max over STRING
-        // columns carry an immutable (non-fixed-width) aggregation
-        // buffer, and one such function demotes the WHOLE aggregate —
-        // including the multi-distinct Expand pipeline riding beside it
-        // — from HashAggregate to SortAggregate: the plan sorted the
-        // ×(cols+1) Expand output (3.6M wide rows for lineitem) on all
-        // six grouping keys before EVERY partial aggregate, twice per
-        // table. Splitting the NDV leg (count buffers: all longs →
-        // HashAggregate end-to-end) from the basic leg (grouping-key-
-        // free global agg — SortAggregate over zero keys needs no sort)
-        // removes every corpus-sized Sort; the two 1-row results
-        // recombine with a broadcast-trivial cross join. Same scan count
-        // as before per leg, identical output values.
-        val basicAggs = Seq(count(lit(1)).as("n_rows")) ++ cols.flatMap { c =>
-          Seq(
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nul"),
-            min(col(c)).cast("string").as(s"${c}__min"),
-            max(col(c)).cast("string").as(s"${c}__max"))
-        }
-        val ndvAggs = cols.map(c => countDistinct(col(c)).as(s"${c}__ndv"))
-        val one = df.agg(basicAggs.head, basicAggs.tail: _*)
-          .crossJoin(df.agg(ndvAggs.head, ndvAggs.tail: _*))
-        one.select(explode(array(cols.map(c =>
-          struct(lit(tbl).as("tbl"), lit(c).as("col_name"),
-            col("n_rows"), col(s"${c}__nul").as("n_null"),
-            col(s"${c}__ndv").as("n_distinct"),
-            col(s"${c}__min").as("min_val"),
-            col(s"${c}__max").as("max_val"))): _*)).as("kv"))
-          .select(col("kv.*"))
-      }
-      profile("lineitem", lineitem(s, d),
-        Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_returnflag", "l_linestatus"))
-        .unionByName(profile("orders", orders(s, d),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")))
-        .unionByName(profile("documents", documents(s, d),
-          Seq("doc_id", "lang", "source", "n_chars")))
-        .unionByName(profile("events", events(s, d),
-          Seq("event_id", "user_id", "event_type")))
-        .orderBy(col("tbl"), col("col_name"))
+    "q166_table_stats" -> ((s, d) => analyze(s, d) { (tbl, df, cols) =>
+      // TWO aggregates, not one: min/max over STRING
+      // columns carry an immutable (non-fixed-width) aggregation
+      // buffer, and one such function demotes the WHOLE aggregate —
+      // including the multi-distinct Expand pipeline riding beside it
+      // — from HashAggregate to SortAggregate: the plan sorted the
+      // ×(cols+1) Expand output (3.6M wide rows for lineitem) on all
+      // six grouping keys before EVERY partial aggregate, twice per
+      // table. Splitting the NDV leg (count buffers: all longs →
+      // HashAggregate end-to-end) from the basic leg (grouping-key-
+      // free global agg — SortAggregate over zero keys needs no sort)
+      // removes every corpus-sized Sort; the two 1-row results
+      // recombine with a broadcast-trivial cross join. Same scan count
+      // as before per leg, identical output values.
+      melt(basicStats(df, cols).crossJoin(ndvStats(df, cols)), cols)(c =>
+        Seq(lit(tbl).as("tbl"), lit(c).as("col_name"),
+          col("n_rows"), col(s"${c}__nul").as("n_null"),
+          col(s"${c}__ndv").as("n_distinct"),
+          col(s"${c}__min").as("min_val"),
+          col(s"${c}__max").as("max_val")))
     }),
 
     // SKETCHED TABLE STATISTICS — q166's profile with the NDV produced
@@ -553,7 +532,7 @@ object PipelineOps {
     // Expand (×cols) whose distinct keys all shuffle — at 100 TB that is
     // the single heaviest stat. Here cardinality comes from the q110/q112
     // machinery instead: the per-row column melt stays map-side, a keyed
-    // per-partition bottom-K pre-cut ([[TextQueries.kmvPartitionMins]])
+    // per-partition bottom-K pre-cut ([[graft.functions.Kmv.sketch]])
     // reduces each column to its 256 smallest distinct md5 keys per
     // partition, and only those ≤ K × cols × partitions rows ever reach
     // an exchange (the TopKPerGroup heap finishes the selection). The
@@ -563,87 +542,46 @@ object PipelineOps {
     // scale you drop the exact columns and keep the bounded-state
     // estimate — the audit exists precisely to justify that swap. The
     // oracle replays BOTH paths bit-exactly (same md5 bottom-K selection,
-    // same hex-fold estimator arithmetic as q110's replay).
-    "q183_table_stats_sketch" -> ((s, d) => {
-      val K = 256
-      def profile(tbl: String, df: DataFrame, cols: Seq[String]): DataFrame = {
-        // one scan: n_rows + per-col null/min/max (map-side) and the
-        // exact-NDV audit columns (the q166 Expand, kept deliberately).
-        // The exact leg is MEMOIZED per (session, dataset, table) — the
-        // q246 staging convention, round-17 verdict #5: the audit's
-        // purpose is a standing error bound on the sketch, and a
-        // session re-profiling the same frozen table re-derives the
-        // same exact counts, so only run 1 pays the Expand; the bench
-        // min then prices the SKETCH path (the production-relevant
-        // number, q207's cost) with the exact leg's honest cold cost
-        // visible as run 1 of the runs array.
-        val basic = graft.SessionCache.memo(s, "pipeline", s"$d#$tbl")(
-            graft.SessionCache.tracked("pipeline", {
-          // split exactly like q166 (r18): the string min/max buffers
-          // demoted the combined aggregate to SortAggregate, sorting the
-          // Expand output per table — the NDV leg alone hash-aggregates
-          val basicAggs = Seq(count(lit(1)).as("n_rows")) ++ cols.flatMap { c =>
-            Seq(
-              sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nul"),
-              min(col(c)).cast("string").as(s"${c}__min"),
-              max(col(c)).cast("string").as(s"${c}__max"))
-          }
-          // raw-VALUE distinct (q166's form), not distinct-of-md5:
-          // the counts are identical (both engines count the same
-          // value set) and the Expand then shuffles narrow native
-          // keys instead of 32-char hash strings — measured 1.3×
-          // faster
-          val ndvAggs = cols.map(c => countDistinct(col(c)).as(s"${c}__ndv"))
-          df.agg(basicAggs.head, basicAggs.tail: _*)
-            .crossJoin(df.agg(ndvAggs.head, ndvAggs.tail: _*))
-            .select(explode(array(cols.map(c =>
-              struct(lit(c).as("col_name"), col("n_rows"),
-                col(s"${c}__nul").as("n_null"),
-                col(s"${c}__min").as("min_val"),
-                col(s"${c}__max").as("max_val"),
-                col(s"${c}__ndv").as("exact_ndv"))): _*)).as("kv"))
-            .select(col("kv.*"))
-        }))
-        // second scan: the bounded-state KMV path — melt stays map-side,
-        // the pre-cut bounds what shuffles
-        val hashes = df.select(explode(array(cols.map(c =>
-          struct(lit(c).as("g"), md5(col(c).cast("string")).as("h"))): _*))
-          .as("kv"))
-          .select(col("kv.g"), col("kv.h")).filter(col("h").isNotNull)
-        val cand = graft.functions.TextQueries.kmvPartitionMins(hashes, K)
-          .distinct()
-        val est = graft.plans.TopKPerGroup
-          .topK(cand, Seq("lang"), Seq("h" -> true), K)
-          .groupBy(col("lang").as("col_name"))
-          .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
-        // LEFT join + coalesce (round-12 advisor finding): a column with
-        // zero non-null values produces no KMV row, and an inner join
-        // would silently drop its whole profile row while the oracle's
-        // always-present scalar subquery still emits it — k_used = 0,
-        // est_ndv = 0 is the honest profile of an all-null column.
-        val kUsed = coalesce(col("k_used"), lit(0L))
-        val estv = when(kUsed < K, kUsed.cast("double"))
-          .otherwise(round(lit((K - 1).toDouble) /
-            (conv(substring(col("kth_hash"), 1, 15), 16, 10).cast("long")
-              .cast("double") / lit(1.152921504606846976e18)), 4))
-        basic.join(est, Seq("col_name"), "left_outer")
-          .select(lit(tbl).as("tbl"), col("col_name"), col("n_rows"),
-            col("n_null"), col("min_val"), col("max_val"),
-            kUsed.as("k_used"),
-            estv.as("est_ndv"), col("exact_ndv"),
-            (abs(estv - col("exact_ndv")) <= col("exact_ndv") * 0.25)
-              .cast("int").as("within_bound"))
-      }
-      profile("lineitem", lineitem(s, d),
-        Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_returnflag", "l_linestatus"))
-        .unionByName(profile("orders", orders(s, d),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")))
-        .unionByName(profile("documents", documents(s, d),
-          Seq("doc_id", "lang", "source", "n_chars")))
-        .unionByName(profile("events", events(s, d),
-          Seq("event_id", "user_id", "event_type")))
-        .orderBy(col("tbl"), col("col_name"))
+    // same estimator arithmetic as q110's replay).
+    "q183_table_stats_sketch" -> ((s, d) => analyze(s, d) { (tbl, df, cols) =>
+      // one scan: n_rows + per-col null/min/max (map-side) and the
+      // exact-NDV audit columns (the q166 Expand, kept deliberately).
+      // The exact leg is MEMOIZED per (session, dataset, table) — the
+      // q246 staging convention: the audit's
+      // purpose is a standing error bound on the sketch, and a
+      // session re-profiling the same frozen table re-derives the
+      // same exact counts, so only run 1 pays the Expand; the bench
+      // min then prices the SKETCH path (the production-relevant
+      // number, q207's cost) with the exact leg's honest cold cost
+      // visible as run 1 of the runs array.
+      val basic = graft.SessionCache.memo(s, "pipeline", s"$d#$tbl")(
+          graft.SessionCache.tracked("pipeline",
+        // split exactly like q166, and the NDV leg counts raw
+        // VALUES, not their md5s: the counts are identical (both
+        // engines count the same value set) and the Expand then
+        // shuffles narrow native keys instead of 32-char hash strings
+        // — measured 1.3× faster
+        melt(basicStats(df, cols).crossJoin(ndvStats(df, cols)), cols)(c =>
+          Seq(lit(c).as("col_name"), col("n_rows"),
+            col(s"${c}__nul").as("n_null"),
+            col(s"${c}__min").as("min_val"),
+            col(s"${c}__max").as("max_val"),
+            col(s"${c}__ndv").as("exact_ndv")))))
+      // second scan: the bounded-state KMV path. LEFT join + coalesce:
+      // a column with zero non-null values
+      // produces no KMV row, and an inner join would silently drop its
+      // whole profile row while the oracle's always-present scalar
+      // subquery still emits it — k_used = 0, est_ndv = 0 is the honest
+      // profile of an all-null column.
+      val kUsed = coalesce(col("k_used"), lit(0L))
+      val estv = Kmv.estimate(kUsed, col("kth_hash"), AnalyzeK)
+      basic.join(kmvNdv(df, cols), Seq("col_name"), "left_outer")
+        .select(lit(tbl).as("tbl"), col("col_name"), col("n_rows"),
+          col("n_null"), col("min_val"), col("max_val"),
+          kUsed.as("k_used"),
+          estv.as("est_ndv"), col("exact_ndv"),
+          (abs(estv - col("exact_ndv")) <= col("exact_ndv") * 0.25)
+            .cast("int").as("within_bound"))
     }),
 
     // PRODUCTION ANALYZE — the sketch-ONLY form of q183 (round-11 judge
@@ -658,55 +596,20 @@ object PipelineOps {
     // K × cols × partitions rows ever reach an exchange). Columns are
     // q183's minus exact_ndv/within_bound; the 25% bound q183 measures
     // is the licence for this swap. The oracle replays the identical
-    // bottom-K selection and hex-fold estimator arithmetic.
-    "q207_table_stats_prod" -> ((s, d) => {
-      val K = 256
-      def profile(tbl: String, df: DataFrame, cols: Seq[String]): DataFrame = {
-        val aggs = Seq(count(lit(1)).as("n_rows")) ++ cols.flatMap { c =>
-          Seq(
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nul"),
-            min(col(c)).cast("string").as(s"${c}__min"),
-            max(col(c)).cast("string").as(s"${c}__max"))
-        }
-        val one = df.agg(aggs.head, aggs.tail: _*)
-        val basic = one.select(explode(array(cols.map(c =>
-          struct(lit(c).as("col_name"), col("n_rows"),
-            col(s"${c}__nul").as("n_null"), col(s"${c}__min").as("min_val"),
-            col(s"${c}__max").as("max_val"))): _*)).as("kv"))
-          .select(col("kv.*"))
-        val hashes = df.select(explode(array(cols.map(c =>
-          struct(lit(c).as("g"), md5(col(c).cast("string")).as("h"))): _*))
-          .as("kv"))
-          .select(col("kv.g"), col("kv.h")).filter(col("h").isNotNull)
-        val cand = graft.functions.TextQueries.kmvPartitionMins(hashes, K)
-          .distinct()
-        val est = graft.plans.TopKPerGroup
-          .topK(cand, Seq("lang"), Seq("h" -> true), K)
-          .groupBy(col("lang").as("col_name"))
-          .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
-        // LEFT join + coalesce — q183's all-null-column fix, mirrored
-        // (the production form must profile such a column too)
-        val kUsed = coalesce(col("k_used"), lit(0L))
-        val estv = when(kUsed < K, kUsed.cast("double"))
-          .otherwise(round(lit((K - 1).toDouble) /
-            (conv(substring(col("kth_hash"), 1, 15), 16, 10).cast("long")
-              .cast("double") / lit(1.152921504606846976e18)), 4))
-        basic.join(est, Seq("col_name"), "left_outer")
-          .select(lit(tbl).as("tbl"), col("col_name"), col("n_rows"),
-            col("n_null"), col("min_val"), col("max_val"),
-            kUsed.as("k_used"),
-            estv.as("est_ndv"))
-      }
-      profile("lineitem", lineitem(s, d),
-        Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_returnflag", "l_linestatus"))
-        .unionByName(profile("orders", orders(s, d),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")))
-        .unionByName(profile("documents", documents(s, d),
-          Seq("doc_id", "lang", "source", "n_chars")))
-        .unionByName(profile("events", events(s, d),
-          Seq("event_id", "user_id", "event_type")))
-        .orderBy(col("tbl"), col("col_name"))
+    // bottom-K selection and estimator arithmetic.
+    "q207_table_stats_prod" -> ((s, d) => analyze(s, d) { (tbl, df, cols) =>
+      val basic = melt(basicStats(df, cols), cols)(c =>
+        Seq(lit(c).as("col_name"), col("n_rows"),
+          col(s"${c}__nul").as("n_null"), col(s"${c}__min").as("min_val"),
+          col(s"${c}__max").as("max_val")))
+      // LEFT join + coalesce — q183's all-null-column fix, mirrored
+      // (the production form must profile such a column too)
+      val kUsed = coalesce(col("k_used"), lit(0L))
+      basic.join(kmvNdv(df, cols), Seq("col_name"), "left_outer")
+        .select(lit(tbl).as("tbl"), col("col_name"), col("n_rows"),
+          col("n_null"), col("min_val"), col("max_val"),
+          kUsed.as("k_used"),
+          Kmv.estimate(kUsed, col("kth_hash"), AnalyzeK).as("est_ndv"))
     }),
 
     // EQUI-DEPTH HISTOGRAM — the third leg of the ANALYZE family
@@ -760,11 +663,7 @@ object PipelineOps {
       // the MATERIALIZED sketch table: persisted so its three consumers
       // (window union, window-width count, and the merge cut) share one
       // events pass — the "reduce once, merge forever" contract
-      val sk = graft.SessionCache.tracked("pipeline",
-        graft.plans.TopKPerGroup.topK(
-          graft.functions.TextQueries.kmvPartitionMins(keys, K).distinct()
-            .withColumnRenamed("lang", "day"),
-          Seq("day"), Seq("h" -> true), K))
+      val sk = graft.SessionCache.tracked("pipeline", Kmv.sketch(keys, "day", K))
       val spine = sk.select(col("day").as("d")).distinct()
       val win = sk.join(broadcast(spine),
         col("day") >= date_format(date_sub(to_date(col("d")), 6),
@@ -781,10 +680,7 @@ object PipelineOps {
             "yyyy-MM-dd") && col("day") <= col("d"))
         .groupBy(col("d"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
-      val u = conv(substring(col("kth"), 1, 15), 16, 10).cast("long")
-        .cast("double") / lit(1.152921504606846976e18)
-      val estU = when(col("k_used") < K, col("k_used").cast("double"))
-        .otherwise(round(lit((K - 1).toDouble) / u, 4))
+      val estU = Kmv.estimate(col("k_used"), col("kth"), K)
       est.join(nDays, "d").join(exact, "d")
         .select(col("d").as("day"), col("n_days"), col("k_used"),
           estU.as("est_users"), col("exact_users"),
@@ -1123,6 +1019,84 @@ object PipelineOps {
         // fixture but a real divergence from the batch-recompute oracle)
         greatest(col("max_value"), col("d_max")).as("max_value"))
 
+  /** The tables and columns the ANALYZE family (q166, q183, q207) and
+    * its replays profile: join keys and categoricals (BIGINT /
+    * VARCHAR), where NDV and bounds actually drive plans. */
+  private val analyzed
+      : Seq[(String, (SparkSession, String) => DataFrame, Seq[String])] = Seq(
+    ("lineitem", lineitem _, Seq("l_orderkey", "l_partkey", "l_suppkey",
+      "l_returnflag", "l_linestatus")),
+    ("orders", orders _, Seq("o_orderkey", "o_custkey", "o_orderstatus",
+      "o_orderpriority")),
+    ("documents", documents _, Seq("doc_id", "lang", "source", "n_chars")),
+    ("events", events _, Seq("event_id", "user_id", "event_type")))
+
+  /** KMV sketch size of the sketched ANALYZE NDV (q183, q207). */
+  private val AnalyzeK = 256
+
+  /** One `profile(tbl, table, cols)` per analyzed table, unioned and
+    * ordered by (tbl, col_name). */
+  private def analyze(s: SparkSession, d: String)(
+      profile: (String, DataFrame, Seq[String]) => DataFrame): DataFrame =
+    analyzed.map { case (t, load, cs) => profile(t, load(s, d), cs) }
+      .reduce(_ unionByName _)
+      .orderBy(col("tbl"), col("col_name"))
+
+  /** Per-row struct-array melt: one output row per column in `cols`, its
+    * fields given by `row(c)`. Over a 1-row aggregate it turns the wide
+    * profile into (col_name, ...) rows; over a table it stays map-side. */
+  private def melt(df: DataFrame, cols: Seq[String])(
+      row: String => Seq[Column]): DataFrame =
+    df.select(explode(array(cols.map(c => struct(row(c): _*)): _*)).as("kv"))
+      .select(col("kv.*"))
+
+  /** n_rows plus per-column null count and string min/max, as one
+    * grouping-key-free aggregate: `${c}__nul`, `${c}__min`, `${c}__max`. */
+  private def basicStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = Seq(count(lit(1)).as("n_rows")) ++ cols.flatMap { c =>
+      Seq(
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nul"),
+        min(col(c)).cast("string").as(s"${c}__min"),
+        max(col(c)).cast("string").as(s"${c}__max"))
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Exact per-column NDV, `${c}__ndv`: the multi-distinct Expand. */
+  private def ndvStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = cols.map(c => countDistinct(col(c)).as(s"${c}__ndv"))
+    df.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The bounded-state NDV leg: (col_name, k_used, kth_hash) from each
+    * column's bottom-K md5 sketch; the melt stays map-side and the
+    * pre-cut bounds what shuffles. All-null columns yield no row. */
+  private def kmvNdv(df: DataFrame, cols: Seq[String]): DataFrame =
+    Kmv.sketch(melt(df, cols)(c => Seq(lit(c).as("col_name"),
+        md5(col(c).cast("string")).as("h"))).filter(col("h").isNotNull),
+      "col_name", AnalyzeK)
+      .groupBy(col("col_name"))
+      .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
+
+  /** The ANALYZE replays: one `row(tbl, col)` SELECT per analyzed
+    * column, unioned and ordered like the engine side. */
+  private def analyzeSql(row: (String, String) => String): String =
+    analyzed.flatMap { case (t, _, cs) => cs.map(row(t, _)) }
+      .mkString("", " UNION ALL ", " ORDER BY tbl, col_name")
+
+  /** [[basicStats]] as DuckDB select-list text over column `c`. */
+  private def basicStatsSql(c: String): String =
+    s"""count(*) AS n_rows, count(*) - count($c) AS n_null,
+           CAST(min($c) AS VARCHAR) AS min_val,
+           CAST(max($c) AS VARCHAR) AS max_val"""
+
+  /** [[kmvNdv]] for one column as a DuckDB derived table `s`, the
+    * selection as ORDER BY h LIMIT K over the distinct non-null keys. */
+  private def kmvNdvSql(t: String, c: String): String =
+    s"""(SELECT count(*) AS k_used, max(h) AS kth_hash FROM
+                (SELECT DISTINCT md5($c::VARCHAR) AS h FROM $t
+                 WHERE $c IS NOT NULL ORDER BY 1 LIMIT $AnalyzeK)) s"""
+
   /** q162's replay text, shared verbatim with the q163 gate's PSI leg
     * (the q132 compose-the-sibling's-oracle discipline). */
   private val DriftPsiSql: String =
@@ -1407,91 +1381,36 @@ object PipelineOps {
     // One UNION ALL block per profiled column, generated from the same
     // (table, columns) spec the Spark side uses — the replay recomputes
     // every stat directly per column.
-    "q166_table_stats" -> Seq(
-      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_returnflag", "l_linestatus"),
-      "orders" -> Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_orderpriority"),
-      "documents" -> Seq("doc_id", "lang", "source", "n_chars"),
-      "events" -> Seq("event_id", "user_id", "event_type"))
-      .flatMap { case (t, cs) => cs.map(c =>
-        s"""SELECT '$t' AS tbl, '$c' AS col_name, count(*) AS n_rows,
-           count(*) - count($c) AS n_null,
-           count(DISTINCT $c) AS n_distinct,
-           CAST(min($c) AS VARCHAR) AS min_val,
-           CAST(max($c) AS VARCHAR) AS max_val FROM $t""")
-      }.mkString("", " UNION ALL ", " ORDER BY tbl, col_name"),
+    "q166_table_stats" -> analyzeSql((t, c) =>
+      s"""SELECT '$t' AS tbl, '$c' AS col_name, ${basicStatsSql(c)},
+           count(DISTINCT $c) AS n_distinct FROM $t"""),
 
     // q183 replay: per profiled column, the basic stats + exact NDV
     // (q166's replay) AND the full KMV selection/estimator (q110's
-    // replay — same md5 bottom-256, same hex-fold, same division order),
-    // then the identical 25 % bound arithmetic. Generated from the same
-    // (table, columns) spec as the Spark side.
+    // replay — same md5 bottom-256, same estimator), then the identical
+    // 25 % bound arithmetic.
     "q183_table_stats_sketch" -> {
-      def hexfold(c: String) =
-        s"""list_reduce(list_prepend(0::BIGINT,
-           [strpos('0123456789abcdef', ch)::BIGINT - 1
-            for ch in string_split(substr($c, 1, 15), '')]),
-           (h, x) -> h * 16 + x)"""
-      def estSql =
-        s"""CASE WHEN s.k_used < 256 THEN CAST(s.k_used AS DOUBLE)
-           ELSE round(255.0 / (${hexfold("s.kth_hash")}
-             / 1152921504606846976.0), 4) END"""
-      Seq(
-        "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_returnflag", "l_linestatus"),
-        "orders" -> Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_orderpriority"),
-        "documents" -> Seq("doc_id", "lang", "source", "n_chars"),
-        "events" -> Seq("event_id", "user_id", "event_type"))
-        .flatMap { case (t, cs) => cs.map(c =>
-          s"""SELECT '$t' AS tbl, '$c' AS col_name, b.n_rows, b.n_null,
-             b.min_val, b.max_val, s.k_used, $estSql AS est_ndv,
+      val est = Kmv.estimateSql("s.k_used", "s.kth_hash", AnalyzeK)
+      analyzeSql((t, c) =>
+        s"""SELECT '$t' AS tbl, '$c' AS col_name, b.n_rows, b.n_null,
+             b.min_val, b.max_val, s.k_used, $est AS est_ndv,
              b.exact_ndv,
-             CAST(abs($estSql - b.exact_ndv) <= b.exact_ndv * 0.25 AS INT)
+             CAST(abs($est - b.exact_ndv) <= b.exact_ndv * 0.25 AS INT)
                AS within_bound
            FROM
-             (SELECT count(*) AS n_rows, count(*) - count($c) AS n_null,
-                CAST(min($c) AS VARCHAR) AS min_val,
-                CAST(max($c) AS VARCHAR) AS max_val,
+             (SELECT ${basicStatsSql(c)},
                 count(DISTINCT $c) AS exact_ndv FROM $t) b,
-             (SELECT count(*) AS k_used, max(h) AS kth_hash FROM
-                (SELECT DISTINCT md5($c::VARCHAR) AS h FROM $t
-                 WHERE $c IS NOT NULL ORDER BY 1 LIMIT 256)) s""")
-        }.mkString("", " UNION ALL ", " ORDER BY tbl, col_name")
+             ${kmvNdvSql(t, c)}""")
     },
 
     // q207 replay: q183's minus the exact leg — basic stats plus the
-    // identical KMV bottom-256 selection and hex-fold estimator.
-    "q207_table_stats_prod" -> {
-      def hexfold(c: String) =
-        s"""list_reduce(list_prepend(0::BIGINT,
-           [strpos('0123456789abcdef', ch)::BIGINT - 1
-            for ch in string_split(substr($c, 1, 15), '')]),
-           (h, x) -> h * 16 + x)"""
-      def estSql =
-        s"""CASE WHEN s.k_used < 256 THEN CAST(s.k_used AS DOUBLE)
-           ELSE round(255.0 / (${hexfold("s.kth_hash")}
-             / 1152921504606846976.0), 4) END"""
-      Seq(
-        "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_returnflag", "l_linestatus"),
-        "orders" -> Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_orderpriority"),
-        "documents" -> Seq("doc_id", "lang", "source", "n_chars"),
-        "events" -> Seq("event_id", "user_id", "event_type"))
-        .flatMap { case (t, cs) => cs.map(c =>
-          s"""SELECT '$t' AS tbl, '$c' AS col_name, b.n_rows, b.n_null,
-             b.min_val, b.max_val, s.k_used, $estSql AS est_ndv
-           FROM
-             (SELECT count(*) AS n_rows, count(*) - count($c) AS n_null,
-                CAST(min($c) AS VARCHAR) AS min_val,
-                CAST(max($c) AS VARCHAR) AS max_val FROM $t) b,
-             (SELECT count(*) AS k_used, max(h) AS kth_hash FROM
-                (SELECT DISTINCT md5($c::VARCHAR) AS h FROM $t
-                 WHERE $c IS NOT NULL ORDER BY 1 LIMIT 256)) s""")
-        }.mkString("", " UNION ALL ", " ORDER BY tbl, col_name")
-    },
+    // identical KMV bottom-256 selection and estimator.
+    "q207_table_stats_prod" -> analyzeSql((t, c) =>
+      s"""SELECT '$t' AS tbl, '$c' AS col_name, b.n_rows, b.n_null,
+           b.min_val, b.max_val, s.k_used,
+           ${Kmv.estimateSql("s.k_used", "s.kth_hash", AnalyzeK)} AS est_ndv
+         FROM (SELECT ${basicStatsSql(c)} FROM $t) b,
+           ${kmvNdvSql(t, c)}"""),
 
     // The IVM theorem as SQL: the replay is the FULL recompute the
     // incremental path must equal.
@@ -1555,10 +1474,10 @@ object PipelineOps {
     },
 
     // q197 replay: per-day bottom-256 via row_number, 7-day window
-    // union + bottom-256, the q110 hex-fold estimator, exact rolling
+    // union + bottom-256, the shared KMV estimator, exact rolling
     // countDistinct as the audit column
     "q197_sketch_rollup" ->
-      """WITH du AS (
+      s"""WITH du AS (
            SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
          keys AS (
            SELECT DISTINCT day, md5(user_id::VARCHAR) AS h FROM du),
@@ -1587,12 +1506,7 @@ object PipelineOps {
            GROUP BY sp.day),
          fin AS (
            SELECT e.d, u.n_days, e.k_used,
-             CASE WHEN e.k_used < 256 THEN CAST(e.k_used AS DOUBLE)
-               ELSE round(255.0 / (list_reduce(list_prepend(0::BIGINT,
-                 [strpos('0123456789abcdef', c)::BIGINT - 1
-                  for c in string_split(substr(e.kth, 1, 15), '')]),
-                 (h, x) -> h * 16 + x) / 1152921504606846976.0), 4)
-               END AS est_users,
+             ${Kmv.estimateSql("e.k_used", "e.kth", 256)} AS est_users,
              x.exact_users
            FROM est e JOIN uw u ON u.d = e.d JOIN exact x ON x.d = e.d)
          SELECT strftime(d, '%Y-%m-%d') AS day, n_days, k_used, est_users,

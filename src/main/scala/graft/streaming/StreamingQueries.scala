@@ -388,10 +388,11 @@ object StreamingQueries {
          round(sum(e.value), 6) AS sum_value
          FROM events e JOIN customer c ON e.user_id = c.c_custkey - 1
          GROUP BY c.c_mktsegment ORDER BY segment""",
-    // streaming KMV replay: per-type k-smallest distinct md5 keys, the
-    // q110 hex fold and division order, exact-count branch under k
-    "q126_stream_kmv_users" ->
-      """WITH keys AS (
+    // streaming KMV replay: per-type k-smallest distinct md5 keys and
+    // the shared estimator at the aggregator's K
+    "q126_stream_kmv_users" -> {
+      val K = graft.functions.CustomAgg.KmvDistinct.K
+      s"""WITH keys AS (
            SELECT DISTINCT event_type, md5(user_id::VARCHAR) AS h
            FROM events),
          ranked AS (
@@ -400,21 +401,17 @@ object StreamingQueries {
            FROM keys),
          agg AS (
            SELECT event_type,
-             count(*) FILTER (WHERE rn <= 64) AS k_used,
-             max(CASE WHEN rn = 64 THEN h END) AS kth
+             count(*) FILTER (WHERE rn <= $K) AS k_used,
+             max(CASE WHEN rn = $K THEN h END) AS kth
            FROM ranked GROUP BY event_type),
          ev AS (
            SELECT event_type, count(*) AS n_events FROM events
            GROUP BY event_type)
          SELECT e.event_type, e.n_events,
-           CASE WHEN a.k_used < 64 THEN CAST(a.k_used AS DOUBLE)
-           ELSE round(63.0 / (list_reduce(list_prepend(0::BIGINT,
-             [strpos('0123456789abcdef', c)::BIGINT - 1
-              for c in string_split(substr(a.kth, 1, 15), '')]),
-             (acc, x) -> acc * 16 + x) / 1152921504606846976.0), 4)
-           END AS est_users
+           ${graft.functions.Kmv.estimateSql("a.k_used", "a.kth", K)} AS est_users
          FROM ev e JOIN agg a USING (event_type)
-         ORDER BY e.event_type""",
+         ORDER BY e.event_type"""
+    },
     // streaming quantile-sketch replay: per-type bottom-256 md5 row
     // keys, the q153 (value, key)-ordered positional pick
     "q156_stream_quantiles" ->

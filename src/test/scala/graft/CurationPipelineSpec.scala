@@ -983,7 +983,7 @@ class CurationPipelineSpec extends TestSpark {
   test("benchGramSet fail-fast: an oversized benchmark slice raises, naming the q74 fallback") {
     // the sf0.001 slice holds ~500 distinct 8-grams — far under the real
     // 2M cap; driving the cap below it simulates a corpus-sized slice
-    // hitting the guard (the q106/kmvPartitionMins fail-fast discipline)
+    // hitting the guard (the q106/Kmv.partitionMins fail-fast discipline)
     val ex = intercept[IllegalArgumentException] {
       CurationPipeline.benchGramSet(spark, sf0001, cap = 10)
     }
