@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.MicroBatch
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,6 +84,12 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gh")).as("n_shared"),
         countDistinct(col("bdoc")).as("n_bench_docs"))
+
+  /** q139's per-batch verdict sink. Read with this schema: a corpus with
+    * no contaminated doc writes no sink file to infer one from. */
+  private val decontamFlagsSchema = new org.apache.spark.sql.types.StructType()
+    .add("doc_id", "long").add("n_shared", "long")
+    .add("n_bench_docs", "long").add("batch_id", "long")
 
   /** (doc_id, shingles array) relation — the base for signatures and
     * verification; one typed map pass. Callers that use it more than once
@@ -623,8 +630,8 @@ object Dedup {
     // (it is a FROZEN artifact — q137's 16-hex-key store), then corpus
     // documents ARRIVE as a stream and every micro-batch's grams check
     // against it, per-doc verdicts landing in a batch-partitioned sink
-    // exactly-once (q82's dynamic-partition-overwrite contract: a
-    // replayed batch replaces exactly its own partition). Unlike dedup
+    // exactly-once (the [[graft.MicroBatch]] contract: a replayed batch
+    // replaces exactly its own partition). Unlike dedup
     // admission, a verdict depends ONLY on the frozen index — never on
     // earlier batches — so the streamed result is bit-identical to the
     // one-shot batch check under ANY batch-boundary placement, and
@@ -640,34 +647,13 @@ object Dedup {
       val docs = documents(s, d)
       gramKeys(s, docs.filter(col("doc_id") % 5 === 0), "bdoc")
         .write.mode("overwrite").parquet(storeDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      MicroBatch.reset(s, decontamFlagsSchema, sinkDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
         .filter(col("doc_id") % 5 =!= 0)
-      // verdict rows are benchmark-overlap-sized; 8 matches the q130
-      // streaming width convention (state-free here, but the per-batch
-      // shuffle width still should not inherit the batch conf)
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          checkAgainstGramStore(gramKeys(s, batch, "doc_id"),
-            broadcast(s.read.parquet(storeDir)))
-            .withColumn("batch_id", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(sinkDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // explicit schema: a corpus with ZERO contaminated docs writes no
-      // sink files at all (dynamic overwrite of empty batches), and a
-      // schema-inferring read of the empty dir would throw instead of
-      // returning the empty verdict table q137 returns (review finding)
-      val sinkSchema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("n_shared", "long")
-        .add("n_bench_docs", "long").add("batch_id", "long")
-      s.read.schema(sinkSchema).parquet(sinkDir)
+      MicroBatch.drain(src)((batch, id) =>
+        MicroBatch.write(checkAgainstGramStore(gramKeys(s, batch, "doc_id"),
+          broadcast(s.read.parquet(storeDir))), sinkDir, id))
+      s.read.schema(decontamFlagsSchema).parquet(sinkDir)
         .select(col("doc_id"), col("n_shared"), col("n_bench_docs"))
         .orderBy(col("doc_id"))
     }),

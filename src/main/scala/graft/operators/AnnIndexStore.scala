@@ -1,11 +1,11 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
 import graft.functions.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
 
 /** MATERIALIZED IVF+PQ vector index — the persistent, appendable form of
   * the in-query IVFADC composition (q131), and the similarity-search
@@ -27,8 +27,8 @@ import org.apache.spark.sql.streaming.Trigger
   *    parquet partition directories.
   *  - [[append]]: new vectors encode against the FROZEN centroids +
   *    codebook (two bounded reads: √n + 16 rows) — no retraining, no
-  *    touch of existing codes; dynamic partition overwrite makes a
-  *    replayed batch idempotent (the q82/q129 sink contract).
+  *    touch of existing codes; a replayed batch replaces exactly its
+  *    own partition (the [[graft.MicroBatch]] contract).
   *  - [[search]]: reads ONLY the stored index — probe cells prune at
   *    the PARTITION level (`cell IN probed` becomes PartitionFilters on
   *    the codes scan: unprobed inverted lists are never even opened),
@@ -117,7 +117,7 @@ object AnnIndexStore {
       .coalesce(1).write.mode("overwrite").parquet(centroidsPath(dir))
     cb.toSeq.zipWithIndex.map { case (v, i) => (i, v) }.toDF("code", "cv")
       .coalesce(1).write.mode("overwrite").parquet(codebookPath(dir))
-    writeCodes(s, emb, cents, cb, dir, -1L, dynamic = false)
+    writeCodes(s, emb, cents, cb, dir, MicroBatch.Seed)
   }
 
   /** Encode one batch of new vectors against the FROZEN index parameters
@@ -125,7 +125,7 @@ object AnnIndexStore {
     * replayed batch overwrites exactly its own partitions. */
   def append(s: SparkSession, emb: DataFrame, dir: String, batchId: Long): Unit = {
     val (cents, cb) = readParams(s, dir)
-    writeCodes(s, emb, cents, cb, dir, batchId, dynamic = true)
+    writeCodes(s, emb, cents, cb, dir, batchId)
   }
 
   /** The deterministic multiplicative-hash sample shared by both trained
@@ -154,20 +154,17 @@ object AnnIndexStore {
     * build-time and append-time encodings are indistinguishable. */
   private def writeCodes(s: SparkSession, emb: DataFrame,
       cents: Array[(Long, Array[Float])], cb: Array[Array[Float]],
-      dir: String, batchId: Long, dynamic: Boolean): Unit = {
+      dir: String, batchId: Long): Unit = {
     import s.implicits._
     val bcC = s.sparkContext.broadcast(cents)
     val bcCb = s.sparkContext.broadcast(cb)
-    val mode = if (dynamic) "dynamic" else "static"
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    val codes = emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .map { case (id, v) =>
         val (cid, cvec) = Similarity.nearestCentroid(v, bcC.value)
-        val codes = Similarity.pqEncode(Similarity.residual(v, cvec), bcCb.value)
-        (id, codes, batchId, cid)
+        (id, Similarity.pqEncode(Similarity.residual(v, cvec), bcCb.value), cid)
       }
-      .toDF("vec_id", "codes", "batch_id", "cell")
-      .write.mode("overwrite").option("partitionOverwriteMode", mode)
-      .partitionBy("batch_id", "cell").parquet(codesPath(dir))
+      .toDF("vec_id", "codes", "cell")
+    MicroBatch.write(codes, codesPath(dir), batchId, subParts = Seq("cell"))
   }
 
   /** ADC search against the stored index only: per probe, rank its
@@ -312,6 +309,20 @@ object AnnIndexStore {
   def vectorSurvivors(batch: DataFrame, pairs: DataFrame): DataFrame =
     batch.join(pairs.select(col("vec_id")).distinct(),
       Seq("vec_id"), "left_anti")
+
+  /** One micro-batch of the streaming vector admission (q138): admit the
+    * batch against the index and corpus partitions below `id`, land its
+    * survivors in the admitted-corpus table and append their codes to
+    * the index, both as partition `id`. */
+  private[graft] def vectorBatch(s: SparkSession, batch: DataFrame, id: Long,
+      storeDir: String, corpusDir: String): Unit =
+    MicroBatch.scoped(batch) { b =>
+      val pairs = admitVectors(s, b, storeDir, corpusDir, beforeBatch = id)
+      MicroBatch.scoped(vectorSurvivors(b, pairs)) { surv =>
+        MicroBatch.write(surv, corpusDir, id)
+        append(s, surv, storeDir, id)
+      }
+    }
 
   /** INDEX STALENESS REPORT (q145): per coarse cell, membership counts
     * and worst-member fit split build-vs-appended — the retrain signal
@@ -465,10 +476,10 @@ object AnnIndexStore {
     // admitted by IVF-pruned exact-cosine dedup (coarse cells from the
     // stored codes prune candidates, the q77/q122 cos ≥ 0.4 near-dup
     // edge rejects), survivors land in the admitted-corpus table
-    // exactly-once (dynamic partition overwrite, the q82 contract) AND
-    // their codes append to the index so the NEXT batch both sees them
-    // as dedup candidates and can be served by search — ingestion
-    // keeps the ANN index continuously queryable. Bounded single-file
+    // exactly-once (the [[graft.MicroBatch]] contract) AND their codes
+    // append to the index so the NEXT batch both sees them as dedup
+    // candidates and can be served by search — ingestion keeps the ANN
+    // index continuously queryable. Bounded single-file
     // replay = one batch, so the final table is seed + delta vectors
     // with no ≥ 0.4 stored neighbor in a probed cell — exactly what
     // the oracle computes; multi-batch sequential semantics and
@@ -477,38 +488,12 @@ object AnnIndexStore {
     "q138_stream_vector_admit" -> ((s, d) => {
       val storeDir = scratchDir(s, "q138_store_" + graft.Tables.datasetTag(d))
       val corpusDir = scratchDir(s, "q138_corpus_" + graft.Tables.datasetTag(d))
-      val embSchema = s.read.parquet(s"$d/embeddings.parquet").schema
       val seed = embeddings(s, d).filter(notHeldOut(col("vec_id")))
       build(s, seed, storeDir)
-      seed.withColumn("batch_id", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("batch_id").parquet(corpusDir)
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(embSchema).parquet(s"$d/embeddings.parq*")
+      MicroBatch.write(seed, corpusDir, MicroBatch.Seed)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "embeddings")
         .filter(!notHeldOut(col("vec_id")))
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // batch-local persist lifetimes (q130's discipline)
-          val b = batch
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = admitVectors(s, b, storeDir, corpusDir,
-              beforeBatch = id)
-            val surv = vectorSurvivors(b, pairs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              surv.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(corpusDir)
-              append(s, surv, storeDir, id)
-            } finally { surv.unpersist(); () }
-          } finally { b.unpersist(); () }
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.drain(src)(vectorBatch(s, _, _, storeDir, corpusDir))
       s.read.parquet(corpusDir)
         .select(col("vec_id"), size(col("embedding")).as("n_dims"))
         .orderBy(col("vec_id"))

@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -150,10 +151,7 @@ object CurationAudits {
     val sentinel = deltaDf.crossJoin(prevDelta)
       .select(lit(null).cast("string").as("tok"),
         (col("delta") + col("pdelta")).as("cnt"))
-    kept.unionByName(sentinel)
-      .withColumn("batch_id", lit(id))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
+    MicroBatch.write(kept.unionByName(sentinel), storeDir, id)
   }
 
   /** Distinct 16-hex gram keys of a document batch — one map-side
@@ -171,42 +169,25 @@ object CurationAudits {
     * against every EARLIER batch's store partitions (batch_id < id —
     * partition-pruned, and replay-safe: a replayed batch never sees its
     * own previous output), land the one-row summary and the fresh gram
-    * keys in batch partitions under dynamic overwrite (the q82
-    * exactly-once contract: a replayed batch replaces exactly its own
-    * partitions). Per-batch cost: one gram pass over the batch + a
-    * hash-keyed join against the store — linear, nothing doc-pairwise;
-    * the three scalar counts are 1-row aggregates over the persisted
-    * batch relations. */
+    * keys in batch partitions (the [[graft.MicroBatch]] contract: a
+    * replayed batch replaces exactly its own partitions). Per-batch
+    * cost: one gram pass over the batch + a hash-keyed join against the
+    * store — linear, nothing doc-pairwise; the three scalar counts are
+    * 1-row aggregates over the persisted batch relations. */
   private[graft] def noveltyBatch(s: SparkSession, batch: DataFrame,
       id: Long, storeDir: String, sinkDir: String): Unit = {
     import s.implicits._
     val store = s.read.schema(gramStoreSchema).parquet(storeDir)
       .filter(col("batch_id") < id)
-    val bg = batchGramKeys(s, batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val fresh = bg.join(store.select(col("gh")), Seq("gh"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        Seq((batch.count(), bg.count(), fresh.count(), id))
-          .toDF("n_docs", "grams_seen", "new_grams", "batch_id")
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(sinkDir)
-        fresh.withColumn("batch_id", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(storeDir)
-      } finally { fresh.unpersist(); () }
-    } finally { bg.unpersist(); () }
+    MicroBatch.scoped(batchGramKeys(s, batch)) { bg =>
+      val unseen = bg.join(store.select(col("gh")), Seq("gh"), "left_anti")
+      MicroBatch.scoped(unseen) { fresh =>
+        MicroBatch.write(Seq((batch.count(), bg.count(), fresh.count()))
+          .toDF("n_docs", "grams_seen", "new_grams"), sinkDir, id)
+        MicroBatch.write(fresh, storeDir, id)
+      }
+    }
   }
-
-  /** Hard-reset a batch-partitioned scratch table to empty (static
-    * overwrite drops ALL partitions — a re-invocation in the same
-    * session must not admit against a previous run's store). */
-  private def resetTable(s: SparkSession, schema: StructType,
-      dir: String): Unit =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // N-GRAM NOVELTY CURVE — per ingestion batch (50 equal doc_id
@@ -387,17 +368,9 @@ object CurationAudits {
     "q199_stream_heavy_hitters" -> ((s, d) => {
       val tag = graft.Tables.datasetTag(d)
       val storeDir = graft.Tables.scratchDir(s, "q199_store_" + tag)
-      resetTable(s, hhStoreSchema, storeDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          heavyHittersBatch(s, batch, id, storeDir, cap = 64)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.reset(s, hhStoreSchema, storeDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
+      MicroBatch.drain(src)(heavyHittersBatch(s, _, _, storeDir, cap = 64))
       val store = s.read.schema(hhStoreSchema).parquet(storeDir)
       val latest = store.agg(max(col("batch_id")).as("m"))
       val fin = store.join(latest, col("batch_id") === col("m"))
@@ -433,18 +406,10 @@ object CurationAudits {
       val tag = graft.Tables.datasetTag(d)
       val storeDir = graft.Tables.scratchDir(s, "q190_store_" + tag)
       val sinkDir = graft.Tables.scratchDir(s, "q190_sink_" + tag)
-      resetTable(s, gramStoreSchema, storeDir)
-      resetTable(s, noveltySinkSchema, sinkDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          noveltyBatch(s, batch, id, storeDir, sinkDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.reset(s, gramStoreSchema, storeDir)
+      MicroBatch.reset(s, noveltySinkSchema, sinkDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
+      MicroBatch.drain(src)(noveltyBatch(s, _, _, storeDir, sinkDir))
       s.read.schema(noveltySinkSchema).parquet(sinkDir)
         .select(col("batch_id"), col("n_docs"), col("grams_seen"),
           col("new_grams"),
@@ -470,46 +435,31 @@ object CurationAudits {
       val tag = graft.Tables.datasetTag(d)
       val sinkDir = graft.Tables.scratchDir(s, "q219_sink_" + tag)
       val statsDir = graft.Tables.scratchDir(s, "q219_stats_" + tag)
-      resetTable(s, admitSinkSchema, sinkDir)
-      resetTable(s, admitStatsSchema, statsDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
-        .parquet(s"$d/documents.parq*")
+      MicroBatch.reset(s, admitSinkSchema, sinkDir)
+      MicroBatch.reset(s, admitStatsSchema, statsDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
         .filter(col("source") === "src0")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val verdicts = batch.select(col("doc_id"))
-            .join(CorpusCleaning.qualityLogitOf(batch)
-              .select(col("doc_id"), (col("score") >= 0).as("q_keep")),
-              Seq("doc_id"))
-            .join(CorpusCleaning.repetitionStatsOf(batch)
-              .select(col("doc_id"), (col("keep") === 1).as("r_keep")),
-              Seq("doc_id"), "left_outer")
-            .select(col("doc_id"), col("q_keep"),
-              coalesce(col("r_keep"), lit(true)).as("r_keep"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            verdicts.filter(col("q_keep") && col("r_keep"))
-              .select(col("doc_id")).withColumn("batch_id", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(sinkDir)
-            verdicts.agg(count(lit(1)).as("n_seen"),
-                sum((col("q_keep") && col("r_keep")).cast("long"))
-                  .as("n_admitted"),
-                sum((!col("q_keep")).cast("long")).as("n_quality_rejects"),
-                sum((!col("r_keep")).cast("long"))
-                  .as("n_repetition_rejects"))
-              .withColumn("batch_id", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(statsDir)
-          } finally { verdicts.unpersist(); () }
-          ()
+      MicroBatch.drain(src) { (batch, id) =>
+        val gates = batch.select(col("doc_id"))
+          .join(CorpusCleaning.qualityLogitOf(batch)
+            .select(col("doc_id"), (col("score") >= 0).as("q_keep")),
+            Seq("doc_id"))
+          .join(CorpusCleaning.repetitionStatsOf(batch)
+            .select(col("doc_id"), (col("keep") === 1).as("r_keep")),
+            Seq("doc_id"), "left_outer")
+          .select(col("doc_id"), col("q_keep"),
+            coalesce(col("r_keep"), lit(true)).as("r_keep"))
+        MicroBatch.scoped(gates) { verdicts =>
+          MicroBatch.write(verdicts.filter(col("q_keep") && col("r_keep"))
+            .select(col("doc_id")), sinkDir, id)
+          MicroBatch.write(verdicts.agg(count(lit(1)).as("n_seen"),
+              sum((col("q_keep") && col("r_keep")).cast("long"))
+                .as("n_admitted"),
+              sum((!col("q_keep")).cast("long")).as("n_quality_rejects"),
+              sum((!col("r_keep")).cast("long"))
+                .as("n_repetition_rejects")), statsDir, id)
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       val sunk = s.read.schema(admitSinkSchema).parquet(sinkDir)
         .agg(count(lit(1)).as("n_sink_docs"))
       s.read.schema(admitStatsSchema).parquet(statsDir)

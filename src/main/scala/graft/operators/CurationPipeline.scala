@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -373,6 +374,12 @@ object CurationPipeline {
     .add("n_repetition", "long").add("n_quality", "long")
     .add("n_near_dup", "long").add("n_contaminated", "long")
     .add("n_admit", "long").add("batch_id", "long")
+  /** One row per (release, source, lang): the release manifest store of
+    * q239 and q246. */
+  private val releaseManifestSchema = new org.apache.spark.sql.types.StructType()
+    .add("source", "string").add("lang", "string")
+    .add("n_kept", "long").add("n_new_kept", "long")
+    .add("n_displaced", "long").add("release_id", "long")
   /** q247's per-batch export delta rows: one per admitted doc — its
     * rendezvous shard, token count, and 52-bit md5 content fold. All
     * three are ORDER-FREE under aggregation, which is what makes the
@@ -382,16 +389,6 @@ object CurationPipeline {
     .add("doc_id", "long").add("shard", "long").add("n_tok", "long")
     .add("h", "long").add("batch_id", "long")
 
-  /** Hard-reset a batch-partitioned scratch table to empty (static
-    * overwrite drops ALL partitions — a re-invocation in the same
-    * session must not admit against a previous run's sink). */
-  private def resetBatchTable(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, dir: String): Unit =
-    s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(dir)
-
   /** One micro-batch of the streaming delta curation (q232): the q226
     * five-gate verdict with the BATCH as the delta. Batch-side
     * relations (shingles, signatures, bands, all three per-doc gate
@@ -400,8 +397,8 @@ object CurationPipeline {
     * verification — is FROZEN, read from the corpus at `d` (the q127
     * delta discipline: batch bands broadcast against the base, the
     * base never shuffles for candidates). Verdicts and the funnel row
-    * land under the batch's own partition (dynamic overwrite ⇒ a
-    * replayed batch replaces exactly itself). */
+    * land under the batch's own partition (a replayed batch replaces
+    * exactly itself). */
   private[graft] def streamDeltaBatch(s: SparkSession, d: String,
       batch: DataFrame, id: Long, sinkDir: String, statsDir: String): Unit = {
     val base = documents(s, d).filter(col("source") =!= "src1" &&
@@ -460,29 +457,21 @@ object CurationPipeline {
       .when(coalesce(col("near_dup"), lit(false)), "near_dup")
       .when(col("contaminated"), "contaminated")
       .otherwise("admit")
-    val verdicts = batch.select(col("doc_id"), col("lang"))
+    val gated = batch.select(col("doc_id"), col("lang"))
       .join(urlFlags, "doc_id")
       .join(repContam, "doc_id")
       .join(quality, "doc_id")
       .join(dupIds, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("lang"), verdictExpr.as("verdict"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      verdicts.withColumn("batch_id", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(sinkDir)
-      def cnt(v: String) =
-        sum((col("verdict") === v).cast("long")).as("n_" + v)
-      verdicts.agg(count(lit(1)).as("n_seen"), cnt("url_dup"),
-          cnt("repetition"), cnt("quality"), cnt("near_dup"),
-          cnt("contaminated"), cnt("admit"))
-        .withColumn("batch_id", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statsDir)
-    } finally { verdicts.unpersist(); () }
-    ()
+    def cnt(v: String) =
+      sum((col("verdict") === v).cast("long")).as("n_" + v)
+    MicroBatch.scoped(gated) { verdicts =>
+      MicroBatch.write(verdicts, sinkDir, id)
+      MicroBatch.write(verdicts.agg(count(lit(1)).as("n_seen"),
+          cnt("url_dup"), cnt("repetition"), cnt("quality"),
+          cnt("near_dup"), cnt("contaminated"), cnt("admit")),
+        statsDir, id)
+    }
   }
 
   /** q237's batch count and split rule: the src1 delta arrives as
@@ -495,18 +484,16 @@ object CurationPipeline {
 
   /** Seed q237's ADVANCING state from the frozen base corpus: the
     * MinHash signature store (seed partition -1 — [[SignatureStore
-    * .build]]) and the canonical-URL store (same partition layout).
-    * Static overwrite: a re-invocation starts from a clean seed. */
+    * .build]]) and the canonical-URL store (same partition layout). A
+    * seed write replaces the table: a re-invocation starts clean. */
   private[graft] def seedAdvancingState(s: SparkSession, d: String,
       storeDir: String, urlDir: String): Unit = {
     val base = documents(s, d).filter(col("source") =!= "src1" &&
       col("doc_id") % 5 =!= 0)
     SignatureStore.build(s, base, storeDir)
     val curlOf = CorpusCleaning.canonicalUrl(CorpusCleaning.syntheticUrl)
-    base.select(curlOf.as("curl")).distinct()
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(urlDir)
+    MicroBatch.write(base.select(curlOf.as("curl")).distinct(), urlDir,
+      MicroBatch.Seed)
   }
 
   /** Stage the src1 delta as [[AdvanceBatches]] single-file parquet
@@ -612,77 +599,54 @@ object CurationPipeline {
       val storeDir = graft.Tables.scratchDir(s, "q237_store_" + tag)
       val urlDir = graft.Tables.scratchDir(s, "q237_urls_" + tag)
       val manDir = graft.Tables.scratchDir(s, "q237_manifest_" + tag)
-      resetBatchTable(s, verdictSinkSchema, sinkDir)
-      resetBatchTable(s, exportManifestSchema, manDir)
+      MicroBatch.reset(s, verdictSinkSchema, sinkDir)
+      MicroBatch.reset(s, exportManifestSchema, manDir)
       seedAdvancingState(s, d, storeDir, urlDir)
       val inDir = stageAdvancingBatches(s, d)
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
       val src = graft.ChildSession.forStream(s).readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*.parquet")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          advancingIngestBatch(s, d, batch, id, sinkDir, storeDir,
-            urlDir, Some(manDir))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.drain(src)(advancingIngestBatch(s, d, _, _, sinkDir,
+        storeDir, urlDir, Some(manDir)))
       (sinkDir, manDir)
     }
 
   /** One micro-batch of q237: verdicts land under the batch's own
     * partition, then the batch's ADMISSIONS advance the state — their
     * bands/shingles append to the signature store and their canonical
-    * URLs to the URL store, both as partition `id` (dynamic overwrite ⇒
-    * a replayed batch replaces exactly its own contributions, and reads
-    * batch_id < id never see them). */
+    * URLs to the URL store, both as partition `id` (a replayed batch
+    * replaces exactly its own contributions, and reads batch_id < id
+    * never see them). */
   private[graft] def advancingIngestBatch(s: SparkSession, d: String,
       batch: DataFrame, id: Long, sinkDir: String, storeDir: String,
-      urlDir: String, manifestDir: Option[String] = None): Unit = {
-    val deltaSh = graft.functions.Dedup.shinglesOfDocs(s, batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verdicts = advancingVerdicts(s, d, batch, deltaSh, id,
-          storeDir, urlDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        verdicts.withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(sinkDir)
+      urlDir: String, manifestDir: Option[String] = None): Unit =
+    MicroBatch.scoped(graft.functions.Dedup.shinglesOfDocs(s, batch)) { deltaSh =>
+      MicroBatch.scoped(advancingVerdicts(s, d, batch, deltaSh, id,
+          storeDir, urlDir)) { verdicts =>
+        MicroBatch.write(verdicts, sinkDir, id)
         val curlOf = CorpusCleaning.canonicalUrl(CorpusCleaning.syntheticUrl)
-        val admitted = batch.join(
+        MicroBatch.scoped(batch.join(
             verdicts.filter(col("verdict") === "admit").select("doc_id"),
-            "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+            "doc_id")) { admitted =>
           SignatureStore.append(s, admitted, storeDir, id)
-          admitted.select(curlOf.as("curl")).distinct()
-            .withColumn("batch_id", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(urlDir)
+          MicroBatch.write(admitted.select(curlOf.as("curl")).distinct(),
+            urlDir, id)
           // q247: the batch's admissions flow straight into the
           // incremental shard-manifest delta (same exactly-once
           // partition discipline as the verdict sink and both stores)
           manifestDir.foreach { mdir =>
-            admitted.select(col("doc_id"),
+            MicroBatch.write(admitted.select(col("doc_id"),
                 CurationAudits.hrwOwnerKeyed(col("doc_id").cast("string"), 8)
                   .cast("long").as("shard"),
                 size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
                   .cast("long").as("n_tok"),
                 conv(substring(md5(col("text")), 1, 13), 16, 10)
-                  .cast("long").as("h"))
-              .withColumn("batch_id", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(mdir)
+                  .cast("long").as("h")),
+              mdir, id)
           }
-        } finally { admitted.unpersist(); () }
-      } finally { verdicts.unpersist(); () }
-    } finally { deltaSh.unpersist(); () }
-    ()
-  }
+        }
+      }
+    }
 
   /** q246's engine over an arbitrary corpus / gram set / seed cluster
     * labels / release list — see the query comment for the full
@@ -718,21 +682,11 @@ object CurationPipeline {
     val evDir = graft.Tables.scratchDir(s, scratchTag + "_state")
     val sigDir = graft.Tables.scratchDir(s, scratchTag + "_sig")
     val urlDir = graft.Tables.scratchDir(s, scratchTag + "_urls")
-    val manSchema = new org.apache.spark.sql.types.StructType()
-      .add("source", "string").add("lang", "string")
-      .add("n_kept", "long").add("n_new_kept", "long")
-      .add("n_displaced", "long").add("release_id", "long")
     val evSchema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("source", "string").add("lang", "string")
       .add("score", "double").add("ev", "string").add("release_id", "long")
-    def resetStore(schema: org.apache.spark.sql.types.StructType,
-        dir: String): Unit =
-      s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("release_id").parquet(dir)
-    resetStore(manSchema, manDir)
-    resetStore(evSchema, evDir)
+    MicroBatch.reset(s, releaseManifestSchema, manDir, "release_id")
+    MicroBatch.reset(s, evSchema, evDir, "release_id")
 
     // ---- release 1: the seed pays the one full provenance build
     val seedPop = all.filter(!col("source").isin(releases.map(_._2): _*) &&
@@ -743,33 +697,25 @@ object CurationPipeline {
       .select(col("doc_id"), col("source"), col("lang"))
       .join(CorpusCleaning.qualityLogitOf(seedPop)
         .select(col("doc_id"), col("score")), "doc_id")
-    kept1.withColumn("ev", lit("add")).withColumn("release_id", lit(1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("release_id").parquet(evDir)
+    MicroBatch.write(kept1.withColumn("ev", lit("add")), evDir, 1L, "release_id")
     // advancing stores seed from the KEPT set (= the probe state);
     // curl store seeds from the full processed population (q237's
     // choice — a URL once seen stays seen)
     SignatureStore.build(s,
       seedPop.join(kept1.select(col("doc_id")), "doc_id"), sigDir)
-    seedPop.select(curlOf.as("curl")).distinct()
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(urlDir)
-    kept1.groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("n_kept"))
-      .withColumn("n_new_kept", col("n_kept"))
-      .withColumn("n_displaced", lit(0L))
-      .withColumn("release_id", lit(1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("release_id").parquet(manDir)
+    MicroBatch.write(seedPop.select(curlOf.as("curl")).distinct(), urlDir,
+      MicroBatch.Seed)
+    MicroBatch.write(kept1.groupBy(col("source"), col("lang"))
+        .agg(count(lit(1)).as("n_kept"))
+        .withColumn("n_new_kept", col("n_kept"))
+        .withColumn("n_displaced", lit(0L)),
+      manDir, 1L, "release_id")
 
     // ---- releases 2..n: O(delta) against the frozen prior state
     for ((rid, srcName) <- releases) {
       val delta = all.filter(col("source") === srcName &&
         col("doc_id") % 5 =!= 0)
-      val deltaSh = graft.functions.Dedup.shinglesOfDocs(s, delta)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      MicroBatch.scoped(graft.functions.Dedup.shinglesOfDocs(s, delta)) { deltaSh =>
         val ev = s.read.schema(evSchema).parquet(evDir)
           .filter(col("release_id") < rid)
         val stateKept = ev.filter(col("ev") === "add")
@@ -792,12 +738,11 @@ object CurationPipeline {
         // vs-state pairs, restricted to the CURRENT kept state (a doc
         // displaced by an earlier release no longer blocks anyone,
         // even though its bands remain in the store)
-        val pairs = SignatureStore
+        val statePairs = SignatureStore
           .admitShingles(s, deltaSh, sigDir, beforeBatch = rid)
           .join(stateKept.select(col("doc_id").as("doc_b"),
             col("score").as("b_score")), "doc_b")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        MicroBatch.scoped(statePairs) { pairs =>
           val best = pairs.groupBy(col("doc_a"))
             .agg(max(struct(col("b_score").as("bs"),
               (-col("doc_b")).as("nb"))).as("m"))
@@ -836,7 +781,7 @@ object CurationPipeline {
                   col("doc_id") < col("best_doc"))), "near_dup")
             .when(col("contaminated"), "contaminated")
             .otherwise("keep")
-          val verdicts = delta
+          val gated = delta
             .select(col("doc_id"), col("source"), col("lang"))
             .join(urlFlags, "doc_id")
             .join(repContam, "doc_id")
@@ -845,29 +790,22 @@ object CurationPipeline {
             .join(withinLoss, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("source"), col("lang"),
               col("score"), verdictExpr.as("verdict"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
+          MicroBatch.scoped(gated) { verdicts =>
             val admitted = verdicts.filter(col("verdict") === "keep")
             val displaced = pairs
               .join(admitted.select(col("doc_id").as("doc_a")), "doc_a")
               .select(col("doc_b").as("doc_id")).distinct()
               .join(stateKept, "doc_id")
-            admitted.select(col("doc_id"), col("source"), col("lang"),
-                col("score")).withColumn("ev", lit("add"))
+            MicroBatch.write(admitted.select(col("doc_id"), col("source"),
+                col("lang"), col("score")).withColumn("ev", lit("add"))
               .unionByName(displaced.select(col("doc_id"), col("source"),
-                col("lang"), col("score")).withColumn("ev", lit("del")))
-              .withColumn("release_id", lit(rid))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("release_id").parquet(evDir)
+                col("lang"), col("score")).withColumn("ev", lit("del"))),
+              evDir, rid, "release_id")
             val admittedDocs = delta.join(
               admitted.select(col("doc_id")), "doc_id")
             SignatureStore.append(s, admittedDocs, sigDir, rid)
-            admittedDocs.select(curlOf.as("curl")).distinct()
-              .withColumn("batch_id", lit(rid))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(urlDir)
+            MicroBatch.write(admittedDocs.select(curlOf.as("curl")).distinct(),
+              urlDir, rid)
             // manifest: kept-now rollup ⊕ admissions ⊕ displacements,
             // full-outer on (source, lang) so a fully-displaced group
             // still shows its n_displaced against n_kept = 0
@@ -882,21 +820,18 @@ object CurationPipeline {
               .agg(count(lit(1)).as("n_new_kept"))
             val nd = displaced.groupBy(col("source"), col("lang"))
               .agg(count(lit(1)).as("n_displaced"))
-            nk.join(nn, Seq("source", "lang"), "full_outer")
+            MicroBatch.write(nk.join(nn, Seq("source", "lang"), "full_outer")
               .join(nd, Seq("source", "lang"), "full_outer")
               .select(col("source"), col("lang"),
                 coalesce(col("n_kept"), lit(0L)).as("n_kept"),
                 coalesce(col("n_new_kept"), lit(0L)).as("n_new_kept"),
-                coalesce(col("n_displaced"), lit(0L)).as("n_displaced"))
-              .withColumn("release_id", lit(rid))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("release_id").parquet(manDir)
-          } finally { verdicts.unpersist(); () }
-        } finally { pairs.unpersist(); () }
-      } finally { deltaSh.unpersist(); () }
+                coalesce(col("n_displaced"), lit(0L)).as("n_displaced")),
+              manDir, rid, "release_id")
+          }
+        }
+      }
     }
-    s.read.schema(manSchema).parquet(manDir)
+    s.read.schema(releaseManifestSchema).parquet(manDir)
       .select(col("release_id"), col("source"), col("lang"),
         col("n_kept"), col("n_new_kept"), col("n_displaced"))
       .orderBy(col("release_id"), col("source"), col("lang"))
@@ -1223,19 +1158,11 @@ object CurationPipeline {
       val tag = graft.Tables.datasetTag(d)
       val sinkDir = graft.Tables.scratchDir(s, "q232_sink_" + tag)
       val statsDir = graft.Tables.scratchDir(s, "q232_funnel_" + tag)
-      resetBatchTable(s, verdictSinkSchema, sinkDir)
-      resetBatchTable(s, funnelSinkSchema, statsDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      MicroBatch.reset(s, verdictSinkSchema, sinkDir)
+      MicroBatch.reset(s, funnelSinkSchema, statsDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
         .filter(col("source") === "src1" && col("doc_id") % 5 =!= 0)
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          streamDeltaBatch(s, d, batch, id, sinkDir, statsDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.drain(src)(streamDeltaBatch(s, d, _, _, sinkDir, statsDir))
       s.read.schema(verdictSinkSchema).parquet(sinkDir)
         .select(col("doc_id"), col("lang"), col("verdict"))
         .orderBy(col("doc_id"))
@@ -1276,7 +1203,7 @@ object CurationPipeline {
     // closing the production loop q237 and q238 each run half of: an
     // admitted batch's survivors flow straight into an incremental
     // shard-manifest DELTA (written inside the same foreachBatch, under
-    // the batch's own partition — the q82 exactly-once discipline), and
+    // the batch's own partition — the [[graft.MicroBatch]] contract), and
     // the nightly artifact a training run picks up is the manifest
     // FOLD: per (batch, shard) the cumulative doc count, token mass,
     // and 52-bit content fold over every admission so far. The three
@@ -1378,14 +1305,7 @@ object CurationPipeline {
             !col("source").isin(excl: _*)),
           grams, labels, graft.Thresholds.RepTopBigramMax,
           graft.Thresholds.RepDup5gramMax)
-      val relSchema = new org.apache.spark.sql.types.StructType()
-        .add("source", "string").add("lang", "string")
-        .add("n_kept", "long").add("n_new_kept", "long")
-        .add("n_displaced", "long").add("release_id", "long")
-      s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], relSchema)
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("release_id").parquet(dir)
+      MicroBatch.reset(s, releaseManifestSchema, dir, "release_id")
       val releases = Seq(
         (1L, Seq("src1", "src2")), (2L, Seq("src1")), (3L, Seq.empty[String]))
       var prev: Option[DataFrame] = None
@@ -1401,19 +1321,16 @@ object CurationPipeline {
               lit(true).as("in_prev")),
             Seq("doc_id"), "left_outer")
         }
-        joined.groupBy(col("source"), col("lang"))
-          .agg(sum(col("keep").cast("long")).as("n_kept"),
-            sum((col("keep") && col("in_prev").isNull).cast("long"))
-              .as("n_new_kept"),
-            sum((coalesce(col("keep_a"), lit(false)) && !col("keep"))
-              .cast("long")).as("n_displaced"))
-          .withColumn("release_id", lit(rid))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("release_id").parquet(dir)
+        MicroBatch.write(joined.groupBy(col("source"), col("lang"))
+            .agg(sum(col("keep").cast("long")).as("n_kept"),
+              sum((col("keep") && col("in_prev").isNull).cast("long"))
+                .as("n_new_kept"),
+              sum((coalesce(col("keep_a"), lit(false)) && !col("keep"))
+                .cast("long")).as("n_displaced")),
+          dir, rid, "release_id")
         prev = Some(cur)
       }
-      s.read.schema(relSchema).parquet(dir)
+      s.read.schema(releaseManifestSchema).parquet(dir)
         .select(col("release_id"), col("source"), col("lang"),
           col("n_kept"), col("n_new_kept"), col("n_displaced"))
         .orderBy(col("release_id"), col("source"), col("lang"))

@@ -370,9 +370,6 @@ object GraphOps {
       .join(o.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
   }
 
-  /** The canonical part co-purchase edge relation (parts sharing an
-    * order, a < b), shared by q157 (triangles) and q175 (label
-    * propagation); [[coPurchaseCte]] is its oracle-side twin. */
   /** Distinct (order, part) incidences — the base both co-purchase
     * derivations share. */
   private[graft] def orderParts(s: SparkSession, d: String): DataFrame =
@@ -400,6 +397,9 @@ object GraphOps {
       .dropDuplicates()
   }
 
+  /** The canonical part co-purchase edge relation (parts sharing an
+    * order, a < b), shared by q157 (triangles) and q175 (label
+    * propagation); [[coPurchaseCte]] is its oracle-side twin. */
   private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
     val op = orderParts(s, d)
     op.alias("x")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -265,33 +266,47 @@ object Multimodal {
     * is the entire economics of an image-dedup service (decode is the
     * dominant cost; an 8-byte hash is not). */
   def buildPhashStore(s: SparkSession, media: DataFrame, dir: String): Unit =
-    writePhashBatch(s, media, dir, -1L, dynamic = false)
+    appendPhash(s, media, dir, MicroBatch.Seed)
 
   /** Append a batch's hashes/blocks (its admitted survivors) as
-    * partition `batchId` — idempotent under replay (the q82/q129 sink
-    * contract). */
+    * partition `batchId` — idempotent under replay (the
+    * [[graft.MicroBatch]] contract). */
   def appendPhash(s: SparkSession, media: DataFrame, dir: String,
       batchId: Long): Unit =
-    writePhashBatch(s, media, dir, batchId, dynamic = true)
+    writePhashHashes(s, tracked(hashesOf(s, media)), dir, batchId)
 
-  private def writePhashBatch(s: SparkSession, media: DataFrame, dir: String,
-      batchId: Long, dynamic: Boolean): Unit =
-    writePhashHashes(s, tracked(hashesOf(s, media)), dir, batchId, dynamic)
-
-  /** [[writePhashBatch]] over a caller-managed hash relation — the form
+  /** [[appendPhash]] over a caller-managed hash relation — the form
     * the streaming pipeline (q149) uses so survivor hashes come from the
     * batch's one decode pass (batch-local persist lifetime, q130's
     * discipline) instead of a second decode. */
-  private[graft] def writePhashHashes(s: SparkSession, h: DataFrame,
-      dir: String, batchId: Long, dynamic: Boolean): Unit = {
-    val mode = if (dynamic) "dynamic" else "static"
-    h.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", mode)
-      .partitionBy("batch_id").parquet(phashHashesPath(dir))
-    blocksOf(s, h).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", mode)
-      .partitionBy("batch_id").parquet(phashBlocksPath(dir))
+  private def writePhashHashes(s: SparkSession, h: DataFrame,
+      dir: String, batchId: Long): Unit = {
+    MicroBatch.write(h, phashHashesPath(dir), batchId)
+    MicroBatch.write(blocksOf(s, h), phashBlocksPath(dir), batchId)
   }
+
+  /** q149's matched-pair sink. Read with this schema: a stream with no
+    * phash match writes no sink file to infer one from. */
+  private val phashPairsSchema = new org.apache.spark.sql.types.StructType()
+    .add("doc_a", "long").add("doc_b", "long")
+    .add("hamming", "long").add("batch_id", "long")
+
+  /** One micro-batch of the streaming phash admission (q149): decode and
+    * hash the batch's media once, admit them against the store
+    * partitions below `id`, land the matched pairs in the sink and
+    * append the survivors' hashes to the store, both as partition `id`. */
+  private[graft] def phashBatch(s: SparkSession, media: DataFrame, id: Long,
+      storeDir: String, sinkDir: String): Unit =
+    MicroBatch.scoped(hashesOf(s, media)) { dh =>
+      val matches = admitPhashHashes(s, dh, storeDir, beforeBatch = id)
+      MicroBatch.scoped(matches) { pairs =>
+        MicroBatch.write(pairs, sinkDir, id)
+        writePhashHashes(s,
+          dh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti"),
+          storeDir, id)
+      }
+    }
 
   /** Admit a delta media batch against the stored index: delta images
     * hash map-side (ONE decode pass over the batch only), their blocks
@@ -491,41 +506,12 @@ object Multimodal {
       val docs = documents(s, d)
       buildPhashStore(s,
         asMediaTable(s, docs.filter(col("doc_id") % 5 =!= 0)), storeDir)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      MicroBatch.reset(s, phashPairsSchema, sinkDir)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
         .filter(col("doc_id") % 5 === 0)
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val dh = hashesOf(s, asMediaTable(s, batch))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = admitPhashHashes(s, dh, storeDir, beforeBatch = id)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              pairs.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(sinkDir)
-              writePhashHashes(s,
-                dh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
-                  Seq("doc_id"), "left_anti"),
-                storeDir, id, dynamic = true)
-            } finally { pairs.unpersist(); () }
-          } finally { dh.unpersist(); () }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // explicit schema: a stream with no phash match ever writes no
-      // sink files, and a schema-inferring read of the empty dir would
-      // throw instead of returning q147's empty pair set (review
-      // finding — the q139 fix applied here too)
-      val sinkSchema = new org.apache.spark.sql.types.StructType()
-        .add("doc_a", "long").add("doc_b", "long")
-        .add("hamming", "long").add("batch_id", "long")
-      s.read.schema(sinkSchema).parquet(sinkDir)
+      MicroBatch.drain(src)((batch, id) =>
+        phashBatch(s, asMediaTable(s, batch), id, storeDir, sinkDir))
+      s.read.schema(phashPairsSchema).parquet(sinkDir)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
         .orderBy(col("doc_a"), col("doc_b"))
     })

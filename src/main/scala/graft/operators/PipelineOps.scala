@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
 import graft.functions.Kmv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -823,9 +824,9 @@ object PipelineOps {
     // q130/q138/q139/q149): the standing rollup is seeded from the base
     // history, then every micro-batch of new events merges its partial
     // aggregate into the store. State is GENERATIONAL — batch b writes
-    // generation b as merge(latest generation < b, rollup(batch b))
-    // under dynamic partition overwrite, so a replayed batch recomputes
-    // exactly its own generation from inputs that exclude it:
+    // generation b as merge(latest generation < b, rollup(batch b)) as
+    // its own partition ([[graft.MicroBatch]]), so a replayed batch
+    // recomputes exactly its own generation from inputs that exclude it:
     // exactly-once by construction, no dedup bookkeeping. The refresh
     // reads the delta and the PREVIOUS AGGREGATE only — never raw
     // history (the q171 IVM contract, now per micro-batch); the final
@@ -834,23 +835,14 @@ object PipelineOps {
     "q173_stream_mv_refresh" -> ((s, d) => {
       val mvDir = graft.Tables.scratchDir(s,
         "q173_mv_" + graft.Tables.datasetTag(d))
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      // seed the standing view from the base history, generation -1
-      rollup(events(s, d).filter(col("event_id") % 10 < 8))
-        .withColumn("gen", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("gen").parquet(mvDir)
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(schema).parquet(s"$d/events.parq*")
+      // seed the standing view from the base history
+      MicroBatch.write(rollup(events(s, d).filter(col("event_id") % 10 < 8)),
+        mvDir, MicroBatch.Seed, "gen")
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "events")
         .filter(col("event_id") % 10 >= 8)
         .select(col("user_id"), col("event_type"), col("value"))
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          refreshGeneration(s, mvDir, rollup(batch), id)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.drain(src)((batch, id) =>
+        refreshGeneration(s, mvDir, rollup(batch), id))
       val mv = s.read.parquet(mvDir)
       // partition-column inference narrows gen to int — read type-agnostic
       val maxGen = mv.agg(max(col("gen"))).first().getAs[Number](0)
@@ -864,8 +856,8 @@ object PipelineOps {
   )
 
   /** One q173 refresh step: generation `id` := merge(latest generation
-    * strictly below `id`, the batch's partial rollup), written under
-    * dynamic partition overwrite. Reading only generations < id makes a
+    * strictly below `id`, the batch's partial rollup), written as its own
+    * partition. Reading only generations < id makes a
     * REPLAYED batch recompute its own generation from the same inputs —
     * idempotent without any processed-batch bookkeeping. */
   private[graft] def refreshGeneration(s: SparkSession, mvDir: String,
@@ -878,10 +870,9 @@ object PipelineOps {
     require(maxGen != null,
       s"MV store $mvDir has no generation below $id — seed gen -1 missing")
     val latest = maxGen.longValue()
-    mergeRollups(prior.filter(col("gen") === latest).drop("gen"), batchRollup)
-      .withColumn("gen", lit(id))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("gen").parquet(mvDir)
+    MicroBatch.write(
+      mergeRollups(prior.filter(col("gen") === latest).drop("gen"), batchRollup),
+      mvDir, id, "gen")
   }
 
   /** One equi-depth histogram leg (16 equal-row buckets over a lineitem

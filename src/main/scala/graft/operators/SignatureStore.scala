@@ -1,10 +1,10 @@
 package graft.operators
 
+import graft.MicroBatch
 import graft.Tables._
 import graft.functions.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** MATERIALIZED MinHash signature store — the persistent form of the
   * incremental delta-vs-corpus near-dedup (q127), and its composition
@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.Trigger
   * admission plan carries the delta's pushed source filter). Each
   * batch's survivors append their own shingles/bands as partition
   * `batch_id`, so consecutive deltas see each other's survivors and a
-  * REPLAYED batch overwrites exactly its own partition (dynamic
-  * partition overwrite — the q82 idempotent-sink contract).
+  * REPLAYED batch overwrites exactly its own partition (the
+  * [[graft.MicroBatch]] contract).
   *
   * Scale shape per admission (identical to q127's locked plan): delta
   * bands BROADCAST against the store's band table (the store side never
@@ -41,38 +41,26 @@ object SignatureStore {
 
   /** Build the store from a corpus: one text scan computes the shingle
     * sets, signatures/bands derive from the persisted shingles, and both
-    * land as parquet partitioned by batch_id = -1 (full static overwrite
-    * — a rebuild replaces any prior store at this path). */
+    * land as the seed generation (a rebuild replaces any prior store at
+    * this path). */
   def build(s: SparkSession, corpus: DataFrame, dir: String): Unit =
-    writeBatch(s, corpus, dir, -1L, dynamic = false)
+    append(s, corpus, dir, MicroBatch.Seed)
 
   /** Append one batch's documents (its admitted survivors) to the store
-    * as partition `batchId`. Dynamic partition overwrite: replaying the
-    * same batch id replaces exactly its own partition — idempotent under
-    * foreachBatch retry. */
+    * as partition `batchId`: replaying the same batch id replaces exactly
+    * its own partition — idempotent under foreachBatch retry. */
   def append(s: SparkSession, docs: DataFrame, dir: String, batchId: Long): Unit =
-    writeBatch(s, docs, dir, batchId, dynamic = true)
+    MicroBatch.scoped(Dedup.shinglesOfDocs(s, docs))(
+      writeBatchShingles(s, _, dir, batchId))
 
-  private def writeBatch(s: SparkSession, docs: DataFrame, dir: String,
-      batchId: Long, dynamic: Boolean): Unit = {
-    val sh = Dedup.shinglesOfDocs(s, docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeBatchShingles(s, sh, dir, batchId, dynamic)
-    finally { sh.unpersist(); () }
-  }
-
-  /** [[writeBatch]] over a caller-provided (already persisted) shingle
+  /** [[append]] over a caller-provided (already persisted) shingle
     * relation — the shared-derivation seam (r19, guide §5 reuse within
     * one query): an admission that already derived the delta's shingles
     * appends its survivors by FILTERING that relation instead of
     * re-scanning the survivor text (shingling is per-doc, so the
     * restriction is value-identical to re-deriving). */
   private def writeBatchShingles(s: SparkSession, sh: DataFrame,
-      dir: String, batchId: Long, dynamic: Boolean): Unit = {
-    // per-WRITE overwrite mode (takes precedence over the session conf):
-    // no session-global mutation to race against concurrent queries
-    // (round-10 review finding)
-    val mode = if (dynamic) "dynamic" else "static"
+      dir: String, batchId: Long): Unit = {
     // File sizing examined in r18 and LEFT ALONE: the writes emit one
     // file per upstream partition (32 tiny band files per batch at
     // fixture scale), and an AQE `rebalance` hint before each write
@@ -82,13 +70,9 @@ object SignatureStore {
     // overhead it saves. At 100 TB the per-partition file count is the
     // right order anyway; compact() remains the explicit small-files
     // remedy.
-    sh.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", mode)
-      .partitionBy("batch_id").parquet(shinglesPath(dir))
-    Dedup.bandedBuckets(Dedup.signaturesFromShingles(s, sh))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", mode)
-      .partitionBy("batch_id").parquet(bandsPath(dir))
+    MicroBatch.write(sh, shinglesPath(dir), batchId)
+    MicroBatch.write(Dedup.bandedBuckets(Dedup.signaturesFromShingles(s, sh)),
+      bandsPath(dir), batchId)
   }
 
   /** Append one batch's SURVIVOR shingles derived by restriction: the
@@ -102,7 +86,7 @@ object SignatureStore {
     writeBatchShingles(s,
       deltaSh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti"),
-      dir, batchId, dynamic = true)
+      dir, batchId)
 
   /** Admit a delta batch against the STORED corpus: returns the verified
     * near-dup pairs (doc_a = delta, doc_b = stored corpus, jaccard ≥
@@ -175,12 +159,9 @@ object SignatureStore {
     // partition and faithfully re-emits one output file per input file.
     // At scale, size numFiles to total bytes / target file size.
     def roll(path: String => String): Unit =
-      s.read.parquet(path(dir))
+      MicroBatch.write(s.read.parquet(path(dir))
         .filter(col("batch_id") <= throughBatch)
-        .drop("batch_id").repartition(numFiles)
-        .withColumn("batch_id", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("batch_id").parquet(path(newDir))
+        .drop("batch_id").repartition(numFiles), path(newDir), MicroBatch.Seed)
     roll(shinglesPath)
     roll(bandsPath)
   }
@@ -202,6 +183,22 @@ object SignatureStore {
     PartitionRewrite.erase(s, shinglesPath(dir), Seq("batch_id"), ids, "doc_id")
     PartitionRewrite.erase(s, bandsPath(dir), Seq("batch_id"), ids, "doc_id")
   }
+
+  /** One micro-batch of the streaming admission (q130): admit the batch
+    * against the store's partitions below `id`, land its survivors in the
+    * admitted-corpus table and append their shingles/bands to the store,
+    * both as partition `id`. The shingles feed signatures and
+    * verification, the survivors two writes; both persist for this batch
+    * only. */
+  private[graft] def ingestBatch(s: SparkSession, batch: DataFrame, id: Long,
+      storeDir: String, corpusDir: String): Unit =
+    MicroBatch.scoped(Dedup.shinglesOfDocs(s, batch)) { deltaSh =>
+      val pairs = admitShingles(s, deltaSh, storeDir, beforeBatch = id)
+      MicroBatch.scoped(survivors(batch, pairs)) { surv =>
+        MicroBatch.write(surv, corpusDir, id)
+        append(s, surv, storeDir, id)
+      }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q127 THROUGH THE STORE: build the corpus band/shingle tables once
@@ -294,8 +291,8 @@ object SignatureStore {
     // slice arrives as a stream; each micro-batch is admitted against
     // the store (seed corpus + all earlier batches' survivors), its
     // survivors land in the admitted-corpus table partitioned by batch
-    // id (exactly-once under replay — dynamic partition overwrite, the
-    // q82 contract), and their bands/shingles append to the store so the
+    // id (exactly-once under replay, the [[graft.MicroBatch]] contract),
+    // and their bands/shingles append to the store so the
     // NEXT batch sees them. Bounded single-file replay = one batch, so
     // the final table is: seed corpus + delta docs with no ≥0.8 match
     // in the seed — exactly what the oracle computes; the multi-batch
@@ -305,43 +302,14 @@ object SignatureStore {
     "q130_stream_ingest_admit" -> ((s, d) => {
       val storeDir = scratchDir(s, "q130_store_" + graft.Tables.datasetTag(d))
       val corpusDir = scratchDir(s, "q130_corpus_" + graft.Tables.datasetTag(d))
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
       // null-safe split, matching q129 and the oracle's source <> 'src0'
       // ... OR NOT IN dup semantics: a null source is corpus
       val seed = documents(s, d).filter(!(col("source") <=> "src0"))
       build(s, seed, storeDir)
-      seed.withColumn("batch_id", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("batch_id").parquet(corpusDir)
-      val src = graft.ChildSession.forStream(s).readStream
-        .schema(docsSchema).parquet(s"$d/documents.parq*")
+      MicroBatch.write(seed, corpusDir, MicroBatch.Seed)
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "documents")
         .filter(col("source") === "src0")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // batch-local persist lifetimes: shingles feed signatures +
-          // verification, survivors feed two writes — both released at
-          // batch end so an unbounded stream holds no per-batch state
-          val deltaSh = Dedup.shinglesOfDocs(s, batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = admitShingles(s, deltaSh, storeDir, beforeBatch = id)
-            val surv = survivors(batch, pairs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // per-write dynamic overwrite: a replayed batch replaces
-              // exactly its own partition, and no session conf mutates
-              surv.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(corpusDir)
-              append(s, surv, storeDir, id)
-            } finally { surv.unpersist(); () }
-          } finally { deltaSh.unpersist(); () }
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.drain(src)(ingestBatch(s, _, _, storeDir, corpusDir))
       s.read.parquet(corpusDir)
         .select(col("doc_id"), length(col("text")).as("n_chars"))
         .orderBy(col("doc_id"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.MicroBatch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -38,13 +39,8 @@ object StatefulCounts {
     // last update per user equals the batch aggregate.
     "q36_stream_stateful" -> ((s, d) => {
       import s.implicits._
-      val path = s"$d/events.parquet"
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(path).schema
       s.catalog.dropTempView("sink_stateful")
-      // glob so FileStreamSource uses the parent dir as basePath (it
-      // ignores the basePath option for a plain file path)
-      val src = s.readStream.schema(schema).parquet(s"$d/events.parq*")
+      val src = MicroBatch.source(s, d, "events")
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
           col("value").cast("double"))
         .as[(Long, Long, Double)]
@@ -91,10 +87,7 @@ object StatefulCounts {
     // store — identical results, production state backend.
     "q65_stream_rocksdb" -> ((s, d) => {
       val rs = rocksDbSession(s)
-      graft.Tables.nanosTs(rs)
-      val schema = rs.read.parquet(s"$d/events.parquet").schema
-      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
-        .transform(graft.Tables.tsToMicros)
+      val src = MicroBatch.source(rs, d, "events")
       val q = src.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .writeStream.format("memory").queryName("sink_rocksdb")
@@ -115,9 +108,7 @@ object StatefulCounts {
     "q66_transform_with_state" -> ((s, d) => {
       import s.implicits._
       val rs = rocksDbSession(s)
-      graft.Tables.nanosTs(rs)
-      val schema = rs.read.parquet(s"$d/events.parquet").schema
-      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
+      val src = MicroBatch.source(rs, d, "events")
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
           col("value").cast("double"))
         .as[(Long, Long, Double)]
@@ -153,10 +144,7 @@ object StatefulCounts {
     "q70_stream_session_timers" -> ((s, d) => {
       import s.implicits._
       val rs = rocksDbSession(s)
-      graft.Tables.nanosTs(rs)
-      val schema = rs.read.parquet(s"$d/events.parquet").schema
-      val src = rs.readStream.schema(schema).parquet(s"$d/events.parq*")
-        .transform(graft.Tables.tsToMicros)
+      val src = MicroBatch.source(rs, d, "events")
         .withWatermark("ts", "30 minutes")
         .select(col("user_id").cast("long").as("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("ts"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.MicroBatch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -33,22 +34,9 @@ object StreamingQueries {
   private def runStream(s: SparkSession, d: String, table: String, sinkName: String,
       outputMode: String = "complete")(
       build: DataFrame => DataFrame): DataFrame = {
-    val path = s"$d/$table.parquet"
     val child = graft.ChildSession.forStream(s)
-    // events.ts is parquet TIMESTAMP(NANOS) — read as raw long nanos and
-    // convert (see Tables.nanosTs); same truncation DuckDB applies.
-    graft.Tables.nanosTs(child)
-    val schema = child.read.parquet(path).schema
-    // The fixture is a single parquet FILE. FileStreamSource derives its
-    // basePath from the path itself (ignoring the basePath option) and
-    // requires a directory — so stream via a glob that matches only this
-    // file; with a glob, the parent directory becomes the base.
-    val raw = child.readStream.schema(schema).parquet(s"$d/$table.parq*")
-    val src =
-      if (schema.fieldNames.contains("ts")) graft.Tables.tsToMicros(raw)
-      else raw
     // the sink registers its table on the child, fresh per call
-    build(src).writeStream
+    build(MicroBatch.source(child, d, table)).writeStream
       .format("memory")
       .queryName(sinkName)
       .outputMode(outputMode)
@@ -226,12 +214,8 @@ object StreamingQueries {
     }),
 
     "q54_stream_stream_join" -> ((s, d) => {
-      val path = s"$d/events.parq*"
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
       def side(tpe: String, alias: String) =
-        s.readStream.schema(schema).parquet(path)
-          .transform(graft.Tables.tsToMicros)
+        MicroBatch.source(s, d, "events")
           .filter(col("event_type") === tpe)
           .select(col("event_id").as(s"${alias}_id"), col("user_id").as(s"${alias}_user"),
             col("ts").as(s"${alias}_ts"))
@@ -258,12 +242,8 @@ object StreamingQueries {
     // (min of both sides' max event time, minus the 30-min delay) —
     // exactly what the oracle computes.
     "q64_stream_outer_join" -> ((s, d) => {
-      val path = s"$d/events.parq*"
-      graft.Tables.nanosTs(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
       def side(tpe: String, alias: String) =
-        s.readStream.schema(schema).parquet(path)
-          .transform(graft.Tables.tsToMicros)
+        MicroBatch.source(s, d, "events")
           .filter(col("event_type") === tpe)
           .select(col("event_id").as(s"${alias}_id"), col("user_id").as(s"${alias}_user"),
             col("ts").as(s"${alias}_ts"))
@@ -285,49 +265,31 @@ object StreamingQueries {
 
     // foreachBatch EXACTLY-ONCE sink — the production pattern for sinks
     // with no native streaming writer: each micro-batch is compacted to
-    // its latest row per key, then written to a staging table PARTITIONED
-    // BY BATCH ID with dynamic partition overwrite, so a retried batch
-    // replaces exactly its own output (idempotent under task/batch
-    // replay — the same first-writer-wins contract as the reference's
-    // atomic temp-file rename, mr/worker.go:96-99). A final batch pass
+    // its latest row per key, then written to a staging table under its
+    // batch id ([[graft.MicroBatch]]), so a retried batch replaces exactly
+    // its own output. A final batch pass
     // compacts the staging table to the current state per key — the
     // standard "append + compact" CDC sink. State here lives in the SINK
     // (partitioned files), not the state store, so the streaming side
     // scales with batch size, not key cardinality.
     "q82_stream_foreach_upsert" -> ((s, d) => {
-      val child = graft.ChildSession.forStream(s)
-      graft.Tables.nanosTs(child)
-      val schema = child.read.parquet(s"$d/events.parquet").schema
-      // fixed per-(session, source-dir) staging path: a re-run replaces
-      // its batches via dynamic partition overwrite instead of leaking a
-      // new tree; keyed by source dir because dynamic overwrite leaves
-      // partitions a smaller re-run doesn't produce
+      val src = MicroBatch.source(graft.ChildSession.forStream(s), d, "events")
+      // per-(session, source-dir) staging path, reset before the stream
+      // starts: a re-run replaces the table instead of leaking a new
+      // tree, and a smaller re-run leaves no partition of a larger one
       val stage = graft.Tables.scratchDir(s,
         "q82_upsert_stage_" + graft.Tables.datasetTag(d))
-      child.readStream.schema(schema).parquet(s"$d/events.parq*")
-        .transform(graft.Tables.tsToMicros)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          batch.withColumn("rk", row_number().over(w))
-            .filter(col("rk") === 1)
-            .drop("rk")
-            .withColumn("batch_id", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(stage)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-      val w = org.apache.spark.sql.expressions.Window
+      val stageSchema = src.schema.add("batch_id", "long")
+      MicroBatch.reset(s, stageSchema, stage)
+      val latest = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").desc)
-      s.read.parquet(stage)
-        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      def latestPerUser(df: DataFrame): DataFrame =
+        df.withColumn("rk", row_number().over(latest))
+          .filter(col("rk") === 1).drop("rk")
+      MicroBatch.drain(src)((batch, id) =>
+        MicroBatch.write(latestPerUser(batch), stage, id))
+      latestPerUser(s.read.schema(stageSchema).parquet(stage))
         .select(col("user_id"), col("event_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"))
         .orderBy(col("user_id"))

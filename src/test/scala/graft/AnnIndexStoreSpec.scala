@@ -93,9 +93,7 @@ class AnnIndexStoreSpec extends TestSpark {
     val seedIds = 0L until 50L
     val seed = df(seedIds)
     AnnIndexStore.build(spark, seed, storeDir)
-    seed.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(corpusDir)
+    MicroBatch.write(seed, corpusDir, MicroBatch.Seed)
     val schema = seed.schema
 
     def addFile(name: String, d: org.apache.spark.sql.DataFrame): Unit = {
@@ -108,27 +106,12 @@ class AnnIndexStoreSpec extends TestSpark {
       ()
     }
 
-    // the q138 foreachBatch body, pointed at this spec's dirs + checkpoint
+    // q138's batch body, pointed at this spec's dirs + checkpoint
     def runOnce(): Unit = {
       val src = spark.readStream.schema(schema).parquet(s"$in/*.parquet")
       val q = src.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val b = batch
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = AnnIndexStore.admitVectors(spark, b, storeDir,
-              corpusDir, beforeBatch = id)
-            val surv = AnnIndexStore.vectorSurvivors(b, pairs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              surv.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(corpusDir)
-              AnnIndexStore.append(spark, surv, storeDir, id)
-            } finally { surv.unpersist(); () }
-          } finally { b.unpersist(); () }
-          ()
+          AnnIndexStore.vectorBatch(spark, batch, id, storeDir, corpusDir)
         }
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())

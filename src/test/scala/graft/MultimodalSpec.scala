@@ -180,24 +180,8 @@ class MultimodalSpec extends TestSpark {
         .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          // the q149 body over a raw (doc_id, img) stream
-          val dh = Multimodal.hashesOf(spark, batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = Multimodal.admitPhashHashes(spark, dh, storeDir, id)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              pairs.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(sinkDir)
-              Multimodal.writePhashHashes(spark,
-                dh.join(pairs.select(col("doc_a").as("doc_id")).distinct(),
-                  Seq("doc_id"), "left_anti"),
-                storeDir, id, dynamic = true)
-            } finally { pairs.unpersist(); () }
-          } finally { dh.unpersist(); () }
-          ()
+          // q149's batch body over a raw (doc_id, img) stream
+          Multimodal.phashBatch(spark, batch, id, storeDir, sinkDir)
         }
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())

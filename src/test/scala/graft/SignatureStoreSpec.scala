@@ -154,9 +154,7 @@ class SignatureStoreSpec extends TestSpark {
     val cp = s"$root/cp"
     val seed = docsDf(1L -> base)
     SignatureStore.build(spark, seed, storeDir)
-    seed.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id").parquet(corpusDir)
+    MicroBatch.write(seed, corpusDir, MicroBatch.Seed)
     val schema = seed.schema
 
     // drop a docs batch into the stream dir as a single parquet file
@@ -170,27 +168,12 @@ class SignatureStoreSpec extends TestSpark {
       ()
     }
 
-    // the q130 foreachBatch body, pointed at this spec's dirs + checkpoint
+    // q130's batch body, pointed at this spec's dirs + checkpoint
     def runOnce(): Unit = {
       val src = spark.readStream.schema(schema).parquet(s"$in/*.parquet")
       val q = src.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val deltaSh = graft.functions.Dedup.shinglesOfDocs(spark, batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = SignatureStore.admitShingles(spark, deltaSh, storeDir,
-              beforeBatch = id)
-            val surv = SignatureStore.survivors(batch, pairs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              surv.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(corpusDir)
-              SignatureStore.append(spark, surv, storeDir, id)
-            } finally { surv.unpersist(); () }
-          } finally { deltaSh.unpersist(); () }
-          ()
+          SignatureStore.ingestBatch(spark, batch, id, storeDir, corpusDir)
         }
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())
