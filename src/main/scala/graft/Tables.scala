@@ -86,12 +86,13 @@ object Tables {
     * production setting), else a localCheckpoint; both EAGER. A round
     * that references the previous one k times grows a ~k^rounds logical
     * plan even when every stage is persisted, and Catalyst pays for it
-    * per consumer on the driver (q231's analyzed plan reached 106k
-    * lines before its stages were cut). Rebasing each stage on its
-    * materialized RDD keeps the plan one round deep. Eager on purpose:
-    * with a lazy cut the downstream references race to compute the
-    * stage concurrently inside one job and re-run its upstream per
-    * branch (q248 cold 18 s → 30 s when tried). */
+    * per consumer on the driver. Rebasing each stage on its
+    * materialized RDD keeps the plan one round deep; label
+    * propagation's rounds, connected components' hooking rounds and the
+    * kNN delta admission's descent rounds are cut this way. Eager on
+    * purpose: with a lazy cut the downstream references race to compute
+    * the stage concurrently inside one job and re-run its upstream per
+    * branch. */
   private[graft] def truncate(s: SparkSession, df: DataFrame): DataFrame =
     if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()

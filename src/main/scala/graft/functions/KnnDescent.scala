@@ -1,20 +1,21 @@
 package graft.functions
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.collection.mutable
 
-/** NN-descent kNN graph — the sub-n^1.5 FULL-CORPUS neighbor path
-  * (round-13 judge task #1).
+/** NN-descent kNN graph — the sub-n^1.5 FULL-CORPUS neighbor path.
   *
   * The flat-IVF kNN graph (q73) is the right AUDIT shape but its
-  * candidate volume is Θ(nProbe·n^1.5) under the √n quantizer — the one
-  * measured-superlinear family in the library (α = 1.36/1.40 at 10×,
-  * scale_sweep_r13knn.json), and the ivf_k dial provably cannot change
-  * the exponent. This module replaces it as the PRODUCTION graph path
-  * (the q166-exact / q207-sketch precedent): q77/q122/q220/q245
-  * consume this graph; q73 stands as the IVF-path audit.
+  * candidate volume is Θ(nProbe·n^1.5) under the √n quantizer. This
+  * module is the PRODUCTION graph path: q77/q122/q220/q231/q240/q245
+  * consume this graph, q248 admits deltas into it, and q73 stands as
+  * the IVF-path audit.
   *
   * Algorithm (Dong, Moses & Li 2011, "Efficient k-nearest neighbor
   * graph construction for generic similarity measures", WWW'11 — made
@@ -22,70 +23,41 @@ import org.apache.spark.sql.functions._
   *
   *  1. SEED from the q102 LSH geometry: every vector's sign bucket
   *     under [[Similarity.lshNPlanes]](n) fixed Gaussian hyperplanes,
-  *     multi-probed to its own bucket plus all Hamming-1 flips. Bucket
-  *     count tracks n/8, so seed candidate volume is ~8·(p+1) per
-  *     vector — O(n·log n) total, never all-pairs. Each candidate pair
-  *     matches through exactly ONE probed bucket (the probed set is
-  *     distinct), so no dedup is needed on the join output.
-  *  2. Cut to the top-[[K]] per vector by (rounded cosine desc, id asc)
-  *     — the q73 ranking convention — through the heap operator.
-  *  3. DESCEND for [[Iters]] rounds: candidates(t) = current edges ∪
-  *     neighbors-of-neighbors through the UNDIRECTED graph (a true
-  *     neighbor of x is, with high probability, also near x's current
-  *     neighbors), re-scored and re-cut to top-K. Each round touches
-  *     ≤ (2K)² = 36 candidates per vector — O(n·K²·Iters) total, and
-  *     the graph improves monotonically because current edges are
-  *     always in the candidate set.
+  *     multi-probed to its own bucket plus all Hamming-1 flips (plus
+  *     the Hamming-2 flips at probe radius 2). Bucket count tracks n/8,
+  *     so seed candidate volume is ~8·(p+1) per vector — O(n·log n).
+  *     The probed buckets are distinct, so each candidate pair arises
+  *     once.
+  *  2. Cut to the top-[[K]] per vector by (rounded cosine desc, nbr asc)
+  *     — the q73 ranking convention.
+  *  3. DESCEND for [[Iters]] rounds: candidates = current edges ∪
+  *     every ordered pair of distinct neighbors of a common mid in the
+  *     UNDIRECTED graph, re-scored and re-cut to top-K. Current edges
+  *     are always candidates, so the graph improves monotonically.
   *
-  * Scale shape: every stage is a keyed, linear-size shuffle — the seed
-  * join keys on the bucket (expected occupancy ~8 by the plane-count
-  * rule; pair with exact dedup (q26) upstream so verbatim-duplicate
-  * floods can't concentrate one bucket), the descent self-join keys on
-  * the mid vector id, embeddings attach by id-keyed joins, and the
-  * per-round cut shuffles ≤ K rows per vector per input partition
-  * (the heap's partial pre-cut). Total work O(n·(occupancy·log n +
-  * K²·Iters)) vs the flat graph's Θ(nProbe·n^1.5) — at 100 TB that is
-  * the difference between a nightly job and an impossible one. Each
-  * round's graph is persisted (the q152 PageRank discipline): the
-  * undirected relation is consumed twice per round, and without the
-  * persist the recomputation tree doubles per level.
+  * The kernel runs on RDDs in the style of `GraphOps.pagerank`. The
+  * corpus `(vec_id, embedding)` is hash-partitioned once and persisted,
+  * and every graph stage `(src, top-K)` shares its partitioner, so
+  * attaching a vector to an edge is a per-partition lookup. The seed
+  * computes buckets map-side and cogroups on the bucket. A round ships
+  * each edge to its nbr with the src's vector and back with the nbr's,
+  * so each mid holds its undirected neighbors with their vectors and
+  * scores their pairs in place. Every score is
+  * [[Similarity.roundedCosine]], and every cut is one map-side-combined
+  * `combineByKey` top-K. Nothing in a build runs a job but its count,
+  * the recall audit and the final materialization.
   *
-  * Everything is deterministic — fixed plane literals, rounded
-  * cosines, total-order tie-breaks, set-semantics candidate unions —
-  * so the oracle replays seed, every descent round, and the final
-  * ranking exactly.
-  *
-  * Recall posture (measured, ann_recall_r14.json): on corpora WITH
-  * neighbor structure (the banded planted fixtures — the shape real
-  * embedding corpora have) the radius-1 graph reads within 0.07
-  * recall@3 of the flat-IVF audit path while building 2.4× faster at
-  * 10× and growing at α 0.52 vs 1.27; on PURE-RANDOM vectors (no
-  * structure for the seed to find) radius 1 reads 0.18 vs IVF's 0.32
-  * — under the family's 0.3 floor. The recall dial that works is the
-  * seed probe radius ([[seedScored]]'s probeRadius — Hamming-2 adds
-  * the two-bit flips, ≈p/2× more seed candidates, still O(n·log²n)),
-  * and since round 15 it is a POLICY, not a parameter. Round 16
-  * retargeted the policy from a seed-margin PROXY to the recall it
-  * actually promises (round-15 verdict #3: at the 3× leg the margin
-  * dial picked radius 1 at recall 0.52 where radius 2 measured 0.72,
-  * leaving ~0.2 recall on the table against its own evidence base):
-  * the build always starts at radius 1, MEASURES that graph's
-  * sampled-exact recall@3 with the q240 audit machinery (fixed ~200
-  * probes, one map-side exact pass — O(n) at any scale), and rebuilds
-  * at radius 2 exactly when the measured recall is under
-  * [[graft.Thresholds.NndRecallFloorMicro]] — an integer-exact
-  * decision the oracle's nnd_dial CTE replays bit-for-bit. Since
-  * round 17 the escalation is WARM-STARTED (round-16 verdict task #2):
-  * the radius-1 graph's final edges union into the radius-2 descent's
-  * round-1 candidate set, so the measured-then-rejected build seeds
-  * the rebuild instead of being pure waste; corpora with real
-  * neighbor structure — the shape production embedding corpora have —
-  * keep the cheap radius-1 path with a recall MEASUREMENT, not a
-  * proxy, backing the choice.
-  * More [[Iters]] is NOT the dial: per-stage measurement
-  * on the random-vector leg shows descent converged by round 3 (seed
-  * 0.145 → 0.168 → 0.180 → 0.1833 flat), with Iters = 2 at 98% of
-  * converged.
+  * RECALL POLICY: the build starts at probe radius 1 and measures the
+  * graph's sampled-exact recall@3 (the q240 audit: the fixed ~200-probe
+  * sample vec_id % max(1, n/200) = 0, exact-re-ranked against the full
+  * corpus in one broadcast pass — O(n) at any scale). Under
+  * [[graft.Thresholds.NndRecallFloorMicro]] it rebuilds at radius 2,
+  * warm-started: the radius-1 graph's edges join round 1's candidates.
+  * When that graph also misses the floor, ONE more descent round runs
+  * from it. Every comparison is integer-exact, so the oracle's
+  * nnd_dial/nnd_dial2 CTEs take the identical branches. More [[Iters]]
+  * is not the dial: on the random-vector fixture descent converges by
+  * round 3 (seed 0.145 → 0.168 → 0.180 → 0.1833).
   */
 object KnnDescent {
 
@@ -93,11 +65,7 @@ object KnnDescent {
     * graph paths stay comparable edge-for-edge. */
   val K = 3
 
-  /** Descent rounds. Two rounds reach neighbors-of-neighbors-of-
-    * neighbors of the seed — on the banded planted-neighbor fixture
-    * that lifts recall well above the 0.3 floor while keeping the
-    * unrolled oracle replay tractable; the cost of another round is
-    * linear (O(n·K²)) if a corpus needs it. */
+  /** Descent rounds per build; another round costs O(n·K²). */
   val Iters = 2
 
   /** Rounded-cosine column — the family-wide scoring convention. */
@@ -111,158 +79,213 @@ object KnnDescent {
     graft.plans.TopKPerGroup.topK(scored, Seq("src"),
       Seq("cos" -> false, "nbr" -> true), K)
 
+  /** One vector's neighbor list: ≤ [[K]] (nbr, cos), best first. */
+  private type Nbrs = Array[(Long, Double)]
+
+  /** A graph stage: each src's neighbor list, partitioned like the corpus. */
+  private type Graph = RDD[(Long, Nbrs)]
+
+  /** Rank order (cos desc, nbr asc) under Spark's double ordering: NaN
+    * above every number, -0.0 equal to 0.0. */
+  private def before(a: (Long, Double), b: (Long, Double)): Boolean = {
+    val c = if (a._2 == b._2) 0 else java.lang.Double.compare(a._2, b._2)
+    c > 0 || (c == 0 && a._1 < b._1)
+  }
+
+  /** `top` with `e` admitted: still ≤ K entries in rank order, one per
+    * nbr. A pair's score depends only on the pair, so a repeat is a
+    * duplicate and the cut has set semantics without a distinct. */
+  private def admit(top: Nbrs, e: (Long, Double)): Nbrs =
+    if (top.exists(_._1 == e._1)) top
+    else top.indexWhere(before(e, _)) match {
+      case -1 => if (top.length < K) top :+ e else top
+      case i => ((top.take(i) :+ e) ++ top.drop(i)).take(K)
+    }
+
+  /** The top-K cut per src: one `combineByKey`, combined map-side. */
+  private def topK(scored: RDD[(Long, (Long, Double))],
+      part: Partitioner): Graph =
+    scored.combineByKey((e: (Long, Double)) => Array(e), admit,
+      (a: Nbrs, b: Nbrs) => b.foldLeft(a)(admit), part)
+
+  private def edgesOf(g: Graph): RDD[(Long, (Long, Double))] =
+    g.flatMap { case (s, nb) => nb.iterator.map(e => (s, e)) }
+
+  /** The corpus keyed by vec_id and hash-partitioned; rows without an
+    * id or a vector never match a bucket, so they are left out. */
+  private def corpusOf(s: SparkSession,
+      emb: DataFrame): RDD[(Long, Array[Float])] = {
+    import s.implicits._
+    val width = s.conf.get("spark.sql.shuffle.partitions").toInt
+    emb.select(col("vec_id"), col("embedding"))
+      .where(col("vec_id").isNotNull && col("embedding").isNotNull)
+      .as[(Long, Array[Float])].rdd
+      .partitionBy(new HashPartitioner(width))
+  }
+
+  /** Scored seed candidates (src, (nbr, cos)): buckets are computed
+    * map-side, every vector probes its own bucket and its flips up to
+    * `radius`, and a cogroup on the bucket pairs each probe with the
+    * bucket's members. */
+  private def seedPairs(corpus: RDD[(Long, Array[Float])], n: Long,
+      radius: Int): RDD[(Long, (Long, Double))] = {
+    val planes = Similarity.lshPool.take(Similarity.lshNPlanes(n)).toArray
+    val masks = Similarity.probeMasks(planes.length, radius)
+    val bucketed = corpus.map { case (id, v) =>
+      (Similarity.signBucket(v, planes), (id, v)) }
+    bucketed.flatMap { case (b, x) => masks.iterator.map(m => (b ^ m, x)) }
+      .cogroup(bucketed, corpus.partitioner.get)
+      .flatMap { case (_, (probes, members)) =>
+        for ((p, pv) <- probes.iterator; (c, cv) <- members.iterator if p != c)
+          yield (p, (c, Similarity.roundedCosine(pv, cv)))
+      }
+  }
+
+  /** ONE descent round: each edge s→n travels to n with s's vector and
+    * back to s with n's, so every mid holds its undirected neighbors
+    * with their vectors and scores each pair of them once (the rounded
+    * cosine is symmetric bit-for-bit). The candidates are those pairs,
+    * the current edges and `warm`'s, cut to top-K. */
+  private def descentRound(corpus: RDD[(Long, Array[Float])], g: Graph,
+      warm: Option[Graph] = None): Graph = {
+    val part = corpus.partitioner.get
+    val inbound = g.zipPartitions(corpus) { (es, vs) =>
+      val v = vs.toMap
+      es.flatMap { case (s, nb) =>
+        nb.iterator.map { case (n, _) => (n, (s, v(s))) } }
+    }.partitionBy(part)
+    val back = inbound.zipPartitions(corpus) { (es, vs) =>
+      val v = vs.toMap
+      es.map { case (n, (s, _)) => (s, (n, v(n))) }
+    }.partitionBy(part)
+    val pairs = inbound.zipPartitions(back) { (a, b) =>
+      val und = mutable.HashMap.empty[Long, mutable.HashMap[Long, Array[Float]]]
+      (a ++ b).foreach { case (m, (x, vx)) =>
+        und.getOrElseUpdate(m, mutable.HashMap.empty)(x) = vx }
+      und.valuesIterator.flatMap { nb =>
+        val xs = nb.toArray
+        xs.indices.iterator.flatMap { i =>
+          (i + 1 until xs.length).iterator.flatMap { j =>
+            val c = Similarity.roundedCosine(xs(i)._2, xs(j)._2)
+            Iterator((xs(i)._1, (xs(j)._1, c)), (xs(j)._1, (xs(i)._1, c)))
+          }
+        }
+      }
+    }
+    topK((g +: warm.toSeq).map(edgesOf).fold(pairs)(_ union _), part)
+  }
+
+  /** Seed cut then [[Iters]] rounds (`warm` joins round 1): every stage
+    * g0 … g[[Iters]], lazily chained over one lineage. */
+  private def descend(corpus: RDD[(Long, Array[Float])], n: Long,
+      radius: Int, warm: Option[Graph] = None): IndexedSeq[Graph] = {
+    val g0 = topK(seedPairs(corpus, n, radius), corpus.partitioner.get)
+    (1 to Iters).scanLeft(g0) { (g, i) =>
+      descentRound(corpus, g, if (i == 1) warm else None)
+    }
+  }
+
+  /** (src, nbr, cos) rows of a graph stage or a scored relation. */
+  private def edgeDf(s: SparkSession, emb: DataFrame,
+      edges: RDD[(Long, (Long, Double))]): DataFrame = {
+    val id = emb.schema("vec_id")
+    s.createDataFrame(edges.map { case (src, (nbr, c)) => Row(src, nbr, c) },
+      StructType(Seq(id.copy(name = "src"), id.copy(name = "nbr"),
+        StructField("cos", DoubleType))))
+  }
+
   /** A built graph with the probe radius its build chose and the recall
     * it measured on each leg: one memo entry per (session, dataset). */
   private final case class Built(graph: DataFrame, radius: Int,
       legs: Seq[(String, Long)])
 
   /** The recall the build MEASURED for each graph it considered, in
-    * exact micro-units of recall@3 (1e6·hits/exact_edges — the same
-    * integer arithmetic the dial branches on), ordered build legs:
-    * ("r1", …) always; ("r2", …) when the dial escalated; ("r2x1", …)
-    * when the escalated graph ALSO missed the floor and the one-extra-
-    * round response fired (round-17 verdict #1: a policy named
-    * "recall-targeted" must know the recall of the graph it actually
-    * ships, not only of the radius-1 build it rejected). The LAST leg
-    * is the recall of the graph [[graph]] returned. Forces the build
-    * like [[autoRadius]]. */
+    * exact micro-units of recall@3 (1e6·hits/exact_edges — the integer
+    * arithmetic the dial branches on), in build order: ("r1", …)
+    * always; ("r2", …) when the dial escalated; ("r2x1", …) when the
+    * escalated graph also missed the floor and the extra round ran. The
+    * LAST leg is the recall of the graph [[graph]] returns. Forces the
+    * build like [[autoRadius]]. */
   private[graft] def measuredRecallMicro(s: SparkSession, emb: DataFrame,
       cacheKey: String): Seq[(String, Long)] = built(s, emb, cacheKey).legs
 
-  /** THE RECALL POLICY (round-14 judge task #2; recall-targeted since
-    * round 16 — round-15 verdict #3): the probe radius the build CHOSE
-    * for this corpus. The decision is made inside [[graph]]'s build —
-    * radius 1 first, its sampled-exact recall@3 measured with the q240
-    * audit (the deterministic ~200-probe sample vec_id % max(1, n/200)
-    * = 0, exact-re-ranked against the full corpus in ONE map-side
-    * broadcast pass — O(n) at any scale), escalate to the Hamming-2
-    * seed iff 1e6·hits < [[graft.Thresholds.NndRecallFloorMicro]] ·
-    * exact_edges (integer-exact, so the DuckDB oracle's nnd_dial CTE
-    * takes the identical branch; an empty sample escalates). Calling
-    * this forces the graph build if the session has not built it yet —
-    * the radius IS a property of the measured build, no longer a
-    * pre-build proxy. */
+  /** The probe radius the build CHOSE for this corpus: 1, or 2 when the
+    * radius-1 graph's measured recall@3 is under
+    * [[graft.Thresholds.NndRecallFloorMicro]] (an empty sample
+    * escalates). Forces the build if the session has not run it. */
   private[graft] def autoRadius(s: SparkSession, emb: DataFrame,
       cacheKey: String): Int = built(s, emb, cacheKey).radius
 
-  /** Radius-1 build + measured-recall escalation — see [[autoRadius]].
-    * Returns the graph with its decision and measured legs. The
-    * radius-1 graph it measures is built through the SAME [[stages]]
-    * path the session would use, so on the no-escalation branch nothing
-    * is thrown away;
-    * on escalation (round-16 verdict task #2) the radius-1 graph is not
-    * waste either — its final edges WARM-START the radius-2 descent
-    * (unioned into round 1's candidate set; NN-descent improves
-    * monotonically from any seed), so the escalated build starts from
-    * the best graph already known instead of from scratch.
-    *
-    * Persisted-footprint discipline (round-16 advisory): the audit
-    * relation's reference is dropped once the LAST measurement has
-    * read it (refcounted — an outer caller like q240 that tracked the
-    * same plan keeps it alive, round-17 advisory), every intermediate
-    * stage is dropped once the audit has materialized the stage above
-    * it, and each superseded graph is dropped the moment its successor
-    * is materialized — buildAuto leaves exactly ONE persisted relation
-    * behind. */
+  /** The radius-1 build, its recall audit and the escalation legs (see
+    * the object doc). The sampled-exact top-K is one broadcast
+    * `mapPartitions` pass over the corpus; each leg's audit collects the
+    * graph's sampled edges, which materializes that leg's persisted
+    * graph. The corpus and every leg graph are released once the shipped
+    * graph is materialized, so a build leaves exactly ONE persisted
+    * relation behind. */
   private def buildAuto(s: SparkSession, emb: DataFrame,
       cacheKey: String): Built = {
-    val r1Stages = stages(s, emb, cacheKey, probeRadius = 1)
-    val g1 = r1Stages.last
     val n = Similarity.corpusCount(emb, cacheKey)
     val stride = math.max(1L, n / 200L)
-    val probes = emb.filter(col("vec_id") % stride === 0)
-    // refcounted registration (round-17 advisory): q240 tracks the
-    // identical plan around its own consumers — the drop at the end of
-    // this build releases only THIS reference, so a concurrent outer
-    // registration keeps the relation cached
-    val exact = graft.SessionCache.tracked("knnd",
-      Similarity.cosineTopK(probes, emb, K)
-        .select(col("probe_id").as("src"), col("vec_id").as("nbr")))
-    // the sampled-exact recall@3 of `g`, in the dial's exact
-    // micro-units (1e6·hits/exact_edges; -1 on an empty sample). ONE
-    // fused job (r19, guide §1): n_exact and the hit count come from a
-    // single aggregate over a left_outer probe — exact is unique on
-    // (src, nbr) (a top-K cut) and so is the graph side, so each exact
-    // edge yields exactly one output row and count(__hit) IS the old
-    // left_semi count. The separate exact.count() and the standalone
-    // g2/g3 materialization counts fold into it: one audit action per
-    // measured graph, which also materializes the audit relation and
-    // (on the escalation legs) the chain it measures.
-    def recallMicro(g: DataFrame): Long = {
-      val m = exact.join(
-        g.filter(col("src") % stride === 0).select(col("src"), col("nbr"))
-          .withColumn("__hit", lit(1)),
-        Seq("src", "nbr"), "left_outer")
-        .agg(count(lit(1)).as("n"), count(col("__hit")).as("h")).head()
-      val (nExact, hits) = (m.getLong(0), m.getLong(1))
-      if (nExact == 0L) -1L else 1000000L * hits / nExact
-    }
-    // the ONE escalation rule, applied to every measured graph: an
-    // empty sample escalates, as does a measured recall under the floor
-    def misses(micro: Long): Boolean =
-      micro < 0L || micro < graft.Thresholds.NndRecallFloorMicro
-    val rec1 = recallMicro(g1)
-    val legs = scala.collection.mutable.ArrayBuffer("r1" -> rec1)
-    val r = if (misses(rec1)) 2 else 1
-    // the fused audit above materialized every radius-1 stage, so the
-    // intermediates are dead weight on both branches; the audit
-    // relation stays alive until the LAST measurement below (when the
-    // dial escalates it also scores g2 — round-17 verdict #1)
-    r1Stages.init.foreach(graft.SessionCache.drop("knnd", _))
-    val out =
-      if (r == 1) g1
-      else {
-        val r2Stages = stages(s, emb, cacheKey, probeRadius = 2,
-          warm = Some(g1.select(col("src"), col("nbr"))))
-        val g2 = r2Stages.last
-        // AUDIT THE GRAPH THE POLICY ACTUALLY SHIPS (round-17 verdict
-        // #1: through round 17 buildAuto measured only the radius-1
-        // graph it rejected and returned g2 unaudited — on the docvec
-        // corpus the escalated graph lands at 0.553, far under the
-        // floor, and nothing in the engine recorded it). Same O(n)
-        // sampled-exact audit; when g2 ALSO misses the floor the
-        // DEFINED response is ONE more descent round warm from g2 —
-        // descent improves monotonically from any seed and a round is
-        // linear O(n·K²), whereas no reseeding can help a corpus whose
-        // neighbors are invisible to the Hamming-2 seed (docvec: the
-        // from-scratch flat-IVF alternative reads 0.463, also under
-        // the floor). The response is bounded (exactly one round) and
-        // its outcome is recorded; consumers read the shipped graph's
-        // measured recall via [[measuredRecallMicro]].
-        // The fused audit's own action materializes the escalated chain
-        // (the r18 standalone g2.count() folded into it — r19); the
-        // warm seed g1 is released only AFTER that materialization.
-        val rec2 = recallMicro(g2)
-        graft.SessionCache.drop("knnd", g1)
-        r2Stages.init.foreach(graft.SessionCache.drop("knnd", _))
-        legs += ("r2" -> rec2)
-        if (!misses(rec2)) g2
-        else {
-          val g3 = descendOnce(s, emb, g2)
-          val rec3 = recallMicro(g3)
-          graft.SessionCache.drop("knnd", g2)
-          legs += ("r2x1" -> rec3)
-          g3
+    val corpus = corpusOf(s, emb).persist()
+    val held = mutable.ArrayBuffer[RDD[_]](corpus)
+    def kept(g: Graph): Graph = { held += g; g.persist() }
+    try {
+      val probes = s.sparkContext.broadcast(
+        corpus.filter(_._1 % stride == 0).collect())
+      val exact: Set[(Long, Long)] = corpus.mapPartitions { it =>
+        val tops = mutable.HashMap.empty[Long, Nbrs]
+        it.foreach { case (c, cv) =>
+          probes.value.foreach { case (p, pv) =>
+            if (p != c) tops(p) = admit(tops.getOrElse(p, Array.empty),
+              (c, Similarity.roundedCosine(pv, cv)))
+          }
         }
+        tops.iterator
+      }.collect().groupMapReduce(_._1)(_._2)((a, b) => b.foldLeft(a)(admit))
+        .iterator.flatMap { case (p, nb) => nb.map(e => (p, e._1)) }.toSet
+      probes.destroy()
+      // sampled-exact recall@3 in micro-units; -1 on an empty sample
+      def recallMicro(g: Graph): Long = {
+        val sampled = g.filter(_._1 % stride == 0)
+          .flatMap { case (p, nb) => nb.map(e => (p, e._1)) }.collect().toSet
+        if (exact.isEmpty) -1L
+        else 1000000L * exact.count(sampled) / exact.size
       }
-    graft.SessionCache.drop("knnd", exact)
-    Built(out, r, legs.toSeq)
+      def misses(micro: Long): Boolean =
+        micro < 0L || micro < graft.Thresholds.NndRecallFloorMicro
+      val g1 = kept(descend(corpus, n, 1).last)
+      val legs = mutable.ArrayBuffer("r1" -> recallMicro(g1))
+      val r = if (misses(legs.last._2)) 2 else 1
+      val out =
+        if (r == 1) g1
+        else {
+          val g2 = kept(descend(corpus, n, 2, warm = Some(g1)).last)
+          legs += ("r2" -> recallMicro(g2))
+          if (!misses(legs.last._2)) g2
+          else {
+            val g3 = kept(descentRound(corpus, g2))
+            legs += ("r2x1" -> recallMicro(g3))
+            g3
+          }
+        }
+      val graph = graft.SessionCache.tracked("knnd",
+        edgeDf(s, emb, edgesOf(out)))
+      // one job: a count() would add an AQE cache stage and an exchange
+      graph.write.format("noop").mode("overwrite").save()
+      Built(graph, r, legs.toSeq)
+    } finally held.foreach(_.unpersist(blocking = false))
   }
 
   /** The NN-descent graph for a corpus, cached per (session, dataset)
     * so q231/q77/q122/q220/q245 in one session build it once. Columns:
     * (src, nbr, cos) — ≤ K edges per src, unranked.
     *
-    * The cached handle is VERIFIED still materialized before reuse
-    * (round-16 verdict task #1): a harness-level blanket RDD unpersist
-    * (Bench's between-query residue sweep) can strip the graph's blocks
-    * while the session cache keeps the DataFrame — returning the stale
-    * handle re-derives the whole descent chain PER CONSUMER (the r16
-    * q240 anomaly: full-session runs doubling [16.2, 32.7, 66.5] s
-    * where isolated runs warm normally). On a stale hit, every
-    * knnd-tracked relation is released (their CacheManager entries are
-    * equally stale — a bare re-persist of the same plan would no-op
-    * against the dead entry) and the graph rebuilds from scratch. */
+    * The cached handle is VERIFIED still materialized before reuse: a
+    * harness-level blanket RDD unpersist can strip the graph's blocks
+    * while the session cache keeps the DataFrame, and the stale handle
+    * would recompute the build per consumer. On a stale hit, every
+    * knnd-tracked relation is released and the graph rebuilds. */
   private[graft] def graph(s: SparkSession, emb: DataFrame,
       cacheKey: String): DataFrame = built(s, emb, cacheKey).graph
 
@@ -274,15 +297,14 @@ object KnnDescent {
   /** q248's delta rule: a FIXED ~50-vector delta at any corpus size
     * (vec_id % stride = 7 % stride, stride = n/50) — fixed-absolute
     * rather than fixed-fraction, so the scale sweep can show per-delta
-    * admission cost tracking DELTA size, not corpus size (the round-17
-    * verdict #1 "done" criterion), exactly like the fixed ~200-probe
+    * admission cost tracking DELTA size, not corpus size, exactly like
+    * the fixed ~200-probe
     * audit sample beats an n^(2/3) one (q240's scaladoc argument). */
   private[graft] def deltaStride(n: Long): Long = math.max(1L, n / 50L)
 
-  /** INCREMENTAL kNN-GRAPH MAINTENANCE (round-17 verdict #1 — the one
-    * materialized store that still rebuilt from scratch on any corpus
-    * change; every sibling store admits deltas: signature q129/q143,
-    * phash q147/q149, ANN index q135/q142, release lineage q246).
+  /** INCREMENTAL kNN-GRAPH MAINTENANCE, like every sibling store's
+    * delta admission (signature q129/q143, phash q147/q149, ANN index
+    * q135/q142, release lineage q246).
     * Admit `deltaEmb` into the FROZEN graph of `baseEmb` without
     * touching unaffected nodes:
     *
@@ -348,8 +370,8 @@ object KnnDescent {
     // every (delta, ·) pair the admission SCORES feeds the reverse
     // repair below — not just the pairs that survive a top-K cut
     val scoredAll = scala.collection.mutable.ArrayBuffer[DataFrame](seedP)
-    // embedding attach sides come off the PERSISTED bucket relation
-    // (r19, guide §5 reuse): same (vec_id, embedding) rows, but every
+    // embedding attach sides come off the PERSISTED bucket relation:
+    // same (vec_id, embedding) rows, but every
     // per-round score join and the repair's re-cut read the cache
     // instead of re-scanning the base+delta parquet union per side
     val e1 = bucketed.select(col("vec_id").as("src"), col("embedding").as("e1"))
@@ -360,22 +382,17 @@ object KnnDescent {
       // delta-anchored undirected adjacency: the reverse arm keeps only
       // rows whose NEW src is itself a delta vector (base graph edges
       // never point at delta nodes — the graph is frozen pre-delta).
-      // NOT deduped here (r19, guide §2.4): everything is delta-sized
-      // with a bounded duplicate factor, and the round's ONE
-      // result-bearing distinct — the candidate set feeding the top-K
-      // cut — absorbs it; the r18 intermediate distincts each cost a
-      // full exchange+aggregate stage to shrink delta-sized rows.
+      // NOT deduped here: everything is delta-sized with a bounded
+      // duplicate factor, and the round's ONE result-bearing distinct —
+      // the candidate set feeding the top-K cut — absorbs it.
       val undDelta = dEdges.union(
           dg.select(col("nbr").as("src"), col("src").as("nbr"))
             .join(broadcast(deltaIds.withColumnRenamed("vec_id", "src")),
               "src"))
       // undirected adjacency through base ∪ delta edges, keyed at the
-      // mid directly by the NoN join (r19): the r18 mid-set semi
-      // pre-filter was REDUNDANT — the join condition a.nbr = b.src is
-      // exactly the membership test the broadcast semi pass ran, so the
-      // filter, its broadcast build, and its extra pass over the edge
-      // scan fold into the one BHJ below (undDelta broadcasts; the
-      // frozen graph is scanned — linear, cached — never shuffled)
+      // mid directly by the NoN join, whose condition a.nbr = b.src is
+      // the mid-set membership test (undDelta broadcasts; the frozen
+      // graph is scanned — linear, cached — never shuffled)
       val allEdges = baseEdges.union(dEdges)
       val undAll = allEdges
         .union(allEdges.select(col("nbr").as("src"), col("src").as("nbr")))
@@ -412,10 +429,9 @@ object KnnDescent {
     // corpus at fixture scale: occupancy·probes ≈ n there)
     val frontier = graft.plans.TopKPerGroup.topK(scoredAll.last,
       Seq("src"), Seq("cos" -> false, "nbr" -> true), 2 * K)
-    // NOT deduped (r19): every consumer below is a left_semi / left_anti
-    // membership probe — set-semantic by definition — so the distinct
-    // bought nothing but an exchange; the one result-bearing dedup is
-    // the affCand distinct feeding the re-cut
+    // NOT deduped: every consumer below is a left_semi / left_anti
+    // membership probe — set-semantic by definition; the one
+    // result-bearing dedup is the affCand distinct feeding the re-cut
     val affected = graft.SessionCache.tracked("knnd", frontier
       .select(col("nbr").as("src"))
       .join(broadcast(deltaIds.withColumnRenamed("vec_id", "src")),
@@ -429,18 +445,20 @@ object KnnDescent {
       .join(broadcast(affected), Seq("src"), "left_semi")
     val dEdgesF = dg.select(col("src"), col("nbr"))
     val mergedE = baseEdges.union(dEdgesF)
-    val undAff = mergedE.join(broadcast(affected), Seq("src"), "left_semi")
-      .union(mergedE.select(col("nbr").as("src"), col("src").as("nbr"))
-        .join(broadcast(affected), Seq("src"), "left_semi"))
-    // the r18 mid-set semi pre-filter of the NoN b-side was redundant
-    // here exactly as in the round loop (the join condition IS the
-    // membership test) — the affected-anchored side broadcasts instead
     val undMergedAll = mergedE
       .union(mergedE.select(col("nbr").as("src"), col("src").as("nbr")))
-    val affNon = broadcast(undAff.as("a"))
+    def nonFrom(und: DataFrame): DataFrame = und.as("a")
       .join(undMergedAll.as("b"), col("a.nbr") === col("b.src"))
       .filter(col("b.nbr") =!= col("a.src"))
       .select(col("a.src").as("src"), col("b.nbr").as("nbr"))
+    // the affected nodes' undirected edges, in two arms: the out-edges
+    // are ≤ K per affected node, so they broadcast; the in-edges grow
+    // with an affected node's in-degree (a hub's is unbounded), so AQE
+    // chooses their join from their measured size
+    val affNon = nonFrom(broadcast(
+        mergedE.join(broadcast(affected), Seq("src"), "left_semi")))
+      .union(nonFrom(mergedE.select(col("nbr").as("src"), col("src").as("nbr"))
+        .join(broadcast(affected), Seq("src"), "left_semi")))
     val affCand = affNon
       .union(gB.join(broadcast(affected), Seq("src"), "left_semi")
         .select(col("src"), col("nbr")))
@@ -457,113 +475,34 @@ object KnnDescent {
   }
 
   /** The multi-probed seed candidate relation (src, nbr, cos), with the
-    * candidate-volume observe() metric riding it (the ivf_candidates
-    * discipline: DedupSimilaritySpec pins ~n·log n growth on it).
-    *
-    * `probeRadius` is THE measured recall dial (iteration count is
-    * not — descent converges by round 3, COVERAGE.md x1 measurement):
-    * radius 1 probes own bucket + p one-bit flips (O(n·occ·p) seed
-    * candidates); radius 2 adds the p(p−1)/2 two-bit flips — ~p/2×
-    * more seed candidates, still O(n·log²n), for corpora whose
-    * neighbors sit at weak cosine margins. Query paths select it via
-    * [[autoRadius]] (the measured policy); RecallProbe measures both
-    * radii explicitly plus the policy's own pick. */
+    * candidate-volume observe() metric riding it (DedupSimilaritySpec
+    * pins its ~n·log n growth). `probeRadius` is the dial the recall
+    * policy turns: radius 1 probes the own bucket and the p one-bit
+    * flips; radius 2 adds the p(p−1)/2 two-bit flips, ~p/2× more
+    * candidates, still O(n·log²n). */
   private[graft] def seedScored(s: SparkSession, emb: DataFrame,
-      cacheKey: String, probeRadius: Int = 1): DataFrame = {
-    val n = Similarity.corpusCount(emb, cacheKey)
-    val planes = Similarity.lshPool.take(Similarity.lshNPlanes(n))
-    val bucketed = emb.select(col("vec_id"), col("embedding"),
-      Similarity.lshBucket(col("embedding"), planes).as("bucket"))
-    // own bucket + all Hamming-1 flips (+ Hamming-2 at radius 2) —
-    // q102's multi-probe, with the whole corpus as probes (NOT
-    // broadcast: the join keys both sides on the bucket). The probed
-    // set is distinct, so each candidate pair still matches through
-    // exactly one bucket.
-    val probes = bucketed.select(col("vec_id").as("src"),
-      col("embedding").as("p_emb"),
-      explode(Similarity.probeBuckets(planes, probeRadius)).as("bucket"))
-    bucketed.join(probes, Seq("bucket"))
-      .filter(col("src") =!= col("vec_id"))
-      .select(col("src"), col("vec_id").as("nbr"),
-        cosC(col("p_emb"), col("embedding")).as("cos"))
-      // radius-suffixed: the warm-started escalation unions the radius-1
-      // graph (whose lineage carries the r1 seed's observe node) under
-      // the radius-2 chain — same-named metrics with different results
-      // in one plan are a DUPLICATED_METRICS_NAME analysis error
+      cacheKey: String, probeRadius: Int = 1): DataFrame =
+    edgeDf(s, emb, seedPairs(corpusOf(s, emb),
+        Similarity.corpusCount(emb, cacheKey), probeRadius))
       .observe(s"nnd_seed_candidates_r$probeRadius",
         count(lit(1)).as("n_candidates"))
-  }
 
-  /** ONE descent round from graph `g` over corpus `emb`: candidates =
-    * neighbors-of-neighbors through the undirected graph ∪ current
-    * edges (∪ `warm` edges when given — the escalation warm-start),
-    * re-scored, re-cut to top-K, truncated + tracked. Shared by the
-    * [[stages]] loop and the r2-miss response (round-17 verdict #1),
-    * so the extra round is bit-identical to an ordinary one. Every
-    * stage is truncated ([[graft.Tables.truncate]]): a round references
-    * the previous graph ~5 times (the undirected relation twice, the
-    * NoN join twice, the current-edge arm), and without the cut q248's
-    * warm plan analysis alone took 60-80 s. */
-  private[graft] def descendOnce(s: SparkSession, emb: DataFrame,
-      g: DataFrame, warm: Option[DataFrame] = None): DataFrame =
-    graft.SessionCache.tracked("knnd", truncate(s, roundPlan(emb, g, warm)))
-
-  /** The PRE-TRUNCATION plan of one descent round — split from
-    * [[descendOnce]] so the plan-shape suite can pin the round's
-    * exchange/join structure directly (round-17 advisory: the eager
-    * checkpoint collapses every locked q231/q240 shape to a LogicalRDD
-    * scan, so the headline lock can no longer see descent-plan
-    * regressions; this is the seam where they stay visible). */
-  private[graft] def roundPlan(emb: DataFrame, g: DataFrame,
-      warm: Option[DataFrame] = None): DataFrame = {
-    val e1 = emb.select(col("vec_id").as("src"), col("embedding").as("e1"))
-    val e2 = emb.select(col("vec_id").as("nbr"), col("embedding").as("e2"))
-    val und = g.select(col("src"), col("nbr"))
-      .union(g.select(col("nbr").as("src"), col("src").as("nbr")))
-      .distinct()
-    val non = und.as("a").join(und.as("b"), col("a.nbr") === col("b.src"))
-      .filter(col("b.nbr") =!= col("a.src"))
-      .select(col("a.src").as("src"), col("b.nbr").as("nbr"))
-      .union(g.select(col("src"), col("nbr")))
-    val cand = warm.fold(non)(w => non.union(w)).distinct()
-    val scored = cand.join(e1, "src").join(e2, "nbr")
-      .select(col("src"), col("nbr"), cosC(col("e1"), col("e2")).as("cos"))
-    cut(scored)
-  }
-
-  /** Every stage of the build — g0 (seed cut) through g[[Iters]] — each
-    * persisted; exposed so the spec can pin the per-round monotonic-
-    * improvement invariant. [[build]] is stages(...).last.
-    *
-    * `warm`: optional (src, nbr) edge set
-    * unioned into ROUND 1's candidate pool — the escalation path seeds
-    * the radius-2 descent with the radius-1 graph's final edges, so the
-    * measured-then-rejected build contributes its best edges instead of
-    * being pure waste. Round 1 (not the seed cut) is the cheap join
-    * point: the round candidate set already pays a distinct() for set
-    * semantics (the warm ∪ seed overlap dedupes there for free), while
-    * the seed relation is dedup-free by the one-probed-bucket argument
-    * and would need a new full-width exchange over the largest relation
-    * in the build to absorb duplicates. */
+  /** Every stage of one fixed-radius build — g0 (the seed cut) through
+    * g[[Iters]] — as (src, nbr, cos) relations over one lazily chained
+    * lineage, so computing a later stage reuses the earlier stages'
+    * shuffles. For the per-round monotonic-improvement pin and
+    * RecallProbe's fixed-radius legs; [[graph]] runs the policy. */
   private[graft] def stages(s: SparkSession, emb: DataFrame,
-      cacheKey: String, probeRadius: Int = 1,
-      warm: Option[DataFrame] = None): IndexedSeq[DataFrame] = {
-    var g = graft.SessionCache.tracked("knnd",
-      truncate(s, cut(seedScored(s, emb, cacheKey, probeRadius))))
-    val out = scala.collection.mutable.ArrayBuffer(g)
-    for (i <- 1 to Iters) {
-      g = descendOnce(s, emb, g, if (i == 1) warm else None)
-      out += g
-    }
-    out.toIndexedSeq
-  }
+      cacheKey: String, probeRadius: Int = 1): IndexedSeq[DataFrame] =
+    descend(corpusOf(s, emb), Similarity.corpusCount(emb, cacheKey),
+      probeRadius).map(g => edgeDf(s, emb, edgesOf(g)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The production kNN graph: same shape as q73 (3 ranked neighbors
     // per vector) built by LSH-seeded NN-descent — quasi-linear
     // candidate volume instead of the flat-IVF n^1.5.
-    // SAMPLED EXACT AUDIT of the production graph (round-14 judge task
-    // #4 — the audit that itself RUNS at 100×): a deterministic fixed
+    // SAMPLED EXACT AUDIT of the production graph (an audit that itself
+    // RUNS at 100×): a deterministic fixed
     // ~200-vector sample (the RecallProbe/auto-dial rule: vec_id %
     // max(1, n/200) = 0) exact-re-ranked brute-force against the FULL
     // corpus — the sample broadcasts, so the exact pass is ONE map-side
@@ -650,8 +589,8 @@ object KnnDescent {
         .orderBy(col("src_id"))
     }),
 
-    // INCREMENTAL kNN-GRAPH DELTA ADMISSION — see [[admitDelta]] (the
-    // round-17 verdict #1 store-maintenance gap). The fixture delta is
+    // INCREMENTAL kNN-GRAPH DELTA ADMISSION — see [[admitDelta]]. The
+    // fixture delta is
     // the deterministic fixed-size slice vec_id % (n/50) = 7 (the
     // audit-sample rule's shape, a different residue so the two
     // samples don't alias); the base graph is built, dial-measured,
@@ -676,8 +615,13 @@ object KnnDescent {
     })
   )
 
+  private def cosSql(a: String, b: String): String =
+    s"""round(list_dot_product($a::DOUBLE[], $b::DOUBLE[])
+             / (sqrt(list_dot_product($a::DOUBLE[], $a::DOUBLE[]))
+              * sqrt(list_dot_product($b::DOUBLE[], $b::DOUBLE[]))), 6)"""
+
   /** The full oracle replay of the graph build, as a CTE chain ending
-    * in `g$Iters` (src, nbr, cos): q102's plane/bucket CTEs, the FULL
+    * in [[finalCte]] (src, nbr, cos): q102's plane/bucket CTEs, the FULL
     * radius-1 descent (chain `*a`), the [[autoRadius]] recall audit
     * replayed (d_exact → nnd_dial — the identical integer-exact
     * comparison against the radius-1 graph's sampled edges), the
@@ -685,17 +629,12 @@ object KnnDescent {
     * warm-seed arm (chain a's final edges into round 1 — the engine's
     * escalation warm-start) gated on nnd_dial.r >= 2 (so the whole
     * chain is empty — near-free — when the measured recall clears the
-    * floor), and a final selector CTE
-    * that keeps the [[finalCte]] name stable for every consumer.
+    * floor), the shipped graph's audit and the gated extra round
+    * (nnd_dial2), and the final selector CTE.
     * Within each chain: multi-probe seed join, then each descent round
     * unrolled — undirected edge set, neighbors-of-neighbors ∪ current
     * edges, re-score, top-K re-cut. Shared by the q231 oracle and the
     * q77/q122/q220/q240/q245 consumers. */
-  private def cosSql(a: String, b: String): String =
-    s"""round(list_dot_product($a::DOUBLE[], $b::DOUBLE[])
-             / (sqrt(list_dot_product($a::DOUBLE[], $a::DOUBLE[]))
-              * sqrt(list_dot_product($b::DOUBLE[], $b::DOUBLE[]))), 6)"""
-
   private[graft] def nndCtes: String = nndCtesFrom("embeddings")
 
   /** [[nndCtes]] parameterized on the corpus relation (a table or an
@@ -707,16 +646,14 @@ object KnnDescent {
   private[graft] def nndCtesFrom(src: String): String = {
     // one descent chain (seed probes -> g0 -> Iters rounds), suffix
     // `t`; `gate` is an extra WHERE conjunct on every probe arm.
-    // `warmFrom` (round-16 verdict task #2) names a prior chain's final
+    // `warmFrom` names a prior chain's final
     // graph CTE whose edges union into ROUND 1's candidate set — gated
     // on the dial exactly like the probe arms, so the warm arm is empty
     // (near-free) whenever this chain is the dead branch.
-    // Every CTE is declared AS MATERIALIZED at its definition site
-    // (round-16 advisory — the previous blanket string replace was
-    // spacing-fragile): DuckDB inlines a plain CTE at every reference,
-    // and with the audit plus two gated descent chains that
-    // re-expansion went super-linear (the replay ran >12 min where the
-    // single-chain r15 form took seconds).
+    // Every CTE is declared AS MATERIALIZED at its definition site:
+    // DuckDB inlines a plain CTE at every reference, and with the audit
+    // plus two gated descent chains that re-expansion goes super-linear
+    // (a replay of >12 min where the materialized form takes seconds).
     def chain(t: String, twoBit: Boolean,
         warmFrom: Option[String] = None): String = {
       val gate = if (twoBit) " AND nnd_dial.r >= 2" else ""
@@ -833,8 +770,8 @@ object KnnDescent {
                    * (SELECT count(*) FROM d_exact)
              THEN 2 ELSE 1 END AS r)"""
     sb ++= chain("b", twoBit = true, warmFrom = Some(s"g${Iters}a"))
-    // the SHIPPED-graph audit + the r2-miss response (round-17 verdict
-    // #1): the escalated graph's sampled recall is measured with the
+    // the SHIPPED-graph audit + the r2-miss response: the escalated
+    // graph's sampled recall is measured with the
     // SAME d_exact sample and the same integer-exact rule; when it also
     // misses the floor, ONE extra descent round runs (gated — the
     // whole extra chain is empty, near-free, whenever r = 1 or the

@@ -45,9 +45,26 @@ object Similarity {
     * sign bit per plane (p planes → 2^p buckets). */
   def lshBucket(vec: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(p.map(lit): _*)
+      val planeLit = array(p.toIndexedSeq.map(lit): _*)
       when(dot(vec, planeLit) >= 0, lit(1 << i)).otherwise(lit(0))
     }.reduce[Column](_ + _)
+
+  /** [[lshBucket]] of one vector: [[VecDot]]'s widen-then-multiply left
+    * fold against each plane, bit i set iff the dot is >= 0. */
+  def signBucket(v: Array[Float], planes: Array[Array[Double]]): Int = {
+    var b = 0
+    var i = 0
+    while (i < planes.length) {
+      val pl = planes(i)
+      val n = math.min(v.length, pl.length)
+      var acc = 0.0
+      var j = 0
+      while (j < n) { acc += v(j).toDouble * pl(j); j += 1 }
+      if (acc >= 0) b += 1 << i
+      i += 1
+    }
+    b
+  }
 
   /** Fixed Gaussian hyperplane pool for the LSH ANN path (q102): 24
     * planes × 64 dims, seed 7 — a corpus uses its FIRST [[lshNPlanes]](n)
@@ -56,22 +73,24 @@ object Similarity {
   val LshMaxPlanes = 24
   lazy val lshPool: Seq[Array[Double]] = hyperplanes(LshMaxPlanes, 64)
 
-  /** The multi-probe bucket array of a `bucket` column under `planes`:
-    * the own bucket, every Hamming-1 flip and, at radius ≥ 2, every
-    * Hamming-2 flip. The buckets are all distinct, so a candidate
-    * matches a probe through at most ONE probed bucket and the join
-    * output needs no dedup. */
-  def probeBuckets(planes: Seq[Array[Double]], radius: Int): Column = {
-    val flips1 = planes.indices.map(i =>
-      col("bucket").bitwiseXOR(lit(1 << i)))
+  /** The multi-probe XOR masks over `nPlanes` sign bits: 0 (the own
+    * bucket), every Hamming-1 flip and, at radius ≥ 2, every Hamming-2
+    * flip. The probed buckets are all distinct, so a candidate matches
+    * a probe through at most ONE of them and a bucket join needs no
+    * dedup. */
+  def probeMasks(nPlanes: Int, radius: Int): Seq[Int] = {
     val flips2 =
       if (radius >= 2)
-        planes.indices.combinations(2).map { ij =>
-          col("bucket").bitwiseXOR(lit((1 << ij(0)) | (1 << ij(1))))
-        }.toSeq
-      else Seq.empty
-    array(col("bucket") +: (flips1 ++ flips2): _*)
+        (0 until nPlanes).combinations(2).map(ij => (1 << ij(0)) | (1 << ij(1)))
+      else Iterator.empty
+    0 +: ((0 until nPlanes).map(1 << _) ++ flips2)
   }
+
+  /** The multi-probe bucket array of a `bucket` column under `planes`
+    * (see [[probeMasks]]). */
+  def probeBuckets(planes: Seq[Array[Double]], radius: Int): Column =
+    array(probeMasks(planes.size, radius).map(m =>
+      if (m == 0) col("bucket") else col("bucket").bitwiseXOR(lit(m))): _*)
 
   /** Planes used at corpus size n: the smallest p with 8·2^p ≥ n, clamped
     * to [4, 24] — bucket count 2^p tracks n/8, so expected bucket

@@ -201,7 +201,7 @@ object AnnIndexStore {
     // pruned at file-listing time, never opened (the search-cost shape
     // that survives a 100× corpus)
     val codesRaw = s.read.parquet(codesPath(dir))
-      .filter(col("cell").isin(cellSet: _*))
+      .filter(col("cell").isin(cellSet.toIndexedSeq: _*))
       .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell"))
     // tombstone mask (q142): deleted vectors vanish from results the
     // moment [[delete]] records them — a broadcast anti-join against the
@@ -286,7 +286,7 @@ object AnnIndexStore {
     else {
       val candCodes = s.read.parquet(codesPath(storeDir))
         .filter(col("batch_id") < beforeBatch)
-        .filter(col("cell").cast("long").isin(cellSet: _*))
+        .filter(col("cell").cast("long").isin(cellSet.toIndexedSeq: _*))
         .select(col("vec_id").as("cand_id"), col("cell").cast("long").as("cell"))
       val cand = candCodes.join(broadcast(batchCells), "cell")
         .select(col("vec_id"), col("p_emb"), col("cand_id"))

@@ -381,7 +381,7 @@ object PipelineOps {
     "q160_quality_contracts" -> ((s, d) => {
       def melt(tbl: String, one: DataFrame): DataFrame = {
         val cols = one.columns
-        one.select(explode(array(cols.map(c =>
+        one.select(explode(array(cols.toIndexedSeq.map(c =>
           struct(lit(tbl).as("tbl"), lit(c).as("chk"),
             col(c).as("n_violations"))): _*)).as("kv"))
           .select(col("kv.tbl"), col("kv.chk"), col("kv.n_violations"))
@@ -884,38 +884,48 @@ object PipelineOps {
     * bucket = (rows_before * 16) div n in pure BIGINT. */
   private[graft] def equidepthLeg(s: SparkSession, d: String,
       colName: String, v: Column, width: Double): DataFrame =
-    equidepthHistOf(lineitem(s, d), lit(colName), v, width)
+    equidepthHistOf(lineitem(s, d).select(v.as("v")), Nil, width)
+      .select(lit(colName).as("col_name"), col("*"))
 
   /** The same construction over an arbitrary source relation, keyed by a
     * LEG column that leads every grouping, join and window partition: one
     * pass over `src` builds one histogram per distinct leg value, and
-    * `col_name` carries the leg. q194/q198 pass a literal leg (one
-    * histogram); q205 builds its two slice histograms and its exact audit
-    * leg in one keyed pass. */
+    * `col_name` carries the leg. q205 builds its two slice histograms and
+    * its exact audit leg in one keyed pass. */
   private[graft] def equidepthHistOf(src: DataFrame,
-      leg: Column, v: Column, width: Double): DataFrame = {
+      leg: Column, v: Column, width: Double): DataFrame =
+    equidepthHistOf(src.select(leg.as("col_name"), v.as("v")),
+      Seq("col_name"), width)
+
+  /** The construction over `rows` (`keys` columns and `v`), one
+    * histogram per distinct key tuple. A single literal leg is named
+    * after the build ([[equidepthLeg]]) rather than keyed: grouped by a
+    * literal, FoldablePropagation folds it into every aggregate's keys,
+    * and each aggregate shuffles again. */
+  private def equidepthHistOf(rows: DataFrame, keys: Seq[String],
+      width: Double): DataFrame = {
     val B = 16
-    val rollup = src.groupBy(leg.as("col_name"), v.as("v"))
+    def by(cs: String*): Seq[Column] = (keys ++ cs).map(col)
+    val rollup = rows.groupBy(by("v"): _*)
       .agg(count(lit(1)).as("cnt"))
       .withColumn("coarse", floor(col("v") / width).cast("long"))
-    val coarseTot = rollup.groupBy(col("col_name"), col("coarse"))
+    val coarseTot = rollup.groupBy(by("coarse"): _*)
       .agg(sum(col("cnt")).as("ct"))
     val offsets = coarseTot.as("a")
-      .join(coarseTot.as("b"), col("b.col_name") === col("a.col_name") &&
-        col("b.coarse") < col("a.coarse"), "left")
-      .groupBy(col("a.col_name").as("col_name"), col("a.coarse").as("coarse"))
+      .join(coarseTot.as("b"), keys.map(k => col(s"b.$k") === col(s"a.$k"))
+        .foldLeft(col("b.coarse") < col("a.coarse"))(_ && _), "left")
+      .groupBy((keys :+ "coarse").map(k => col(s"a.$k").as(k)): _*)
       .agg(coalesce(sum(col("b.ct")), lit(0L)).as("off"))
-    val tot = rollup.groupBy(col("col_name")).agg(sum(col("cnt")).as("n"))
+    val tot = rollup.groupBy(by(): _*).agg(sum(col("cnt")).as("n"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("col_name"), col("coarse")).orderBy(col("v"))
+      .partitionBy(by("coarse"): _*).orderBy(col("v"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     rollup
       .withColumn("wb", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .join(offsets, Seq("col_name", "coarse")).join(tot, "col_name")
-      .select(col("col_name"),
-        expr(s"((off + wb) * $B) div n").as("bucket"),
-        col("v"), col("cnt"))
-      .groupBy(col("col_name"), col("bucket"))
+      .join(offsets, keys :+ "coarse").join(tot, keys)
+      .select(by() ++ Seq(expr(s"((off + wb) * $B) div n").as("bucket"),
+        col("v"), col("cnt")): _*)
+      .groupBy(by("bucket"): _*)
       .agg(round(min(col("v")), 2).as("lo"),
         round(max(col("v")), 2).as("hi"),
         sum(col("cnt")).as("n_rows"), count(lit(1)).as("n_distinct"))

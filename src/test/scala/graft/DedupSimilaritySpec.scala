@@ -1324,33 +1324,27 @@ class DedupSimilaritySpec extends TestSpark {
       s"expected all three src_kind arms populated, got $kinds")
   }
 
-  test("descent-round pre-truncation plan shape stays pinned (r17 advisory: the headline lock sees only a LogicalRDD after checkpoint truncation)") {
+  test("a cold NN-descent graph build runs at most 10 jobs and leaves one persisted relation") {
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))
-    val g0 = graft.functions.KnnDescent
-      .stages(spark, emb, sf0001 + "#roundshape").head
-    val round = graft.functions.KnnDescent.roundPlan(emb, g0)
-    val plan = round.queryExecution.executedPlan.toString
-    val shuffles =
-      "Exchange (hash|range|Single|RoundRobin)".r.findAllIn(plan).size
-    val heaps = "TopKPerGroup".r.findAllIn(plan).size
-    info(s"round plan: $shuffles shuffles, $heaps heap ops, " +
-      s"${plan.linesIterator.size} lines")
-    assert(heaps >= 1, "the per-round cut must run through the heap operator")
-    // the round's exchange budget: und distinct, NoN candidate distinct,
-    // the two embedding attach joins, and the heap's final cut exchange.
-    // A silent regression (a lost reuse, a broadcast falling back) shows
-    // up here now that the headline lock can't see it.
-    assert(shuffles <= 8,
-      s"descent round gained exchanges: $shuffles > 8\n" +
-        plan.linesIterator.take(60).mkString("\n"))
-    // and the TRUNCATED stage the consumers actually analyze stays one
-    // round deep — the r17 logical-plan-blowup regression guard
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val jobs = jobsIn("knnd-cold-build") {
+      graft.functions.KnnDescent.graph(spark, emb, sf0001 + "#jobcount")
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    info(s"cold graph build: $jobs jobs, ${left.size} persisted RDD(s) left")
+    // the count, the audit's probe collect and exact pass, one audit per
+    // measured leg (three on this fixture) and the final materialization
+    assert(jobs <= 10, s"a cold graph build ran $jobs jobs (the DataFrame " +
+      "build this kernel replaced ran 88)")
+    assert(left.size == 1, s"the build must leave exactly the graph persisted, got $left")
+    // the stage the consumers analyze stays a shallow scan of its RDD
     val stageLines = graft.functions.KnnDescent
       .stages(spark, emb, sf0001 + "#roundshape2").last
       .queryExecution.executedPlan.toString.linesIterator.size
     assert(stageLines < 60,
-      s"a built stage's analyzed plan should be a shallow cached-scan " +
-        s"read, got $stageLines lines — is the truncate discipline intact?")
+      s"a built stage's analyzed plan should be a shallow scan, got " +
+        s"$stageLines lines")
+    SessionCache.release(spark, "knnd")
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
 import graft.operators.GraphOps
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Pins for the iterative integer-PageRank dataflow (q152): the algebra
@@ -11,36 +8,6 @@ import org.apache.spark.sql.functions._
   * PageRank can only assert approximate conservation) and the structural
   * ordering PageRank exists to compute. */
 class GraphOpsSpec extends TestSpark {
-
-  /** Jobs started under a job group while `body` runs. A one-task
-    * barrier job in a second group runs after it: the listener bus
-    * delivers events in order, so once the barrier's start arrives every
-    * earlier job start has too. */
-  private def jobsIn(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val barrier = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-barrier" => barrier.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      body
-      sc.setJobGroup(s"$group-barrier", "listener barrier")
-      sc.parallelize(Seq(0), 1).count()
-      assert(barrier.await(60, TimeUnit.SECONDS), "barrier job never started")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("q152 conserves the integer mass budget and covers every trading party") {
     val rows = GraphOps.queries("q152_pagerank")(spark, sf0001).collect()

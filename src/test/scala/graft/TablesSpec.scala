@@ -27,7 +27,7 @@ class TablesSpec extends TestSpark {
       val df = Tables.tsToMicros(spark.read.parquet(s"$dir/$g.parquet"))
       assert(df.schema("ts").dataType
         == org.apache.spark.sql.types.TimestampType, s"$g not normalized")
-      df.select(unix_micros(col("ts"))).head.getLong(0)
+      df.select(unix_micros(col("ts"))).head().getLong(0)
     }
     assert(shapes.forall(_ == micros),
       s"generations disagree: $shapes vs $micros")

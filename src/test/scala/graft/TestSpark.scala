@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +28,36 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Jobs started under a job group while `body` runs. A one-task
+    * barrier job in a second group runs after it: the listener bus
+    * delivers events in order, so once the barrier's start arrives every
+    * earlier job start has too. */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val barrier = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-barrier" => barrier.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(s"$group-barrier", "listener barrier")
+      sc.parallelize(Seq(0), 1).count()
+      assert(barrier.await(60, TimeUnit.SECONDS), "barrier job never started")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   override def afterAll(): Unit = {
     // keep the session alive for other suites in the same JVM, but drop

@@ -28,7 +28,7 @@ class VecDotSpec extends TestSpark {
 
   test("vec_dot handles mixed float/double sides (embedding x literal plane)") {
     val plane = Array.tabulate(64)(i => (i - 32) / 7.5)
-    val planeLit = array(plane.map(lit): _*)
+    val planeLit = array(plane.toIndexedSeq.map(lit): _*)
     val emb = Tables.embeddings(spark, sf0001).limit(100)
     val both = emb.select(
       VecDot.vecDot(col("embedding"), planeLit).as("native"),
