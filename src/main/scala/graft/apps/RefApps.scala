@@ -1,10 +1,9 @@
 package graft.apps
 
 import graft.core.{KeyValue, MRApp}
+import graft.functions.Tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.collection.immutable.ArraySeq
 
 /** The reference's eight Map/Reduce application programs
   * (reference: the eight files under src/mrapps/) re-expressed as
@@ -14,30 +13,11 @@ import scala.collection.immutable.ArraySeq
   */
 object RefApps {
 
-  /** Tokenize on non-letter runes, Unicode-aware and case-sensitive,
-    * dropping empty tokens — Go strings.FieldsFunc(unicode.IsLetter)
-    * (reference: src/mrapps/wc.go:22-26). One scan over code points:
-    * `Character.isLetter(int)` is the same letter set as the regex
-    * class `\p{L}`, and an unpaired surrogate is a separator in both. */
-  def tokenize(s: String): Seq[String] = {
-    val out = ArraySeq.newBuilder[String]
-    var start = -1
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isLetter(cp)) { if (start < 0) start = i }
-      else if (start >= 0) { out += s.substring(start, i); start = -1 }
-      i += Character.charCount(cp)
-    }
-    if (start >= 0) out += s.substring(start)
-    out.result()
-  }
-
   /** Word count (reference: src/mrapps/wc.go:21-44): one ("word","1") per
     * occurrence; reduce = number of values. */
   object WordCount extends MRApp {
     def map(file: String, contents: String): Seq[KeyValue] =
-      tokenize(contents).map(w => KeyValue(w, "1"))
+      Tokens.split(contents).map(w => KeyValue(w, "1"))
     def reduce(key: String, values: Seq[String]): String =
       values.length.toString
   }
@@ -47,7 +27,7 @@ object RefApps {
     * "<n> <doc1,doc2,...>". */
   object Indexer extends MRApp {
     def map(file: String, contents: String): Seq[KeyValue] =
-      tokenize(contents).distinct.map(w => KeyValue(w, file))
+      Tokens.split(contents).distinct.map(w => KeyValue(w, file))
     def reduce(key: String, values: Seq[String]): String = {
       val docs = values.sorted
       s"${docs.length} ${docs.mkString(",")}"
@@ -96,9 +76,7 @@ object RefApps {
     * (reference: src/mr/worker.go:92-94 ships every ("w","1") through the
     * shuffle) — same result, far less shuffle IO at scale. */
   def wordCountDF(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(explode(split(col(textCol), "[^\\p{L}]+")).as("word"))
-      .filter(col("word") =!= "")
+    Tokens.words(docs, col(textCol))
       .groupBy("word")
       .count()
 
@@ -106,10 +84,7 @@ object RefApps {
     * (mirrors the map-side set in indexer.go:21-27), then per-word count +
     * sorted comma-joined doc list. */
   def invertedIndexDF(docs: DataFrame, textCol: String, docCol: String): DataFrame =
-    docs
-      .select(col(docCol).cast("string").as("doc"),
-        explode(split(col(textCol), "[^\\p{L}]+")).as("word"))
-      .filter(col("word") =!= "")
+    Tokens.words(docs, col(textCol), col(docCol).cast("string").as("doc"))
       .distinct()
       .groupBy("word")
       .agg(

@@ -27,16 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Tokens of a text column (reference tokenizer: unicode letters,
-    * case-sensitive — src/mrapps/wc.go:22-26). */
-  private def toks(c: Column): Column = filter(split(c, "[^\\p{L}]+"), x => x =!= "")
-
   /** Distinct word 3-gram shingles of a text — plain Scala, shared by the
     * typed signature/shingle passes (Catalyst higher-order functions are
     * interpreted, so building ~100-element shingle arrays per row in
     * expressions costs ms/row; this loop costs µs). */
   def shingleSet(text: String): Array[String] = {
-    val t = graft.functions.TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+    val t = Tokens.split(text)
     if (t.length < 3) Array.empty
     else {
       val out = new scala.collection.mutable.LinkedHashSet[String]
@@ -50,7 +46,7 @@ object Dedup {
     * any n (q74's decontamination uses n = 8). Same tokenizer, same
     * distinct-set contract, same µs-per-row typed-map cost profile. */
   def ngramSet(text: String, n: Int): Array[String] = {
-    val t = graft.functions.TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+    val t = Tokens.split(text)
     if (t.length < n) Array.empty
     else {
       val out = new scala.collection.mutable.LinkedHashSet[String]
@@ -738,7 +734,7 @@ object Dedup {
     val grams = tracked(docs.select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
-        val toks = graft.functions.TokenizeUdtf.SplitRe.split(t).filter(_.nonEmpty)
+        val toks = Tokens.split(t)
         (0 to toks.length - n).iterator
           .map(i => (id, (i + 1).toLong, toks.slice(i, i + n).mkString(" ")))
       }
@@ -790,11 +786,7 @@ object Dedup {
     val base = tracked(docs.select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
-        // null text ⇒ no tokens (the SQL-side transforms' semantics —
-        // split(NULL) yields nothing — rather than a task NPE)
-        val toks = if (t == null) Array.empty[String]
-          else graft.functions.TokenizeUdtf.SplitRe.split(t)
-            .filter(_.nonEmpty)
+        val toks = Tokens.split(t)
         toks.iterator.zipWithIndex.map { case (tok, i) =>
           val gram = if (i + n <= toks.length)
             toks.slice(i, i + n).mkString(" ") else null
@@ -976,7 +968,7 @@ object Dedup {
     * token-frequency hash (one aggregation, vocabulary-sized shuffle). */
   def simhashSigs(s: SparkSession, d: String): DataFrame = {
       val tokenCounts = documents(s, d)
-        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("h", tokHash(col("tok")))
@@ -1030,9 +1022,9 @@ object Dedup {
     * counts (reused by the exact-Jaccard oracle and q72's clustering
     * oracle). */
   private[graft] val shingleCtes: String =
-      """t AS (
+      s"""t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -1060,9 +1052,9 @@ object Dedup {
     * threshold (greatest(5, n_docs div 10)) before the pairwise
     * intersection, then the same ≥ 0.8 cut. */
   private val stopFilteredJaccardSql: String =
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh0 AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -1101,9 +1093,9 @@ object Dedup {
     // space restricted to delta × non-delta; no a<b rule — the sides
     // are disjoint sets)
     "q127_delta_dedup" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -1132,10 +1124,9 @@ object Dedup {
     // summing distinct bit values (with bit 63 as Long.MinValue) equals
     // the bitwise OR on both engines.
     "q28_dedup_simhash" ->
-      """WITH tokcnt AS (
+      s"""WITH tokcnt AS (
            SELECT doc_id, tok, count(*) AS cnt FROM (
-             SELECT doc_id, unnest(list_filter(
-               string_split_regex(text, '[^\p{L}]+'), x -> x <> '')) AS tok
+             SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
              FROM documents)
            GROUP BY doc_id, tok),
          hashed AS (
@@ -1173,7 +1164,7 @@ object Dedup {
            WHERE bit_count(xor(sa, sb)) <= 12),
          t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -1251,9 +1242,9 @@ object Dedup {
     // doc_id % 5 == 0; DuckDB can't lateral-join range() on a column, so
     // the gram positions come from list_transform over range(...) + unnest.
     "q74_decontaminate" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          grams AS (
            SELECT DISTINCT doc_id,
@@ -1271,9 +1262,9 @@ object Dedup {
     // table: same md5 fold, same m by integer bit-length, membership ≡
     // all three positions present; the exact join audits FP per doc
     "q218_bloom_decontam" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          grams AS (
            SELECT DISTINCT doc_id,
@@ -1319,9 +1310,9 @@ object Dedup {
     // q74's replay with grams counted by their stored 64-bit key
     // (substr(md5, 1, 16)) — exactly what the store persists.
     "q137_decontam_store" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          grams AS (
            SELECT DISTINCT doc_id,
@@ -1339,9 +1330,9 @@ object Dedup {
     // benchmark index, so the streamed check must equal the batch check
     // regardless of micro-batch boundaries.
     "q139_stream_decontam" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          grams AS (
            SELECT DISTINCT doc_id,
@@ -1386,9 +1377,9 @@ object Dedup {
     // (pair, pa−pb) partition is constant per maximal run on both engines
     // (integer arithmetic end to end).
     "q120_shared_spans" ->
-      """WITH tokd AS (
+      s"""WITH tokd AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS lst
+             ${Tokens.sql("text")} AS lst
            FROM documents),
          grams AS (
            SELECT doc_id, i AS pos,
@@ -1421,7 +1412,7 @@ object Dedup {
     "q242_substr_scrub" ->
       s"""WITH tokd AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{L}]+'), x -> x <> '') AS lst
+             ${Tokens.sql("text")} AS lst
            FROM documents),
          toks AS (
            SELECT doc_id, i AS idx, lst[i] AS tok

@@ -516,13 +516,11 @@ object Similarity {
         .join(emb, "doc_id")
       // filter BEFORE the typed flatMap: a predicate above a typed map
       // cannot push through it, so the probe postings would otherwise
-      // re-tokenize the whole corpus to keep 10 docs (review finding;
-      // q148 had this shape from the start)
+      // re-tokenize the whole corpus to keep 10 docs
       def postsOf(docs: DataFrame, idCol: String): DataFrame =
         docs.select(col("doc_id"), col("text")).as[(Long, String)]
           .flatMap { case (id, t) =>
-            graft.functions.TokenizeUdtf.SplitRe.split(t).filter(_.nonEmpty)
-              .distinct.map(w => (id, w)) }
+            Tokens.split(t).distinct.map(w => (id, w)) }
           .toDF(idCol, "tok")
       val posts = postsOf(corpus, "doc_id")
       val pPosts = postsOf(corpus.filter(col("doc_id") < 10), "probe_id")
@@ -563,8 +561,7 @@ object Similarity {
     // rounded score with a doc_id tiebreak, so order is deterministic.
     "q155_bm25_topk" -> ((s, d) => {
       val toks = documents(s, d).select(col("doc_id"),
-        explode(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
-          .as("tok"))
+        explode(Tokens.col(col("text"))).as("tok"))
       val tf = toks.groupBy(col("doc_id"), col("tok"))
         .agg(count(lit(1)).as("tf"))
       val len = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
@@ -606,7 +603,7 @@ object Similarity {
     // 100 TB the plan moves probe hits, never the corpus token stream.
     "q168_phrase_search" -> ((s, d) => {
       val toks = documents(s, d).select(col("doc_id"),
-        filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "").as("ts"))
+        Tokens.col(col("text")).as("ts"))
       // sequence(a, b) descends when b < a, so short docs must be
       // filtered before forming the index range
       val bi = toks.filter(size(col("ts")) >= 2)
@@ -1087,13 +1084,12 @@ object Similarity {
     // same rank-space fusion; 1.0::DOUBLE forces double division (bare
     // 1.0 is DECIMAL in DuckDB, whose division semantics differ)
     "q146_hybrid_rrf" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
            SELECT d.doc_id, d.text, e.embedding
            FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id),
          posts AS (
            SELECT DISTINCT doc_id,
-             unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS tok
+             unnest(${Tokens.sql("text")}) AS tok
            FROM corpus),
          lex_rank AS (
            SELECT probe_id, doc_id,
@@ -1131,10 +1127,9 @@ object Similarity {
          ORDER BY probe_id, rk""",
 
     "q155_bm25_topk" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS tok
+             unnest(${Tokens.sql("text")}) AS tok
            FROM documents),
          tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          len AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
@@ -1186,9 +1181,8 @@ object Similarity {
          ORDER BY l.vec_id""",
 
     "q168_phrase_search" ->
-      ("""WITH tl AS (SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS ts
+      (s"""WITH tl AS (SELECT doc_id,
+             ${Tokens.sql("text")} AS ts
            FROM documents),
          bi AS (SELECT doc_id,
              unnest(list_slice(ts, 1, len(ts) - 1)) AS x,

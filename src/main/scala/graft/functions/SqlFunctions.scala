@@ -80,10 +80,9 @@ object SqlFunctions {
     // row (none exist in the fixtures, but the filter keeps the replay
     // faithful at any corpus)
     "q90_sql_udtf" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents)
          SELECT doc_id, len(t) AS n_tokens,
            t[1] AS first_tok, t[len(t)] AS last_tok

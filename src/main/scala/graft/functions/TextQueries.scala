@@ -17,10 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextQueries {
 
-  /** Tokens column: Unicode-letter runs, case-sensitive, empties dropped —
-    * the reference tokenizer contract (src/mrapps/wc.go:22-26). */
-  private def tokens = filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "")
-
   /** Persisted relations per session UUID (q101's token relation, q106's
     * MG summary), tracked in the session cache, which unpersists them on
     * release. CacheManager
@@ -47,7 +43,7 @@ object TextQueries {
     * scan feeds the group rollup and the rank join. */
   private[graft] def rankedVocab(s: SparkSession, d: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val freq = tracked(documents(s, d).select(explode(tokens).as("tok"))
+    val freq = tracked(documents(s, d).select(explode(Tokens.col(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("n")))
     val g = freq.withColumn("pfx", substring(col("tok"), 1, 2))
       .withColumn("bkt", floor(log2(col("n"))))
@@ -193,7 +189,7 @@ object TextQueries {
     // Token statistics per document: counts + mean token length.
     "q22_token_stats" -> ((s, d) => {
       documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("tok"))
+        .select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok"))
         .groupBy(col("doc_id"))
         .agg(
           count(lit(1)).as("n_tokens"),
@@ -206,7 +202,7 @@ object TextQueries {
     // standard cheap pre-training quality heuristics.
     "q23_quality_score" -> ((s, d) => {
       documents(s, d)
-        .select(col("doc_id"), col("text"), explode(tokens).as("tok"))
+        .select(col("doc_id"), col("text"), explode(Tokens.col(col("text"))).as("tok"))
         .groupBy(col("doc_id"))
         .agg(
           first(length(col("text"))).as("n_chars_actual"),
@@ -256,7 +252,7 @@ object TextQueries {
     // dropped (on this fixture the bound is cleared ~33×).
     "q106_heavy_hitters" -> ((s, d) => {
       import s.implicits._
-      val toks = documents(s, d).select(explode(tokens).as("tok")).as[String]
+      val toks = documents(s, d).select(explode(Tokens.col(col("text"))).as("tok")).as[String]
       exactHeavyHitters(toks, k = 20, cap = 1024)
     }),
 
@@ -275,7 +271,7 @@ object TextQueries {
     // summation ulps.
     "q101_lm_quality" -> ((s, d) => {
       val toks = tracked(
-        documents(s, d).select(col("doc_id"), explode(tokens).as("tok")))
+        documents(s, d).select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok")))
       val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
       val total = vocab.agg(sum(col("cnt")).cast("double").as("t_total"))
       toks.join(vocab, "tok")
@@ -461,12 +457,12 @@ object TextQueries {
     // orders below the 6th decimal.
     "q177_bigram_perplexity" -> ((s, d) => {
       val withTs = documents(s, d)
-        .select(col("doc_id"), tokens.as("ts")).filter(size(col("ts")) >= 2)
+        .select(col("doc_id"), Tokens.col(col("text")).as("ts")).filter(size(col("ts")) >= 2)
       val bi = tracked(withTs.select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ts) - 1)," +
           " i -> struct(ts[i-1] AS w1, ts[i] AS w2))")).as("b"))
         .select(col("doc_id"), col("b.w1"), col("b.w2")))
-      val uni = tracked(documents(s, d).select(explode(tokens).as("w1"))
+      val uni = tracked(documents(s, d).select(explode(Tokens.col(col("text"))).as("w1"))
         .groupBy(col("w1")).agg(count(lit(1)).as("c1")))
       val v = uni.agg(count(lit(1)).cast("double").as("v"))
       val big = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
@@ -497,7 +493,7 @@ object TextQueries {
     "q110_kmv_distinct" -> ((s, d) => {
       import s.implicits._
       val hashes = documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("tok"))
+        .select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok"))
         .select(md5(concat(col("doc_id").cast("string"), lit(":"), col("tok")))
           .as("h")).as[String]
       kmvEstimate(hashes, k = 256)
@@ -520,7 +516,7 @@ object TextQueries {
     "q112_kmv_per_lang" -> ((s, d) => {
       val K = 256
       val hashed = documents(s, d)
-        .select(col("lang"), col("doc_id"), explode(tokens).as("tok"))
+        .select(col("lang"), col("doc_id"), explode(Tokens.col(col("text"))).as("tok"))
         .select(col("lang"),
           md5(concat(col("doc_id").cast("string"), lit(":"), col("tok")))
             .as("h"))
@@ -700,27 +696,26 @@ object TextQueries {
     // the entire difference between an indexed search and a full scan.
     // The pattern is ANCHORED at non-letter boundaries on both ends
     // (consuming groups, not lookaround — RE2 has no lookaround), so its
-    // literals can only ever match as WHOLE tokens under the same
-    // [^\p{L}]+ splitter the posting relation uses: that is what makes
-    // candidate-set ⊇ matches a theorem instead of a fixture accident
-    // (round-11 advisor finding — the unanchored form matched 'xbig dog
-    // scan' as a substring while the token prefilter dropped it).
+    // literals can only ever match as WHOLE tokens under the Tokens rule
+    // the posting relation uses: that is what makes candidate-set ⊇
+    // matches a theorem instead of a fixture accident (an unanchored
+    // form would match 'xbig dog scan' as a substring while the token
+    // prefilter drops it).
     // n_matches counts WHOLE-TOKEN TRIGRAM occurrences from token
-    // positions (round-12 advisor finding: the consuming boundary
-    // groups make regexp_extract_all undercount occurrences that share
-    // a single separator char — 'big a scan big b scan' read as one
-    // match), so the reported count is true occurrences-of-the-phrase
-    // under the tokenizer contract; the anchored regex remains the
-    // VERIFY predicate only (membership, not counting — a doc matches
-    // the regex iff it has ≥1 single-space-separated occurrence). The
-    // oracle replays both the brute-force regex scan and the identical
-    // token-position count; [a-z]+ and \p{L} mean the same in Java
-    // regex and RE2.
+    // positions (the consuming boundary groups make regexp_extract_all
+    // undercount occurrences that share a single separator char — 'big
+    // a scan big b scan' reads as one match), so the reported count is
+    // true occurrences-of-the-phrase under the Tokens rule; the
+    // anchored regex remains the VERIFY predicate only (membership, not
+    // counting — a doc matches the regex iff it has ≥1
+    // single-space-separated occurrence). The oracle replays both the
+    // brute-force regex scan and the identical token-position count;
+    // [a-z]+ and \p{L} mean the same in Java regex and RE2.
     "q204_gram_search" -> ((s, d) => {
       val pat = "(^|[^\\p{L}])big [a-z]+ scan($|[^\\p{L}])"
       val lits = Seq("big", "scan")
       val cands = documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("tok"))
+        .select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok"))
         .filter(col("tok").isin(lits: _*))
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("tok")).as("nlit"))
@@ -744,7 +739,7 @@ object TextQueries {
       documents(s, d).join(marked, "doc_id")
         .filter(when(col("m") === 0, col("text").rlike(pat))
           .otherwise(lit(false)))
-        .withColumn("ts", tokens)
+        .withColumn("ts", Tokens.col(col("text")))
         .select(col("doc_id"),
           expr("CASE WHEN size(ts) >= 3 THEN size(filter(" +
             "sequence(0, size(ts) - 3), j -> ts[j] = 'big' AND " +
@@ -927,7 +922,7 @@ object TextQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
-          val t = graft.functions.TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+          val t = Tokens.split(text)
           val n = t.length
           if (n == 0) (id, 0L, 0.0, 0.0, 0.0, false)
           else {
@@ -975,7 +970,7 @@ object TextQueries {
     "q170_bpe_learn" -> ((s, d) => {
       import s.implicits._
       val words = documents(s, d)
-        .select(explode(tokens).as("tok"))
+        .select(explode(Tokens.col(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("f"))
         .select(trim(regexp_replace(col("tok"), "(.)", "($1) ")).as("ws"),
           col("f"))
@@ -998,8 +993,8 @@ object TextQueries {
         val (l, r) = (best.getAs[String]("l"), best.getAs[String]("r"))
         merges += ((k, l, r, l + r, best.getAs[Long]("cnt")))
         // splicing collected symbols into the expr is safe ONLY because
-        // the [^\p{L}]+ tokenizer guarantees symbols are letters (plus
-        // the parens we add) — no quotes/backslashes can appear; if the
+        // the Tokens rule guarantees symbols are letters (plus the
+        // parens we add) — no quotes/backslashes can appear; if the
         // tokenizer alphabet ever widens, this needs escaping
         cur = cur.withColumn("ws",
           expr(s"replace(ws, '$x $y', '($l$r)')"))
@@ -1028,7 +1023,7 @@ object TextQueries {
     // summation-ulp discipline), and the exact best/worst boundaries.
     "q211_ccnet_buckets" -> ((s, d) => {
       val toks = tracked(
-        documents(s, d).select(col("doc_id"), explode(tokens).as("tok")))
+        documents(s, d).select(col("doc_id"), explode(Tokens.col(col("text"))).as("tok")))
       val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
       val total = vocab.agg(sum(col("cnt")).cast("double").as("t_total"))
       val lm = toks.join(vocab, "tok").crossJoin(total)
@@ -1186,8 +1181,7 @@ object TextQueries {
     import s.implicits._
     documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
-        val t = graft.functions.TokenizeUdtf.SplitRe.split(text)
-          .filter(_.nonEmpty)
+        val t = Tokens.split(text)
         if (t.length < 3) Iterator.empty
         else (0 until t.length - 2).iterator
           .map(i => (id, t(i) + " " + t(i + 1) + " " + t(i + 2)))
@@ -1195,7 +1189,7 @@ object TextQueries {
   }
 
   /** THE CDC boundary rule, shared by q114's stats and [[cdcChunks]]'
-    * cut positions (round-8 judge ask #5 — one arithmetic, no drift):
+    * cut positions (one arithmetic, no drift):
     * the degree-7 rolling hash (base 31, mod 1e9+7) of the 8-code-point
     * window starting at 1-based position p marks a content-defined
     * boundary when h % 64 == 0. Returns EVERY boundary position
@@ -1357,7 +1351,7 @@ object TextQueries {
         val memo = scala.collection.mutable.HashMap.empty[String, Int]
         val memoCap = 1 << 20
         it.map { case (id, text) =>
-          val toks = TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+          val toks = Tokens.split(text)
           var nBpe = 0L
           toks.foreach { t =>
             nBpe += (memo.get(t) match {
@@ -1423,9 +1417,8 @@ object TextQueries {
     raw"""mt(r, pat, rep) AS (SELECT * FROM (VALUES
            $bpeMergeValuesSql) v(r, pat, rep)),
          toks AS (
-           SELECT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
-             FROM documents) t WHERE tok <> ''),
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
+           FROM documents),
          vocab AS (SELECT DISTINCT tok FROM toks),
          enc AS (SELECT tok,
            ' ' || array_to_string(string_split(tok, ''), ' ') || ' ' AS ws
@@ -1482,43 +1475,43 @@ object TextQueries {
 
   val oracles: Map[String, String] = Map(
     "q19_wordcount" ->
-      """SELECT word, count(*) AS n FROM (
-           SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS word
+      s"""SELECT word, count(*) AS n FROM (
+           SELECT unnest(${Tokens.sql("text")}) AS word
            FROM documents) t
-         WHERE word <> '' GROUP BY word ORDER BY word""",
+         GROUP BY word ORDER BY word""",
     "q20_inverted_index" ->
-      """SELECT word, count(*) AS n_docs,
+      s"""SELECT word, count(*) AS n_docs,
          string_agg(doc, ',' ORDER BY doc) AS docs
          FROM (
            SELECT DISTINCT CAST(doc_id AS VARCHAR) AS doc,
-             unnest(string_split_regex(text, '[^\p{L}]+')) AS word
+             unnest(${Tokens.sql("text")}) AS word
            FROM documents) t
-         WHERE word <> '' GROUP BY word ORDER BY word""",
+         GROUP BY word ORDER BY word""",
     "q21_mr_wordcount" ->
-      """SELECT word AS key, CAST(count(*) AS VARCHAR) AS value FROM (
-           SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS word
+      s"""SELECT word AS key, CAST(count(*) AS VARCHAR) AS value FROM (
+           SELECT unnest(${Tokens.sql("text")}) AS word
            FROM documents) t
-         WHERE word <> '' GROUP BY word ORDER BY key""",
+         GROUP BY word ORDER BY key""",
     "q22_token_stats" ->
-      """SELECT doc_id, count(*) AS n_tokens,
+      s"""SELECT doc_id, count(*) AS n_tokens,
          count(DISTINCT tok) AS n_distinct,
          round(avg(length(tok)), 6) AS avg_token_len
          FROM (
-           SELECT doc_id, unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
            FROM documents) t
-         WHERE tok <> '' GROUP BY doc_id ORDER BY doc_id""",
+         GROUP BY doc_id ORDER BY doc_id""",
     "q23_quality_score" ->
-      """SELECT t.doc_id, any_value(length(d.text)) AS n_chars_actual,
+      s"""SELECT t.doc_id, any_value(length(d.text)) AS n_chars_actual,
          count(*) AS n_tokens,
          round(avg(CASE WHEN tok IN ('the','a','of','and','to','in','is','on')
            THEN 1.0 ELSE 0.0 END), 6) AS stopword_ratio,
          round(any_value(1.0 - length(replace(d.text, ' ', ''))
            / CAST(length(d.text) AS DOUBLE)), 6) AS space_ratio
          FROM (
-           SELECT doc_id, unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
            FROM documents) t
          JOIN documents d ON t.doc_id = d.doc_id
-         WHERE tok <> '' GROUP BY t.doc_id ORDER BY t.doc_id""",
+         GROUP BY t.doc_id ORDER BY t.doc_id""",
     "q24_lang_markers" ->
       """SELECT doc_id, lang,
          CASE
@@ -1534,16 +1527,14 @@ object TextQueries {
          count(*) OVER (PARTITION BY md5(text)) AS dup_count
          FROM documents ORDER BY doc_id""",
     "q106_heavy_hitters" ->
-      """SELECT tok, count(*) AS n FROM (
-           SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
+      s"""SELECT tok, count(*) AS n FROM (
+           SELECT unnest(${Tokens.sql("text")}) AS tok
            FROM documents) t
-         WHERE tok <> ''
          GROUP BY tok ORDER BY n DESC, tok LIMIT 20""",
     "q101_lm_quality" ->
-      """WITH tk AS (
-           SELECT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
-             FROM documents) WHERE tok <> ''),
+      s"""WITH tk AS (
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
+           FROM documents),
          vocab AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
          tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t_total FROM vocab)
          SELECT tk.doc_id, count(*) AS n_tokens,
@@ -1557,8 +1548,8 @@ object TextQueries {
       raw"""WITH keys AS (
            SELECT DISTINCT md5(doc_id::VARCHAR || ':' || tok) AS h FROM (
              SELECT doc_id,
-               unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
-             FROM documents) t WHERE tok <> ''),
+               unnest(${Tokens.sql("text")}) AS tok
+             FROM documents) t),
          kmin AS (SELECT h FROM keys ORDER BY h LIMIT 256),
          agg AS (SELECT count(*) AS k_used, max(h) AS kth_hash FROM kmin)
          SELECT k_used, kth_hash,
@@ -1654,8 +1645,8 @@ object TextQueries {
       raw"""WITH pairs AS (
            SELECT DISTINCT lang, md5(doc_id::VARCHAR || ':' || tok) AS h FROM (
              SELECT lang, doc_id,
-               unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
-             FROM documents) t WHERE tok <> ''),
+               unnest(${Tokens.sql("text")}) AS tok
+             FROM documents) t),
          sel AS (
            SELECT lang, h,
              row_number() OVER (PARTITION BY lang ORDER BY h) AS rk
@@ -1674,8 +1665,7 @@ object TextQueries {
     "q195_kmv_set_ops" ->
       raw"""WITH t AS (
            SELECT source,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents
            WHERE source IN ('src0','src1','src2','src3','src4')),
          keys AS (SELECT DISTINCT source, md5(s) AS h FROM (
@@ -1733,8 +1723,7 @@ object TextQueries {
     // buckets, min over the 4 rows, the same probe ranks
     "q196_cms_freq" ->
       raw"""WITH t AS (
-           SELECT list_filter(string_split_regex(text, '[^\p{L}]+'),
-             x -> x <> '') AS toks FROM documents),
+           SELECT ${Tokens.sql("text")} AS toks FROM documents),
          occ AS (SELECT unnest(list_transform(range(len(toks) - 2),
              i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
            FROM t WHERE len(toks) >= 3),
@@ -1835,8 +1824,7 @@ object TextQueries {
     // ranked on the ROUNDED llr with the gram tiebreak
     "q203_gram_drift" ->
       raw"""WITH t AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '[^\p{L}]+'),
-             x -> x <> '') AS toks FROM documents),
+           SELECT doc_id, ${Tokens.sql("text")} AS toks FROM documents),
          occ AS (SELECT doc_id % 2 AS half,
              unnest(list_transform(range(len(toks) - 2),
                i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
@@ -1862,19 +1850,18 @@ object TextQueries {
     // with exactly, counting whole-token trigram occurrences from the
     // same tokenizer positions
     "q204_gram_search" ->
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT doc_id, text,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS ts
+             ${Tokens.sql("text")} AS ts
            FROM documents)
          SELECT doc_id,
            CASE WHEN len(ts) >= 3 THEN len(list_filter(range(len(ts) - 2),
                j -> ts[j+1] = 'big'
-                 AND regexp_matches(ts[j+2], '^[a-z]+$')
+                 AND regexp_matches(ts[j+2], '^[a-z]+$$')
                  AND ts[j+3] = 'scan'))
              ELSE 0 END AS n_matches
          FROM t
-         WHERE regexp_matches(text, '(^|[^\p{L}])big [a-z]+ scan($|[^\p{L}])')
+         WHERE regexp_matches(text, '(^|[^\p{L}])big [a-z]+ scan($$|[^\p{L}])')
          ORDER BY doc_id""",
     // CDC replay: q114's polynomial per window, cuts at h%64=0 (p>1),
     // bounds = 1 + cuts + [n+1], chunk j = chars[bs[j] .. bs[j+1]-1] —
@@ -1942,9 +1929,9 @@ object TextQueries {
     // JOIN back so short docs keep 0-valued ratios, matching the Scala
     // guards.
     "q75_repetition_stats" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          base AS (
            SELECT doc_id, len(t) AS tok_cnt,
@@ -1981,10 +1968,9 @@ object TextQueries {
          ORDER BY b.doc_id""",
 
     "q178_zipf_audit" ->
-      ("""WITH freq AS (
+      (s"""WITH freq AS (
            SELECT tok, count(*) AS n FROM (
-             SELECT unnest(list_filter(
-               string_split_regex(text, '[^\p{L}]+'), x -> x <> '')) AS tok
+             SELECT unnest(${Tokens.sql("text")}) AS tok
              FROM documents)
            GROUP BY tok),
          ranked AS (
@@ -2001,10 +1987,9 @@ object TextQueries {
     // the Spark side uses the distributed rankedVocab rank. Bucket =
     // bit-length(rk)-1 via bin()-string length, exact on both engines.
     "q189_vocab_coverage" ->
-      ("""WITH freq AS (
+      (s"""WITH freq AS (
            SELECT tok, count(*) AS n FROM (
-             SELECT unnest(list_filter(
-               string_split_regex(text, '[^\p{L}]+'), x -> x <> '')) AS tok
+             SELECT unnest(${Tokens.sql("text")}) AS tok
              FROM documents)
            GROUP BY tok),
          ranked AS (
@@ -2046,9 +2031,8 @@ object TextQueries {
          FROM counts CROSS JOIN tot ORDER BY source"""),
 
     "q177_bigram_perplexity" ->
-      ("""WITH tl AS (SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS ts
+      (s"""WITH tl AS (SELECT doc_id,
+             ${Tokens.sql("text")} AS ts
            FROM documents),
          bi AS (SELECT doc_id,
              unnest(list_slice(ts, 1, len(ts) - 1)) AS w1,
@@ -2068,12 +2052,10 @@ object TextQueries {
     // the merged word relation via the identical literal replace().
     "q170_bpe_learn" -> {
       val ctes = scala.collection.mutable.ListBuffer(
-        """w0 AS (
+        raw"""w0 AS (
           SELECT trim(regexp_replace(tok, '(.)', '(\1) ', 'g')) AS ws,
                  count(*) AS f
-          FROM (SELECT unnest(list_filter(
-                  string_split_regex(text, '[^\p{L}]+'),
-                  x -> x <> '')) AS tok FROM documents)
+          FROM (SELECT unnest(${Tokens.sql("text")}) AS tok FROM documents)
           GROUP BY 1)""")
       for (k <- 1 to 6) {
         ctes += s"""p$k AS (
@@ -2103,11 +2085,9 @@ object TextQueries {
     // oracle SF — the q189 precedent): identical (lm DESC, doc_id)
     // total order, identical integer tercile arithmetic
     "q211_ccnet_buckets" ->
-      """WITH tk AS (
-           SELECT doc_id, tok FROM (
-             SELECT doc_id,
-               unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
-             FROM documents) WHERE tok <> ''),
+      s"""WITH tk AS (
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
+           FROM documents),
          vocab AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
          tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t_total FROM vocab),
          lm AS (

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Table-generating function (UDTF) tier of the Catalyst extension story:
-  * the reference tokenizer (Unicode-letter runs, case-sensitive, empties
-  * dropped — src/mrapps/wc.go:22-26) as a native `Generator`, emitting
+  * the [[Tokens]] word rule (the reference tokenizer,
+  * src/mrapps/wc.go:22-26) as a native `Generator`, emitting
   * one (pos, tok) row per token. Registered by name in
   * [[SqlFunctions.register]], so SQL users get the reference's mapf-style
   * 1→N row expansion as `LATERAL VIEW tokenize(text)` — the declarative
@@ -35,22 +35,11 @@ case class TokenizeUdtf(child: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) Iterator.empty
-    else {
-      val toks = TokenizeUdtf.SplitRe.split(v.asInstanceOf[UTF8String].toString)
-      toks.iterator.filter(_.nonEmpty).zipWithIndex.map { case (t, i) =>
-        InternalRow(i, UTF8String.fromString(t))
-      }
-    }
+    else Tokens.split(v.asInstanceOf[UTF8String].toString)
+      .iterator.zipWithIndex.map { case (t, i) =>
+        InternalRow(i, UTF8String.fromString(t)) }
   }
 
   override protected def withNewChildInternal(newChild: Expression): TokenizeUdtf =
     copy(child = newChild)
-}
-
-object TokenizeUdtf {
-  /** The reference tokenizer's split pattern, compiled once —
-    * `String.split(regex)` would recompile per row. Shared by every
-    * typed tokenizing pass in the engine (UDTF, shingles, n-grams,
-    * bigrams, chunking). */
-  private[graft] val SplitRe = java.util.regex.Pattern.compile("[^\\p{L}]+")
 }

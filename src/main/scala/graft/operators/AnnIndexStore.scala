@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.MicroBatch
 import graft.Tables._
-import graft.functions.Similarity
+import graft.functions.{Similarity, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -363,8 +363,7 @@ object AnnIndexStore {
     import s.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        graft.functions.TokenizeUdtf.SplitRe.split(t).filter(_.nonEmpty)
-          .distinct.map(w => (id, w)) }
+        Tokens.split(t).distinct.map(w => (id, w)) }
       .toDF(idCol, "tok")
       .select(col(idCol), substring(md5(col("tok")), 1, 16).as("tk"))
   }
@@ -632,8 +631,7 @@ object AnnIndexStore {
            FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id),
          posts AS (
            SELECT DISTINCT doc_id,
-             substr(md5(unnest(list_filter(
-               string_split_regex(text, '[^\\p{L}]+'), x -> x <> ''))),
+             substr(md5(unnest(${Tokens.sql("text")})),
                1, 16) AS tk
            FROM corpus),
          lex_ranks AS (

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.Tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,10 +17,6 @@ import org.apache.spark.sql.functions._
   * rows sized to the vocabulary or the user population — never raw text.
   */
 object CorpusCleaning {
-
-  /** Unicode-letter tokens, case-sensitive, empties dropped — the shared
-    * reference tokenizer contract (src/mrapps/wc.go:22-26). */
-  private def tokens = filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "")
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
 
@@ -96,8 +93,8 @@ object CorpusCleaning {
         .otherwise("en")
     val stats = documents(s, d).select(
       col("doc_id"), col("source"), col("lang"),
-      size(tokens).as("n_tokens"),
-      size(filter(tokens, x => x.isin(stopwords: _*))).as("n_stop"),
+      Tokens.count(col("text")).as("n_tokens"),
+      size(filter(Tokens.col(col("text")), x => x.isin(stopwords: _*))).as("n_stop"),
       predicted.as("predicted"),
       conv(substring(md5(col("text")), 1, 6), 16, 10).cast("long").as("h6"),
       min(col("doc_id")).over(Window.partitionBy(md5(col("text"))))
@@ -198,7 +195,7 @@ object CorpusCleaning {
       val stride = 24
       documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
         .flatMap { case (id, text) =>
-          val t = graft.functions.TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+          val t = Tokens.split(text)
           val starts = 0 until math.max(t.length, 1) by stride
           starts.iterator.zipWithIndex
             .map { case (st, ci) =>
@@ -218,7 +215,7 @@ object CorpusCleaning {
     // over naive batching. Map-side bucket assignment, one
     // vocabulary-of-buckets-sized aggregation.
     "q92_length_buckets" -> ((s, d) => {
-      val n = size(tokens)
+      val n = Tokens.count(col("text"))
       documents(s, d)
         .select(ceil(n / lit(16.0)).cast("long").as("bucket"), n.as("n_tokens"))
         .groupBy(col("bucket"))
@@ -355,7 +352,7 @@ object CorpusCleaning {
       import s.implicits._
       val pairs = documents(s, d).select(col("text")).as[String]
         .flatMap { text =>
-          val t = graft.functions.TokenizeUdtf.SplitRe.split(text).filter(_.nonEmpty)
+          val t = Tokens.split(text)
           t.indices.iterator.map { i =>
             (t(i), if (i + 1 < t.length) t(i + 1) else null)
           }
@@ -390,7 +387,7 @@ object CorpusCleaning {
     // cost), then a sources×languages rollup. avg() divides an
     // integer-exact sum, so both engines produce the identical double.
     "q144_corpus_datasheet" -> ((s, d) => {
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       documents(s, d)
         .select(col("source"), col("lang"), nTok.as("n_toks"),
           count(lit(1)).over(Window.partitionBy(md5(col("text"))))
@@ -528,7 +525,7 @@ object CorpusCleaning {
     "q213_template_prefixes" -> ((s, d) => {
       val p = graft.Thresholds.TemplatePrefixTokens
       val base = documents(s, d)
-        .select(col("doc_id"), col("source"), tokens.as("toks"))
+        .select(col("doc_id"), col("source"), Tokens.col(col("text")).as("toks"))
         .filter(size(col("toks")) >= p)
         .select(col("doc_id"), col("source"),
           array_join(slice(col("toks"), 1, p), " ").as("prefix"))
@@ -565,8 +562,7 @@ object CorpusCleaning {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, text) =>
-          val t = graft.functions.TokenizeUdtf.SplitRe.split(text)
-            .filter(_.nonEmpty)
+          val t = Tokens.split(text)
           if (t.length < 5) Iterator.empty
           else {
             val (n, mx, nd) = repCounts(t)
@@ -590,7 +586,7 @@ object CorpusCleaning {
     * [[repetitionStatsOf]] and the end-to-end pipeline's combined pass
     * (CurationPipeline) so the repetition arithmetic cannot drift
     * between the standalone gate and the composed run. */
-  private[graft] def repCounts(t: Array[String]): (Int, Int, Int) = {
+  private[graft] def repCounts(t: collection.IndexedSeq[String]): (Int, Int, Int) = {
     val n = t.length
     val bi = new java.util.HashMap[String, Integer](n * 2)
     var mx = 0
@@ -643,8 +639,8 @@ object CorpusCleaning {
         .otherwise("en")
     val base = docs.select(col("doc_id"), col("source"),
       col("lang"), col("text"),
-      size(tokens).as("n_tokens"),
-      size(filter(tokens, x => x.isin(stopwords: _*))).as("n_stop"),
+      Tokens.count(col("text")).as("n_tokens"),
+      size(filter(Tokens.col(col("text")), x => x.isin(stopwords: _*))).as("n_stop"),
       length(regexp_replace(col("text"), "[^\\p{L}]", "")).as("n_letters"),
       predicted.as("predicted"))
     val nt1 = greatest(col("n_tokens"), lit(1)).cast("double")
@@ -680,9 +676,8 @@ object CorpusCleaning {
     val w = Qw.map(_.toString)
     s"""qbase AS (
            SELECT doc_id, source, lang, text,
-             len(list_filter(string_split_regex(text, '[^\\p{L}]+'),
-               x -> x <> '')) AS n_tokens,
-             len(list_filter(string_split_regex(text, '[^\\p{L}]+'),
+             ${Tokens.sqlCount("text")} AS n_tokens,
+             len(list_filter(${Tokens.sql("text")},
                x -> x IN ('the','a','of','and','to','in','is','on')))
                AS n_stop,
              length(regexp_replace(text, '[^\\p{L}]', '', 'g')) AS n_letters,
@@ -717,11 +712,10 @@ object CorpusCleaning {
     * fragment precedent. `verdict` carries (doc_id, source, n_tokens,
     * h6, reason); h6 replays q125's 24-bit content hash. */
   private[graft] val cleanVerdictCtes: String =
-    """stats AS (
+    raw"""stats AS (
            SELECT doc_id, source, lang,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_tokens,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
+             ${Tokens.sqlCount("text")} AS n_tokens,
+             len(list_filter(${Tokens.sql("text")},
                x -> x IN ('the','a','of','and','to','in','is','on'))) AS n_stop,
              CASE
                WHEN contains(' '||text||' ', ' der ') OR contains(' '||text||' ', ' und ')
@@ -839,10 +833,9 @@ object CorpusCleaning {
          WHERE rk <= CASE WHEN lang = 'en' THEN 100 ELSE 50 END
          ORDER BY lang, rk""",
     "q91_token_chunking" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS t
+             ${Tokens.sql("text")} AS t
            FROM documents),
          chunks AS (
            SELECT doc_id,
@@ -856,12 +849,10 @@ object CorpusCleaning {
          WHERE g.ci = 0 OR len(g.c) >= 8
          ORDER BY doc_id, chunk_id""",
     "q92_length_buckets" ->
-      """WITH t AS (
-           SELECT CAST(ceil(len(list_filter(
-               string_split_regex(text, '[^\p{L}]+'), x -> x <> '')) / 16.0)
+      s"""WITH t AS (
+           SELECT CAST(ceil(${Tokens.sqlCount("text")} / 16.0)
              AS BIGINT) AS bucket,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_tokens
+             ${Tokens.sqlCount("text")} AS n_tokens
            FROM documents)
          SELECT bucket, count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
@@ -886,9 +877,8 @@ object CorpusCleaning {
          count(*) AS n_docs
          FROM documents GROUP BY 1, 2 ORDER BY lang, split""",
     "q81_bigram_pmi" ->
-      """WITH toks AS (
-           SELECT list_filter(string_split_regex(text, '[^\p{L}]+'),
-             x -> x <> '') AS t
+      s"""WITH toks AS (
+           SELECT ${Tokens.sql("text")} AS t
            FROM documents),
          uni AS (
            SELECT w, count(*) AS cnt FROM (SELECT unnest(t) AS w FROM toks)
@@ -915,10 +905,9 @@ object CorpusCleaning {
     // same corpus-wide md5 window, same tokenizer, same integer-exact
     // avg (sum of integer token counts divides exactly in double)
     "q144_corpus_datasheet" ->
-      """WITH s AS (
+      s"""WITH s AS (
            SELECT source, lang,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_toks,
+             ${Tokens.sqlCount("text")} AS n_toks,
              count(*) OVER (PARTITION BY md5(text)) AS n_same
            FROM documents)
          SELECT source, lang, count(*) AS n_docs,
@@ -1000,8 +989,7 @@ object CorpusCleaning {
     "q213_template_prefixes" ->
       s"""WITH t AS (
            SELECT doc_id, source,
-             list_filter(string_split_regex(text, '[^\\p{L}]+'),
-               x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          p AS (
            SELECT doc_id, source,
@@ -1022,10 +1010,9 @@ object CorpusCleaning {
     // Relational replay of the run-fold: modal sorted-run length ≡ modal
     // GROUP BY count, distinct runs ≡ COUNT(DISTINCT gram).
     "q210_repetition_filter" ->
-      ("""WITH t AS (
+      (s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          n AS (SELECT doc_id, len(toks) AS n_tokens FROM t
                WHERE len(toks) >= 5),

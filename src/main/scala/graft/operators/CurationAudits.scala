@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.MicroBatch
 import graft.Tables._
+import graft.functions.Tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -129,8 +130,7 @@ object CurationAudits {
       .filter(col("batch_id") < id)
     val latest = store.agg(max(col("batch_id")).as("m"))
     val prev = store.join(latest, col("batch_id") === col("m"))
-    val bc = batch.select(explode(filter(split(col("text"), "[^\\p{L}]+"),
-        x => x =!= "")).as("tok"))
+    val bc = batch.select(explode(Tokens.col(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("bn"))
     val prevTok = prev.filter(col("tok").isNotNull)
       .select(col("tok"), col("cnt").as("pc"))
@@ -497,7 +497,7 @@ object CurationAudits {
   private[graft] def dsirSelect(s: SparkSession, docs: DataFrame): DataFrame = {
     val B = DsirBuckets
     val K = DsirK
-    val ts = filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "")
+    val ts = Tokens.col(col("text"))
     val bi = tracked(docs
       .select(col("doc_id"), col("source"), ts.as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -547,10 +547,10 @@ object CurationAudits {
 
   val oracles: Map[String, String] = Map(
     "q186_ngram_novelty" ->
-      """WITH w AS (SELECT (max(doc_id) + 50) // 50 AS w FROM documents),
+      s"""WITH w AS (SELECT (max(doc_id) + 50) // 50 AS w FROM documents),
          t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -710,9 +710,9 @@ object CurationAudits {
     // bounded single-file replay = ONE micro-batch (id 0) against an
     // empty store: every distinct 16-hex gram key is fresh
     "q190_stream_novelty" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (
@@ -733,9 +733,9 @@ object CurationAudits {
     "q199_stream_heavy_hitters" ->
       raw"""WITH vocab AS (
            SELECT tok, count(*) AS n FROM (
-             SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS tok
+             SELECT unnest(${Tokens.sql("text")}) AS tok
              FROM documents) t
-           WHERE tok <> '' GROUP BY tok),
+           GROUP BY tok),
          r AS (
            SELECT tok, n,
              row_number() OVER (ORDER BY n DESC, tok) AS rk
@@ -752,8 +752,7 @@ object CurationAudits {
                WHERE source = 'src0'),
          rt AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{L}]+'),
-               x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents WHERE source = 'src0'),
          rn AS (SELECT doc_id, len(toks) AS n FROM rt WHERE len(toks) >= 5),
          rbi AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 1),
@@ -795,7 +794,7 @@ object CurationAudits {
     "q243_dsir_select" ->
       s"""WITH tl AS (
            SELECT doc_id, source,
-             list_filter(string_split_regex(text, '[^\\p{L}]+'), x -> x <> '') AS ts
+             ${Tokens.sql("text")} AS ts
            FROM documents),
          bg AS (
            SELECT doc_id, source,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.MicroBatch
 import graft.Tables._
+import graft.functions.Tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,8 +155,7 @@ object CurationPipeline {
       .mapPartitions { it =>
         val g = bg.value
         it.map { case (id, text) =>
-          val t = graft.functions.TokenizeUdtf.SplitRe.split(text)
-            .filter(_.nonEmpty)
+          val t = Tokens.split(text)
           val (n, mx, nd) = CorpusCleaning.repCounts(t)
           var contam = false
           var i = 0
@@ -272,10 +272,9 @@ object CurationPipeline {
     packFrom(epochBaseOf(docs, mult, nShards), budget, homogeneous = false)
 
   /** Per-session memoized TRACKED epoch base at the q223 geometry —
-    * q233 and q235 both pack this one persisted relation (round-14
-    * advisor: each built and persisted its own identical copy, paying
-    * the corpus-sized copies/hash/rendezvous computation and cache
-    * footprint twice in a session running both audits). */
+    * q233 and q235 both pack this one persisted relation, so a session
+    * running both audits pays the corpus-sized copies/hash/rendezvous
+    * computation and cache footprint once. */
   private def sharedEpochBase(s: SparkSession, d: String): DataFrame =
     graft.SessionCache.memo(s, "curation", ("epochBase", d))(
       graft.SessionCache.tracked("curation",
@@ -284,11 +283,11 @@ object CurationPipeline {
 
   /** The policy-independent prefix of the exporter: copies, content
     * hash, rendezvous shard — everything BEFORE the packing window.
-    * Split out (round 14) so the packing-policy comparison (q233) packs
-    * one base relation under both windows. */
+    * Split out so the packing-policy comparison (q233) packs one base
+    * relation under both windows. */
   private[graft] def epochBaseOf(docs: DataFrame, mult: DataFrame,
       nShards: Int): DataFrame = {
-    val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+    val nTok = Tokens.count(col("text"))
     docs
       .join(broadcast(mult), "lang")
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
@@ -307,14 +306,14 @@ object CurationPipeline {
 
   /** [[epochBaseOf]] replicated across an `epochs` relation with the
     * (doc_id, epoch)-keyed coin ([[graft.functions.TextQueries
-    * .epochCopiesExprAt]] — ONE definition shared with q228's schedule,
-    * round-14 advisor: q234 re-implemented it inline) — the common
+    * .epochCopiesExprAt]] — ONE definition shared with q228's
+    * schedule) — the common
     * prefix of the multi-epoch exporters (q234 raw, q238 curated).
     * Copies of one (doc, cp) land on the same rendezvous shard in
     * every epoch (the locality a resumable data loader wants). */
   private[graft] def multiEpochBaseOf(docs: DataFrame, mult: DataFrame,
       epochs: DataFrame, nShards: Int): DataFrame = {
-    val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+    val nTok = Tokens.count(col("text"))
     docs
       .join(broadcast(mult), "lang")
       .crossJoin(broadcast(epochs))
@@ -638,8 +637,7 @@ object CurationPipeline {
             MicroBatch.write(admitted.select(col("doc_id"),
                 CurationAudits.hrwOwnerKeyed(col("doc_id").cast("string"), 8)
                   .cast("long").as("shard"),
-                size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
-                  .cast("long").as("n_tok"),
+                Tokens.count(col("text")).cast("long").as("n_tok"),
                 conv(substring(md5(col("text")), 1, 13), 16, 10)
                   .cast("long").as("h")),
               mdir, id)
@@ -1030,7 +1028,7 @@ object CurationPipeline {
     // everything after the join is scorecard-sized. This is the table
     // that answers "which sources are junk" before anyone re-crawls.
     "q227_curated_datasheet" -> ((s, d) => {
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       val toks = documents(s, d).filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), nTok.as("nt"))
       def cnt(v: String) =
@@ -1062,7 +1060,7 @@ object CurationPipeline {
     // literal cross-joined map-side; one (epoch, lang) rollup.
     "q228_epoch_schedule" -> ((s, d) => {
       import s.implicits._
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       val epochs = Seq(1, 2, 3).toDF("epoch")
       val copies = graft.functions.TextQueries.epochCopiesExprAt(col("epoch"))
       documents(s, d)
@@ -1118,7 +1116,7 @@ object CurationPipeline {
     // unused seq_id window out of this plan: the audit is the broadcast
     // join + explode + one lang rollup.
     "q224_epoch_mix_audit" -> ((s, d) => {
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       val epoch = epochPacked(s, d, nShards = 8, budget = 512L)
         .groupBy(col("lang"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -1454,7 +1452,7 @@ object CurationPipeline {
         .orderBy(col("policy"))
     }),
 
-    // MULTI-EPOCH EXPORT (round-13 judge task #7) — q228 schedules,
+    // MULTI-EPOCH EXPORT — q228 schedules,
     // q223 exports; this composes them: epochs 1..3 written under ONE
     // Hive-partitioned manifest (epoch/shard), each epoch's copies
     // drawn by the (doc_id, epoch)-keyed coin so epochs differ, and the
@@ -1469,7 +1467,7 @@ object CurationPipeline {
       import s.implicits._
       val dir = graft.Tables.scratchDir(s,
         "q234_epochs_" + graft.Tables.datasetTag(d))
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       val epochs = Seq(1L, 2L, 3L).toDF("epoch")
       val mult = graft.functions.TextQueries.epochMultipliers(s, d)
       val packed = packMultiEpoch(
@@ -1572,7 +1570,7 @@ object CurationPipeline {
       import s.implicits._
       val dir = graft.Tables.scratchDir(s,
         "q238_epochs_" + graft.Tables.datasetTag(d))
-      val nTok = size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
+      val nTok = Tokens.count(col("text"))
       val keeps = provenance(s, d).filter(col("verdict") === "keep")
         .select(col("doc_id"))
       val docs = documents(s, d).join(keeps, "doc_id")
@@ -1759,8 +1757,7 @@ object CurationPipeline {
              FROM hh) WHERE rk = 1),
          pk AS (
            SELECT o.shard, r.doc_id, r.cp, r.lang, r.source,
-             len(list_filter(string_split_regex(r.text, '[^\\p{L}]+'),
-               x -> x <> '')) AS n_tok,
+             ${Tokens.sqlCount("r.text")} AS n_tok,
              md5(r.text || ':' || r.cp::VARCHAR) AS ch
            FROM rep r JOIN own o ON r.doc_id = o.doc_id AND r.cp = o.cp),
          packed AS (
@@ -1991,8 +1988,7 @@ object CurationPipeline {
            FROM admu a, range(8) r(i)) WHERE rk = 1),
          bd AS MATERIALIZED (
            SELECT a.batch_id, CAST(h.shard AS BIGINT) AS shard,
-             len(list_filter(string_split_regex(a.text, '[^\\p{L}]+'),
-               x -> x <> '')) AS n_tok,
+             ${Tokens.sqlCount("a.text")} AS n_tok,
              list_reduce(list_prepend(0::BIGINT,
                [strpos('0123456789abcdef', c)::BIGINT - 1
                 for c in string_split(substr(md5(a.text), 1, 13), '')]),
@@ -2299,8 +2295,7 @@ object CurationPipeline {
       s"""WITH RECURSIVE $provenanceCtes,
          ktoks AS (
            SELECT doc_id,
-             len(list_filter(string_split_regex(text, '[^\\p{L}]+'),
-               x -> x <> '')) AS nt
+             ${Tokens.sqlCount("text")} AS nt
            FROM documents WHERE doc_id % 5 <> 0)
          SELECT v.source, v.lang, count(*) AS n_raw,
            CAST(sum(CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END)
@@ -2329,8 +2324,7 @@ object CurationPipeline {
          es AS (SELECT unnest([1, 2, 3]) AS epoch),
          c AS (
            SELECT e.epoch, d.lang, mu.multiplier,
-             len(list_filter(string_split_regex(d.text, '[^\\p{L}]+'),
-               x -> x <> '')) AS nt,
+             ${Tokens.sqlCount("d.text")} AS nt,
              CAST(floor(mu.multiplier) AS BIGINT)
                + CASE WHEN list_reduce(list_prepend(0::BIGINT,
                    [strpos('0123456789abcdef', ch)::BIGINT - 1
@@ -2369,8 +2363,7 @@ object CurationPipeline {
            FROM packed GROUP BY lang),
          bt AS (
            SELECT lang,
-             CAST(sum(len(list_filter(string_split_regex(text,
-               '[^\\p{L}]+'), x -> x <> ''))) AS BIGINT) AS base_tokens
+             CAST(sum(${Tokens.sqlCount("text")}) AS BIGINT) AS base_tokens
            FROM documents GROUP BY lang)
          SELECT e.lang, e.n_docs, e.n_copies, e.n_tokens, b.base_tokens,
            mu.multiplier,
@@ -2558,8 +2551,7 @@ object CurationPipeline {
              FROM ehh) WHERE rk = 1),
          epk AS (
            SELECT r.epoch, o.shard, r.doc_id, r.cp, r.lang,
-             len(list_filter(string_split_regex(r.text, '[^\\p{L}]+'),
-               x -> x <> '')) AS n_tok,
+             ${Tokens.sqlCount("r.text")} AS n_tok,
              md5(r.text || ':' || r.cp::VARCHAR) AS ch
            FROM erep r JOIN eown o ON r.doc_id = o.doc_id AND r.cp = o.cp),
          epacked AS (
@@ -2571,8 +2563,7 @@ object CurationPipeline {
            FROM epk),
          bt AS (
            SELECT lang,
-             CAST(sum(len(list_filter(string_split_regex(text,
-               '[^\\p{L}]+'), x -> x <> ''))) AS BIGINT) AS base_tokens
+             CAST(sum(${Tokens.sqlCount("text")}) AS BIGINT) AS base_tokens
            FROM $rel GROUP BY lang)"""
 
   /** The manifest rollups + per-epoch mass bound over `epacked`/`bt`/

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.Tokens
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -98,8 +99,7 @@ object GraphOps {
       val adj = documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .flatMap { case (_, t) =>
-          val ts = graft.functions.TokenizeUdtf.SplitRe.split(t)
-            .filter(_.nonEmpty)
+          val ts = Tokens.split(t)
           (0 until ts.length - 1).iterator
             .map { i =>
               val (a, b) = (ts(i), ts(i + 1))
@@ -554,9 +554,8 @@ object GraphOps {
          FROM tri""",
 
     "q159_textrank" ->
-      ("""WITH tl AS (SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '') AS ts
+      (s"""WITH tl AS (SELECT doc_id,
+             ${Tokens.sql("text")} AS ts
            FROM documents),
          pz AS (SELECT doc_id,
              unnest(list_slice(ts, 1, len(ts) - 1)) AS x,

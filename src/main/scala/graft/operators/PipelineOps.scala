@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.MicroBatch
 import graft.Tables._
-import graft.functions.Kmv
+import graft.functions.{Kmv, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -122,8 +122,7 @@ object PipelineOps {
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
       documents(s, d)
         .select(col("doc_id"),
-          size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
-            .as("n_tokens"))
+          Tokens.count(col("text")).as("n_tokens"))
         .withColumn("shard", pmod(col("doc_id"), lit(shards)))
         .withColumn("prev_tokens", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
         .select(col("doc_id"), col("n_tokens"), col("shard"),
@@ -166,8 +165,7 @@ object PipelineOps {
         .otherwise("test")
       documents(s, d)
         .select(col("source"), fold.as("fold"), col("text"),
-          size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
-            .as("n_toks"))
+          Tokens.count(col("text")).as("n_toks"))
         .groupBy(col("source"), col("fold"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(md5(col("text"))).as("n_uniq_texts"),
@@ -292,7 +290,7 @@ object PipelineOps {
       val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
       val toks = docs
         .select(col("doc_id"),
-          explode(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= "")).as("tok"))
+          explode(Tokens.col(col("text"))).as("tok"))
       val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
       val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val w = org.apache.spark.sql.expressions.Window
@@ -1231,10 +1229,9 @@ object PipelineOps {
              AND d.n_dup_docs * 5 < c.n_delta_docs) AS INT) AS admit
          FROM contracts c, psi p, dups d""",
     "q60_token_packing" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_tokens,
+             ${Tokens.sqlCount("text")} AS n_tokens,
              doc_id % 32 AS shard
            FROM documents),
          c AS (
@@ -1253,14 +1250,13 @@ object PipelineOps {
 
     // same 16-bit hex fold (the q125 technique), same mod-10 fold rule
     "q140_stratified_split" ->
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT source, text,
              list_reduce(list_prepend(0::BIGINT,
                [strpos('0123456789abcdef', c)::BIGINT - 1
                 for c in string_split(substr(md5(text), 1, 4), '')]),
                (a, x) -> a * 16 + x) % 10 AS h4,
-             len(list_filter(string_split_regex(text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_toks
+             ${Tokens.sqlCount("text")} AS n_toks
            FROM documents)
          SELECT source,
            CASE WHEN h4 < 8 THEN 'train' WHEN h4 = 8 THEN 'val'
@@ -1360,9 +1356,8 @@ object PipelineOps {
          WHERE levenshtein(a.p_name, b.p_name) <= 3
          ORDER BY name_a, name_b""",
     "q62_tfidf_top_terms" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(list_filter(
-             string_split_regex(text, '[^\p{L}]+'), x -> x <> '')) AS tok
+      s"""WITH toks AS (
+           SELECT doc_id, unnest(${Tokens.sql("text")}) AS tok
            FROM documents),
          tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          df AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),

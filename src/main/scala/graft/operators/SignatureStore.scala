@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.MicroBatch
 import graft.Tables._
-import graft.functions.Dedup
+import graft.functions.{Dedup, Tokens}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -319,9 +319,9 @@ object SignatureStore {
   /** The q127 pair CTE block (delta × non-delta exact shingle Jaccard);
     * q129 shares q127's full oracle, q130 derives the admitted set. */
   private val deltaPairCtes: String =
-    """t AS (
+    s"""t AS (
          SELECT doc_id,
-           list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+           ${Tokens.sql("text")} AS toks
          FROM documents),
        sh AS (
          SELECT DISTINCT doc_id, s FROM (
@@ -371,9 +371,9 @@ object SignatureStore {
     // vs the keepset — compaction cannot change values, so the oracle
     // never models it.
     "q133_store_compact_admit" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> x <> '') AS toks
+             ${Tokens.sql("text")} AS toks
            FROM documents),
          sh AS (
            SELECT DISTINCT doc_id, s FROM (

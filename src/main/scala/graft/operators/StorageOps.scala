@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.Tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -309,8 +310,7 @@ object StorageOps {
       .rowsBetween(Window.unboundedPreceding, -1)
     documents(s, d)
       .select(col("doc_id"), col("source"),
-        size(filter(split(col("text"), "[^\\p{L}]+"), x => x =!= ""))
-          .as("n_tok"),
+        Tokens.count(col("text")).as("n_tok"),
         md5(col("text")).as("h"),
         CurationAudits.hrwOwner(nShards).cast("long").as("shard"))
       .withColumn("prev", coalesce(sum(col("n_tok")).over(w), lit(0L)))
@@ -403,7 +403,7 @@ object StorageOps {
     // rollup — end to end, so the written shards are only correct if
     // every stage is.
     "q209_export_shards" ->
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT doc_id, r.i AS s,
              md5(doc_id::VARCHAR || ':' || r.i::VARCHAR) AS hh
            FROM documents, range(8) r(i)),
@@ -414,8 +414,7 @@ object StorageOps {
              FROM h) WHERE rk = 1),
          docs AS (
            SELECT d.doc_id, d.source, o.shard,
-             len(list_filter(string_split_regex(d.text, '[^\p{L}]+'),
-               x -> x <> '')) AS n_tok,
+             ${Tokens.sqlCount("d.text")} AS n_tok,
              md5(d.text) AS ch
            FROM documents d JOIN own o USING (doc_id)),
          packed AS (

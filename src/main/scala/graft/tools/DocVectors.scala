@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.functions.Tokens
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Document-derived embedding fixture builder (round-16 verdict task #7):
+/** Document-derived embedding fixture builder:
   * every recall leg to date measured the NN-descent dial on PLANTED
   * synthetic vectors; this main derives a vector per actual document —
   * the q101/q177 LM-machinery shape: hashed-BIGRAM log-count profiles
@@ -40,8 +41,7 @@ object DocVectors {
     // corpus scan, one (doc_id, bucket)-keyed partial aggregate — the
     // q81/q177 bigram discipline, profile-sized output
     val toks = docs.select(col("doc_id"), col("source"),
-      filter(split(lower(col("text")), "[^\\p{L}]+"), t => t =!= "")
-        .as("toks"))
+      Tokens.col(lower(col("text"))).as("toks"))
     val grams = toks.select(col("doc_id"), col("source"),
         explode(zip_with(col("toks"),
           slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),

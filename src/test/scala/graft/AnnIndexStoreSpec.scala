@@ -163,8 +163,8 @@ class AnnIndexStoreSpec extends TestSpark {
     val texts = Tables.documents(spark, sf0001)
       .join(emb.select(col("vec_id").as("doc_id")), "doc_id")
       .select(col("doc_id"), col("text")).collect()
-      .map(r => r.getLong(0) -> graft.functions.TokenizeUdtf.SplitRe
-        .split(r.getString(1)).filter(_.nonEmpty).toSet).toMap
+      .map(r => r.getLong(0) -> graft.functions.Tokens
+        .split(r.getString(1)).toSet).toMap
     val lexSet = (for {
       p <- texts.keys.filter(_ < 10); c <- texts.keys
       if c != p && (texts(p) & texts(c)).nonEmpty

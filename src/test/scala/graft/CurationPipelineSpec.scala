@@ -924,10 +924,8 @@ class CurationPipelineSpec extends TestSpark {
       .orderBy(col("score").desc).select(col("doc_id")).first().getLong(0)
     val src = excluded.find(_._1 == bestEx).get
     val benchToks = fixture.find(d => d._1 % 5 == 0 &&
-      graft.functions.TokenizeUdtf.SplitRe.split(d._4)
-        .count(_.nonEmpty) >= 8).get
-    val gram8 = graft.functions.TokenizeUdtf.SplitRe.split(benchToks._4)
-      .filter(_.nonEmpty).take(8).mkString(" ")
+      graft.functions.Tokens.split(d._4).length >= 8).get
+    val gram8 = graft.functions.Tokens.split(benchToks._4).take(8).mkString(" ")
     // a clean keeper to copy for the cluster stage: a doc q221 itself
     // verdicts 'keep' at fixture thresholds passes every gate here too
     // (the production repetition cut is strictly looser), and having
@@ -1013,8 +1011,7 @@ class CurationPipelineSpec extends TestSpark {
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .filter(r => verdictOf.get(r.getLong(0)).contains("keep"))
       .filter(r => r.getString(1) == "en" &&
-        graft.functions.TokenizeUdtf.SplitRe.split(r.getString(2))
-          .count(_.nonEmpty) >= 80)
+        graft.functions.Tokens.split(r.getString(2)).length >= 80)
       .map(_.getString(2)).distinct
     assert(keepTexts.length >= 8,
       s"need 8 long fixture keeps, got ${keepTexts.length}")
@@ -1117,8 +1114,7 @@ class CurationPipelineSpec extends TestSpark {
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .filter(r => verdictOf.get(r.getLong(0)).contains("keep"))
       .filter(r => r.getString(1) == "en" &&
-        graft.functions.TokenizeUdtf.SplitRe.split(r.getString(2))
-          .count(_.nonEmpty) >= 80)
+        graft.functions.Tokens.split(r.getString(2)).length >= 80)
       .map(_.getString(2)).distinct
     assert(keepTexts.length >= 4, s"need 4 long fixture keeps, got ${keepTexts.length}")
     val Seq(t1, t2, ta, tb) = keepTexts.take(4).toSeq

@@ -672,8 +672,7 @@ class DedupSimilaritySpec extends TestSpark {
     val toks = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        functions.TokenizeUdtf.SplitRe.split(t).filter(_.nonEmpty)
-          .distinct.map(w => (id, w)) }
+        functions.Tokens.split(t).distinct.map(w => (id, w)) }
       .toDF("doc_id", "tok")
     val overlapTop = toks.join(
         toks.filter(col("doc_id") < 10)

@@ -109,8 +109,7 @@ class GraphOpsSpec extends TestSpark {
     assert(prs.forall(_ > 0) && prs.zip(prs.tail).forall { case (a, b) => a >= b },
       "ranks must be positive and non-increasing")
     val vocab = Tables.documents(spark, sf0001).collect()
-      .flatMap(r => functions.TokenizeUdtf.SplitRe.split(r.getAs[String]("text")))
-      .filter(_.nonEmpty).toSet
+      .flatMap(r => functions.Tokens.split(r.getAs[String]("text"))).toSet
     assert(rows.forall(r => vocab.contains(r.getAs[String]("word"))),
       "every keyword must come from the corpus vocabulary")
   }

@@ -7,8 +7,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import graft.apps.RefApps
 import graft.core.{KeyValue, MRApp, MapReduceJob, SequentialOracle}
+import graft.functions.{SqlFunctions, Tokens}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.col
 
 /** The test-mr.sh golden diff (reference: src/main/test-mr.sh:66-129) on a
   * corpus the suite writes itself: a seeded multi-file text with
@@ -96,6 +98,7 @@ class LocalCorpusParitySpec extends TestSpark {
 
   test("tokenize equals the regex split it replaced") {
     def regexSplit(s: String): Seq[String] = s.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)
+    def hex(s: String): String = s.map(c => f"\\u${c.toInt}%04x").mkString
     val cases = Seq(
       "𝐀", "a𝐀b c", "𠀀𠀁", // U+1D400, U+20000, U+20001
       "e\u0301te", "\u0301", "x\u0301", // combining acute accent U+0301
@@ -104,13 +107,28 @@ class LocalCorpusParitySpec extends TestSpark {
       "abc123def", "snake_case_word", "42", "_",
       "", " ", ",.;:!? \t\n-_0", "word", "  leading and trailing  ",
       "αβγ-кир Latin")
-    for (s <- cases) assert(RefApps.tokenize(s) == regexSplit(s), s.map(c => f"\\u${c.toInt}%04x").mkString)
     // single UTF-16 units, so random strings also split surrogate pairs
     val alphabet = "aZ e\u0301\u03b1\u043a_9,𝐀𠀀\n".toVector
     val rnd = new scala.util.Random(7)
-    for (_ <- 1 to 2000) {
-      val s = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))).mkString
-      assert(RefApps.tokenize(s) == regexSplit(s), s.map(c => f"\\u${c.toInt}%04x").mkString)
+    val inputs = cases ++ Seq.fill(2000)(
+      Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    for (s <- inputs) assert(Tokens.split(s) == regexSplit(s), hex(s))
+
+    // the Spark form and the tokenize UDTF over the same inputs; Spark
+    // stores an unpaired surrogate as '?', a separator like the surrogate
+    import spark.implicits._
+    val df = inputs.zipWithIndex.toDF("s", "i")
+    val viaCol = df.select(col("i"), Tokens.col(col("s")))
+      .as[(Int, Seq[String])].collect().toMap
+    SqlFunctions.register(spark)
+    df.createOrReplaceTempView("tokenize_parity_t")
+    val viaUdtf = spark.sql(
+      "SELECT i, pos, tok FROM tokenize_parity_t LATERAL VIEW tokenize(s) t AS pos, tok")
+      .as[(Int, Int, String)].collect().groupBy(_._1)
+      .map { case (i, rs) => i -> rs.sortBy(_._2).map(_._3).toSeq }
+    for ((s, i) <- inputs.zipWithIndex) {
+      assert(viaCol(i) == regexSplit(s), s"Tokens.col ${hex(s)}")
+      assert(viaUdtf.getOrElse(i, Seq.empty) == regexSplit(s), s"tokenize UDTF ${hex(s)}")
     }
   }
 }

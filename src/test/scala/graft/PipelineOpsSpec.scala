@@ -527,8 +527,7 @@ class PipelineOpsSpec extends TestSpark {
       .select("text").collect().map(_.getString(0))
     val counts = scala.collection.mutable.Map.empty[String, Long]
     texts.foreach { t =>
-      val tk = graft.functions.TokenizeUdtf.SplitRe.split(t)
-        .filter(_.nonEmpty)
+      val tk = graft.functions.Tokens.split(t)
       (0 until math.max(0, tk.length - 2)).foreach { i =>
         val g = tk(i) + " " + tk(i + 1) + " " + tk(i + 2)
         counts(g) = counts.getOrElse(g, 0L) + 1L
